@@ -114,8 +114,7 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
 
 
 def list_names(spark: SparkSession, base: str) -> list[str]:
-    """Child entry names of ``base`` (empty if absent) — the pattern
-    previously inlined as streaming's ``_list_state_dirs``."""
+    """Child entry names of ``base`` (empty if absent)."""
     _, fs, hbase = _fs(spark, base)
     if not fs.exists(hbase):
         return []

@@ -44,6 +44,21 @@ from pyspark.sql import DataFrame, SparkSession
 from cogie_spark.io import fsio
 
 
+def read_json(spark: SparkSession, path: str) -> dict | None:
+    """A JSON control file (state or snapshot manifest), or None if absent."""
+    txt = fsio.read_text(spark, path)
+    return None if txt is None else json.loads(txt)
+
+
+def publish_json(spark: SparkSession, path: str, obj: dict) -> None:
+    """Publish a JSON control file — the commit point of every manifest
+    (streaming state, corpus stream, CheckpointManager snapshots).
+    write-temp + rename through the Hadoop FS API: atomic replace on
+    local/HDFS, single-writer last-writer-wins on S3-like stores (the
+    per-FS contract is documented on fsio.write_text_atomic)."""
+    fsio.write_text_atomic(spark, path, json.dumps(obj, indent=1))
+
+
 def _init_base(spark: SparkSession, base: str):
     """Scheme-aware base handling: a URI base (``hdfs://``, ``s3a://``)
     stays a STRING (pathlib corrupts the scheme's double slash) and is
@@ -142,17 +157,10 @@ class CheckpointManager:
         return self.path(stage, "_manifest.json")
 
     def _read_manifest(self, stage: str) -> dict:
-        txt = fsio.read_text(self.spark, self._manifest_path(stage))
-        if txt is None:
-            return {"commits": []}
-        return json.loads(txt)
+        return read_json(self.spark, self._manifest_path(stage)) or {"commits": []}
 
     def _publish(self, stage: str, manifest: dict) -> None:
-        # write-temp + rename through the Hadoop FS API — see
-        # fsio.write_text_atomic for the per-FS atomicity contract
-        fsio.write_text_atomic(
-            self.spark, self._manifest_path(stage), json.dumps(manifest, indent=1)
-        )
+        publish_json(self.spark, self._manifest_path(stage), manifest)
 
     # --------------------------------------------------------------- commits
     def commit(

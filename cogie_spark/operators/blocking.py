@@ -5,18 +5,18 @@ Spark-first replacement for the reference's FAISS ANN retrieval stage
 index search /root/reference/cogie/models/el/blink.py:157-162). The role
 is identical — sub-linear candidate generation that bounds the pair count
 before the expensive scorer — but the mechanism is LSH banding expressed
-as explode + equi-join so Catalyst/AQE handle the physics.
+as explode + hash aggregation so Catalyst/AQE handle the physics.
 
 Scale design (the part that must survive 10^12 files):
 - Composite block key = (lang, band_id, band_hash): lang pre-partitions
   the space; band_hash is the MinHash band collision.
-- Pair generation is a self-join on the block key. Its cost is
-  sum(block_size^2), so skew is THE failure mode: boilerplate files
-  (license headers, empty files) form mega-blocks. Two-tier guardrail
-  (candidate_pairs): hot blocks are SALTED per band (bounded join
-  tasks, band multiplicity recovers the pairs), pathological blocks
-  are dropped AND returned for logging (never silent — SURVEY.md §2).
-  AQE skew-join handles residual imbalance below the cap.
+- Pair generation collects each block's sorted ids and emits its i<j
+  pairs. Its cost is sum(block_size^2), so skew is THE failure mode:
+  boilerplate files (license headers, empty files) form mega-blocks.
+  Two-tier guardrail (candidate_pairs): hot blocks are SALTED per band
+  (bounded buckets, band multiplicity recovers the pairs), pathological
+  blocks are dropped AND returned for logging (never silent — SURVEY.md
+  §2).
 - Pairs are deduped across bands with a groupBy on (left,right) — the
   map-side partial aggregation makes this cheap.
 """
@@ -145,38 +145,12 @@ def estimate_jaccard(sig_a: F.Column, sig_b: F.Column, num_perm: int) -> F.Colum
     return total / F.lit(float(num_perm))
 
 
-def with_blocks(
-    df: DataFrame,
-    id_col: str = "file_id",
-    content_col: str = "content",
-    key_cols: tuple[str, ...] = ("lang",),
-    num_perm: int = 32,
-    bands: int = 16,
-    shingle_k: int = 8,
-) -> DataFrame:
-    """Explode each row into its LSH block memberships.
-
-    Output: (id, *key_cols, band_id, band_hash) — one row per band.
-    All hashing is built-in-expression (functions/hashing.py), so the
-    whole stage is whole-stage-codegen'd JVM work; no Python runs here.
-    """
-    rows_per_band = num_perm // bands
-    sigs = signature_table(
-        df, id_col=id_col, content_col=content_col, key_cols=key_cols,
-        num_perm=num_perm, shingle_k=shingle_k,
-    )
-    return bands_from_signatures(
-        sigs, id_col=id_col, key_cols=key_cols, bands=bands, rows_per_band=rows_per_band
-    )
-
-
 def candidate_pairs(
     blocks: DataFrame,
     id_col: str = "file_id",
     key_cols: tuple[str, ...] = ("lang",),
     max_block_size: int = 64,
     salvage_factor: int = 32,
-    pair_mode: str = "agg",
     release_into: list | None = None,
     stats_into: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -278,55 +252,33 @@ def candidate_pairs(
             .drop("_nsalt", "block_size")
         )
 
-    if pair_mode == "agg":
-        # pair generation: aggregate each (block, salt) bucket into a
-        # sorted id array, then emit the i<j pairs with posexplode +
-        # slice. This replaces the equi self-join (pair_mode='join'),
-        # whose sort-merge plan was measured WALL-FLAT from 8 to 32
-        # cores — the stage cost was the two full sorts of the biggest
-        # relation in the pipeline, not the pair emission. The hash
-        # aggregate needs no sort (session.py raises the
-        # ObjectHashAggregate sort-fallback threshold so it STAYS
-        # hash-based), partially combines map-side, and the generate
-        # emits exactly s(s-1)/2 rows per bucket instead of the join's
-        # s^2-then-filter. Array sizes are HARD BOUNDED before this
-        # point: buckets are <= ~max_block_size by the salting tier
-        # above (pathological blocks were dropped), so no collect_list
-        # buffer can blow up on a boilerplate mega-block.
-        grouped = salted.groupBy(*key, "salt").agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("_ids")
-        )
-        pairs = (
-            grouped.filter(F.size("_ids") >= 2)
-            .select(*key_cols, F.posexplode("_ids").alias("_i", "left_id"), "_ids")
-            .select(
-                *key_cols,
-                "left_id",
-                F.explode(
-                    F.slice("_ids", F.col("_i") + 2, F.size("_ids") - F.col("_i") - 1)
-                ).alias("right_id"),
-            )
-            # dedup across bands: map-side combine makes this a cheap agg
-            .groupBy("left_id", "right_id", *key_cols)
-            .agg(F.count("*").alias("n_shared_bands"))
-        )
-        return pairs, dropped
-
-    # pair_mode='join': the equi self-join form, kept for A/B
-    # measurement and as the fallback if a corpus defeats the agg form
-    join_key = [*key, "salt"]
-    a = salted.alias("a")
-    b = salted.alias("b")
-    join_cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    for k in join_key:
-        join_cond = join_cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    # pair generation: aggregate each (block, salt) bucket into a
+    # sorted id array, then emit the i<j pairs with posexplode + slice.
+    # This replaced an equi self-join on the block key, whose
+    # sort-merge plan was measured WALL-FLAT from 8 to 32 cores — the
+    # stage cost was the two full sorts of the biggest relation in the
+    # pipeline, not the pair emission. The hash aggregate needs no sort
+    # (session.py raises the ObjectHashAggregate sort-fallback
+    # threshold so it STAYS hash-based), partially combines map-side,
+    # and the generate emits exactly s(s-1)/2 rows per bucket instead
+    # of the join's s^2-then-filter. Array sizes are HARD BOUNDED
+    # before this point: buckets are <= ~max_block_size by the salting
+    # tier above (pathological blocks were dropped), so no collect_list
+    # buffer can blow up on a boilerplate mega-block.
+    grouped = salted.groupBy(*key, "salt").agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("_ids")
+    )
     pairs = (
-        a.join(b, join_cond)
+        grouped.filter(F.size("_ids") >= 2)
+        .select(*key_cols, F.posexplode("_ids").alias("_i", "left_id"), "_ids")
         .select(
-            F.col(f"a.{id_col}").alias("left_id"),
-            F.col(f"b.{id_col}").alias("right_id"),
-            *[F.col(f"a.{k}").alias(k) for k in key_cols],
+            *key_cols,
+            "left_id",
+            F.explode(
+                F.slice("_ids", F.col("_i") + 2, F.size("_ids") - F.col("_i") - 1)
+            ).alias("right_id"),
         )
+        # dedup across bands: map-side combine makes this a cheap agg
         .groupBy("left_id", "right_id", *key_cols)
         .agg(F.count("*").alias("n_shared_bands"))
     )

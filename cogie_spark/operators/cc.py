@@ -76,7 +76,7 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     df.unpersist()
 
 
-class _CheckpointHandle:
+class CheckpointHandle:
     """Duck-typed cache handle for release lists: callers uniformly
     call .unpersist() on collected frames; for a localCheckpoint that
     must route through :func:`_release_local_checkpoint`."""
@@ -229,7 +229,7 @@ def connected_components(
             n_edges = cur.count()
         if n_edges <= local_max_edges:
             if release_into is not None:
-                release_into.append(_CheckpointHandle(cur))
+                release_into.append(CheckpointHandle(cur))
             return _components_single_task(cur)
 
     # `owned` is the live localCheckpoint backing `cur` (None when cur
@@ -308,7 +308,7 @@ def connected_components(
     # release; with no release_into it stays session-lifetime (the
     # one-shot batch-job behavior of rounds 1-4)
     if release_into is not None and owned is not None:
-        release_into.append(_CheckpointHandle(owned))
+        release_into.append(CheckpointHandle(owned))
 
     # converged: every node points at its component minimum
     labels = cur.groupBy("src").agg(F.min("dst").alias("cluster_id")).select(

@@ -26,23 +26,17 @@ from cogie_spark.functions.similarity import (
     tfidf_cosine_udf,
     token_set_ratio_native,
 )
-from cogie_spark.functions.text import normalize_text, tokens
+from cogie_spark.functions.text import tokens
 
 
 def corpus_idf(
     files: DataFrame,
     content_col: str = "content",
     max_terms: int = 100_000,
-    n_docs: int | None = None,
 ) -> dict[str, float]:
     """token -> log(N/df) over the corpus, capped at the ``max_terms``
     most-frequent terms (the cap bounds the broadcast at 10^12-file
     scale; tokens outside the cap default to weight 1.0 inside the UDF).
-
-    ``n_docs``: pass the corpus row count when the caller already knows
-    it (run_linkage recovers it from the blocking size-precheck
-    aggregate) — skips this function's own count() job, leaving ONE
-    action (the bounded vocab collect).
 
     This is the deterministic stand-in for the reference's precomputed
     candidate encodings (/root/reference/cogie/models/el/biencoder.py:
@@ -52,20 +46,18 @@ def corpus_idf(
 
     from cogie_spark.jobdesc import job_desc
 
-    if n_docs is None:
-        with job_desc(files, "cogie:idf-ndocs"):
-            n_docs = files.count()
-    n_docs = n_docs or 1
+    with job_desc(files, "cogie:idf-ndocs"):
+        n_rows = files.count() or 1
     # IDF is a corpus statistic — estimate it from a deterministic hash
     # sample once the corpus is large (identical idf distribution, ~10x
     # less explode/sort work and a bounded driver collect)
     target_sample = 30_000
     src = files
-    denom = n_docs
-    if n_docs > target_sample:
-        k = max(2, n_docs // target_sample)
+    denom = n_rows
+    if n_rows > target_sample:
+        k = max(2, n_rows // target_sample)
         src = files.filter(F.pmod(F.xxhash64(F.col(content_col)), F.lit(k)) == 0)
-        denom = max(n_docs // k, 1)
+        denom = max(n_rows // k, 1)
     with job_desc(files, "cogie:idf-vocab"):
         df_rows = _collect_idf_rows(src, content_col, max_terms)
     return {r["t"]: math.log(denom / r["df"]) + 1.0 for r in df_rows}
@@ -83,19 +75,16 @@ def _collect_idf_rows(src, content_col, max_terms):
     )
 
 
-def score_pairs(
-    pairs: DataFrame,
-    files: DataFrame,
-    id_col: str = "file_id",
-    content_col: str = "content",
-    feature_chars: int = 2000,
+def score_features(
+    joined: DataFrame,
     jw_chars: int = 256,
     ts_chars: int = 512,
     weights: tuple[float, float, float] = (0.2, 0.5, 0.3),
     idf: dict[str, float] | None = None,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Join pair ids to features and compute the blended score.
+    """Score a pair table that already carries its feature columns
+    (_lf, _rf).
 
     score = w_jw * jaro_winkler + w_ts * token_set_ratio
           + w_tf * tfidf_cosine — the north rule's scorer triple
@@ -106,42 +95,11 @@ def score_pairs(
     input (test_blink.py:53): per-pair scorer cost is O(window²), so an
     unbounded window is the difference between a scorer stage that
     scales with pair count and one that scales with pair×content size.
-    tfidf (linear) sees the full ``feature_chars`` window.
-    Two shuffles (the two feature joins); the scorers are narrow stages.
-    """
-    feats = files.select(
-        F.col(id_col).alias("_fid"),
-        F.substring(normalize_text(content_col), 1, feature_chars).alias("_feat"),
-    )
-    joined = pairs.join(
-        feats.withColumnRenamed("_fid", "left_id").withColumnRenamed("_feat", "_lf"), "left_id"
-    ).join(feats.withColumnRenamed("_fid", "right_id").withColumnRenamed("_feat", "_rf"), "right_id")
-    return score_features(
-        joined,
-        jw_chars=jw_chars,
-        ts_chars=ts_chars,
-        weights=weights,
-        idf=idf,
-        partitions=partitions,
-    )
+    tfidf (linear) sees the whole feature window.
 
-
-def score_features(
-    joined: DataFrame,
-    jw_chars: int = 256,
-    ts_chars: int = 512,
-    weights: tuple[float, float, float] = (0.2, 0.5, 0.3),
-    idf: dict[str, float] | None = None,
-    partitions: int | None = None,
-) -> DataFrame:
-    """Score a pair table that already carries its feature columns
-    (_lf, _rf) — the join-free half of :func:`score_pairs`.
-
-    Callers that must join other per-id payloads onto the pair table
-    anyway (run_linkage attaches MinHash signatures for the cascade
-    filter) should attach features in the SAME joins and call this
-    directly: every avoided pair-table shuffle is the dominant cost at
-    10^12-pair scale.
+    The features ride the same pair-table joins as the cascade
+    signature (plans/linkage.cascade_pairs): every avoided pair-table
+    shuffle is the dominant cost at 10^12-pair scale.
 
     ``partitions`` controls the pre-scorer spread WITHOUT probing the
     plan (a ``joined.rdd.getNumPartitions()`` probe under AQE finalizes

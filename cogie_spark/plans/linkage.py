@@ -23,11 +23,13 @@ resumes from the last commit.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cogie_spark.functions.text import normalize_text
 from cogie_spark.io.tableio import CheckpointManager
 from cogie_spark.operators.blocking import (
     bands_from_signatures,
@@ -99,7 +101,76 @@ class LinkageConfig:
     # ever see distinct contents
     exact_prededup: bool = True
     sha_col: str = "sha256"
-    extra: dict = field(default_factory=dict)
+
+
+def cascade_pairs(
+    pairs: DataFrame,
+    sigs: DataFrame,
+    files: DataFrame,
+    cfg: LinkageConfig,
+    release_into: list,
+) -> DataFrame:
+    """Attach both sides' cascade signature and feature window to the
+    candidate pairs; keep the pairs whose MinHash-agreement Jaccard
+    estimate reaches ``cfg.prefilter_est_jaccard``. ``sigs`` carries
+    (id, sig) and ``files`` (id, content) for every id in ``pairs``; the
+    output adds ``est_jaccard`` and the ``_lf``/``_rf`` features that
+    score_features reads. The per-id side table is persisted into
+    ``release_into``. run_linkage and the stream's cross-batch scoring
+    both go through here.
+
+    Cascade + feature attach are FUSED: the pair table is the biggest
+    relation at scale, so it is shuffled exactly twice (once per side)
+    carrying both the MinHash signature (for the est-Jaccard cascade,
+    pure JVM — the reference's retrieve-then-rerank split, SURVEY.md
+    §4) and the bounded feature window (for the scorers). The split
+    form joined the pair table four times. Trade-off: fusion carries
+    the feature bytes for pairs the cascade later discards — a win
+    while the cascade keep-ratio is high (measured 0.96 on the code
+    fixture: banding already implies est-Jaccard ≈ threshold), a loss
+    on corpora where banding is much looser than the prefilter.
+    """
+    # b-bit cascade signature (cascade_sig_bits): the full 64-bit
+    # components never need to reach the pair table — see LinkageConfig
+    # low byte, shifted into tinyint range (ANSI-safe: a bare tinyint
+    # cast of a 64-bit value throws CAST_OVERFLOW under Spark 4 ANSI)
+    cascade_sig = (
+        F.expr("transform(sig, x -> cast((x & 255) - 128 as tinyint))")
+        if cfg.cascade_sig_bits == 8
+        else F.col("sig")
+    ).alias("sig")
+    side = sigs.select(F.col(cfg.id_col).alias("_sid"), cascade_sig).join(
+        files.select(
+            F.col(cfg.id_col).alias("_sid"),
+            F.substring(
+                normalize_text(cfg.content_col), 1, cfg.feature_chars
+            ).alias("_feat"),
+        ),
+        "_sid",
+    )
+    side = side.persist(StorageLevel.MEMORY_AND_DISK)
+    release_into.append(side)
+    return (
+        pairs.join(
+            side.select(
+                F.col("_sid").alias("left_id"),
+                F.col("sig").alias("_lsig"),
+                F.col("_feat").alias("_lf"),
+            ),
+            "left_id",
+        )
+        .join(
+            side.select(
+                F.col("_sid").alias("right_id"),
+                F.col("sig").alias("_rsig"),
+                F.col("_feat").alias("_rf"),
+            ),
+            "right_id",
+        )
+        .withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), cfg.num_perm))
+        .filter(F.col("est_jaccard") >= cfg.prefilter_est_jaccard)
+        .drop("_lsig", "_rsig")
+    )
 
 
 def run_linkage(
@@ -116,8 +187,6 @@ def run_linkage(
     (el_toolkit.py:144-151, 'unk' on miss).
     """
     cfg = cfg or LinkageConfig()
-
-    from pyspark import StorageLevel
 
     # every persist in this run is tracked so callers that invoke the
     # pipeline repeatedly (streaming micro-batches) can release the
@@ -136,8 +205,6 @@ def run_linkage(
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         persisted.append(df)
         return df
-
-    from cogie_spark.functions.text import normalize_text
 
     # the input is scanned by the prededup groupBy and (via file2rep)
     # the final expansion — persist once (spills to disk at scale).
@@ -229,56 +296,7 @@ def run_linkage(
         stats_into=blocking_stats,
     )
 
-    # cascade + feature attach, FUSED: the pair table is the biggest
-    # relation at scale, so it is shuffled exactly twice (once per side)
-    # carrying both the MinHash signature (for the est-Jaccard cascade,
-    # pure JVM — the reference's retrieve-then-rerank split, SURVEY.md
-    # §4) and the bounded feature window (for the scorers). The split
-    # form joined the pair table four times. Trade-off: fusion carries
-    # the feature bytes for pairs the cascade later discards — a win
-    # while the cascade keep-ratio is high (measured 0.96 on the code
-    # fixture: banding already implies est-Jaccard ≈ threshold), a loss
-    # on corpora where banding is much looser than the prefilter.
-    # b-bit cascade signature (cascade_sig_bits): the full 64-bit
-    # components never need to reach the pair table — see LinkageConfig
-    # low byte, shifted into tinyint range (ANSI-safe: a bare tinyint
-    # cast of a 64-bit value throws CAST_OVERFLOW under Spark 4 ANSI)
-    cascade_sig = (
-        F.expr("transform(sig, x -> cast((x & 255) - 128 as tinyint))")
-        if cfg.cascade_sig_bits == 8
-        else F.col("sig")
-    ).alias("sig")
-    side = sigs.select(F.col(cfg.id_col).alias("_sid"), cascade_sig).join(
-        files.select(
-            F.col(cfg.id_col).alias("_sid"),
-            F.substring(
-                normalize_text(cfg.content_col), 1, cfg.feature_chars
-            ).alias("_feat"),
-        ),
-        "_sid",
-    )
-    side = _persist(side)
-    pairs = (
-        pairs.join(
-            side.select(
-                F.col("_sid").alias("left_id"),
-                F.col("sig").alias("_lsig"),
-                F.col("_feat").alias("_lf"),
-            ),
-            "left_id",
-        )
-        .join(
-            side.select(
-                F.col("_sid").alias("right_id"),
-                F.col("sig").alias("_rsig"),
-                F.col("_feat").alias("_rf"),
-            ),
-            "right_id",
-        )
-        .withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), cfg.num_perm))
-        .filter(F.col("est_jaccard") >= cfg.prefilter_est_jaccard)
-        .drop("_lsig", "_rsig")
-    )
+    pairs = cascade_pairs(pairs, sigs, files, cfg, release_into=persisted)
 
     if checkpoint is not None:
         pairs = checkpoint.commit("pairs", pairs)

@@ -20,6 +20,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_memory() -> str:
+    """min(24g, half of physical memory): local mode runs driver and
+    executors in one JVM, and the other half is left to the Python
+    workers, the page cache and the OS — a heap sized past physical
+    memory gets the JVM OOM-killed instead of spilling."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(24 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "cogie_spark",
     master: str | None = None,
@@ -45,8 +54,12 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = one JVM for driver+executors: give it real heap
-        # or 32 concurrent tasks thrash GC (sandbox has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("COGIE_DRIVER_MEM", "24g"))
+        # or concurrent tasks thrash GC — sized from the host, see
+        # _default_driver_memory; COGIE_DRIVER_MEM overrides
+        .config(
+            "spark.driver.memory",
+            os.environ.get("COGIE_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # collect_list aggregations (blocking's bucket pair generation)

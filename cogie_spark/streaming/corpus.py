@@ -13,8 +13,8 @@ streaming/incremental.py:
 
 - state lives under one TableIO base: per-batch ``kept_<id>`` output
   dirs (the durable output log) and ``hashes_<id>`` dedup deltas, with
-  a JSON manifest as the single commit point (fsio.write_text_atomic —
-  Hadoop FS, object-store semantics documented there);
+  a JSON manifest as the single commit point (tableio.publish_json —
+  Hadoop FS, object-store semantics documented on fsio.write_text_atomic);
 - commits are IDEMPOTENT under foreachBatch's at-least-once contract: a
   retried batch_id short-circuits to its committed kept rows instead of
   appending its delta twice;
@@ -26,31 +26,15 @@ streaming/incremental.py:
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cogie_spark.io import fsio
-from cogie_spark.io.tableio import TableIO
+from cogie_spark.io.tableio import TableIO, publish_json, read_json
 from cogie_spark.plans.corpus import CorpusConfig, kept_from_docs
 
 _MANIFEST = "corpus_manifest.json"
 _HASH = "sha256"
-
-
-def _read_manifest(state: TableIO) -> dict | None:
-    txt = fsio.read_text(state.spark, state.path(_MANIFEST))
-    return None if txt is None else json.loads(txt)
-
-
-def _publish_manifest(state: TableIO, manifest: dict) -> None:
-    # single commit point; atomicity contract documented on
-    # fsio.write_text_atomic (rename on local/HDFS, last-writer-wins
-    # single-writer on S3-like stores)
-    fsio.write_text_atomic(
-        state.spark, state.path(_MANIFEST), json.dumps(manifest, indent=1)
-    )
 
 
 def _hash_paths(manifest: dict) -> list[str]:
@@ -105,7 +89,7 @@ def _compact_hashes(spark: SparkSession, state: TableIO, manifest: dict) -> dict
     }
     if manifest.get("near_dup_params"):
         new_manifest["near_dup_params"] = manifest["near_dup_params"]
-    _publish_manifest(state, new_manifest)
+    publish_json(spark, state.path(_MANIFEST), new_manifest)
     for n in old_names:  # superseded only after the publish succeeded
         fsio.delete(spark, state.path(n))
     return new_manifest
@@ -149,7 +133,7 @@ def incremental_clean_batch(
     """
     cfg = cfg or CorpusConfig()
     spark = batch.sparkSession
-    manifest = _read_manifest(state) or {"batches": [], "base": None}
+    manifest = read_json(spark, state.path(_MANIFEST)) or {"batches": [], "base": None}
 
     # idempotent at-least-once: a retried batch_id returns its committed
     # kept rows; appending the delta again would double-admit content
@@ -219,7 +203,7 @@ def incremental_clean_batch(
             )
             entry["bands"] = bands_name
         manifest["batches"].append(entry)
-        _publish_manifest(state, manifest)
+        publish_json(spark, state.path(_MANIFEST), manifest)
 
         n_deltas = sum(1 for e in manifest["batches"] if e.get("hashes"))
         if compact_every and n_deltas >= compact_every:

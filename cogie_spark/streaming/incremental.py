@@ -5,10 +5,23 @@ The reference's serving loop is stateless request/response with
 singleton model caches (/root/reference/cogie/interface/interface.py:
 24-129; cogie/toolkit/el/el_toolkit.py:75-82) — one record at a time
 through the same pipeline. The Spark restatement is micro-batching:
-each foreachBatch invocation is a bounded DataFrame that runs the SAME
-batch operators (blocking -> scoring -> assignment) against the
-persisted cluster state, then appends to it. No separate streaming
-implementation of the operators exists — that is the point.
+each foreachBatch invocation is a bounded DataFrame linked against the
+persisted cluster state, then appended to it, under ONE
+``LinkageConfig`` (plans/linkage.py) — the batch pipeline's config:
+
+- batch signatures, state bands and legacy migration use the config's
+  MinHash family (num_perm, bands, signature_mode, shingle_k);
+- cross-batch candidates (batch bands x state bands) go through
+  ``cascade_pairs`` — run_linkage's est-Jaccard cascade and feature
+  attach — then ``score_features`` with the config's windows, weights
+  and a corpus IDF over the rows being linked (run_linkage likewise
+  takes IDF over the rows it links);
+- the rows no state cluster claims are clustered by ``run_linkage``
+  itself with the same config.
+
+No separate streaming implementation of the operators exists, so a
+pair that matches in a batch run matches in the stream (up to the IDF
+corpus, which is the rows each run links).
 
 State layout (under ``state_dir``, via TableIO):
 - ``members_delta_NNNNN`` : (file_id, cluster_id, lang, content, sig)
@@ -26,8 +39,9 @@ State layout (under ``state_dir``, via TableIO):
   scans instead of one parquet dir per historical batch (VERDICT r3
   'What's wrong' #2: at 10^4+ micro-batches per-batch listing/small-file
   cost otherwise dominates).
-- ``_state_manifest.json``: the committed list of delta batches
-  (write-temp + atomic rename). Readers take the manifest as truth —
+- ``_state_manifest.json``: the committed list of delta batches,
+  published by ``tableio.publish_json`` (write-temp + atomic rename);
+  ``generation`` counts compactions. Readers take the manifest as truth —
   no per-batch directory glob, whose listing cost grew with batch
   count and whose semantics were local-FS-only. Each entry records its
   ``batch_id``; ``compacted_through`` is the highest batch id folded
@@ -49,17 +63,34 @@ manifest is published — after which every batch takes the fast path
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cogie_spark.io import fsio
-from cogie_spark.io.tableio import TableIO
+from cogie_spark.io.tableio import TableIO, publish_json, read_json
 from cogie_spark.operators.blocking import bands_from_signatures, signature_table
-from cogie_spark.operators.scoring import score_pairs
+from cogie_spark.operators.cc import CheckpointHandle
+from cogie_spark.operators.scoring import corpus_idf, match_edges, score_features
+from cogie_spark.plans.linkage import LinkageConfig, cascade_pairs, run_linkage
 
 _MANIFEST = "_state_manifest.json"
+# the state layout's columns; a config naming other columns is refused
+_LAYOUT = ("file_id", "content", ("lang",))
+
+
+def _signatures(df: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    """(file_id, lang, sig) under the config's MinHash family."""
+    return signature_table(
+        df, key_cols=("lang",), num_perm=cfg.num_perm,
+        shingle_k=cfg.shingle_k, mode=cfg.signature_mode,
+    )
+
+
+def _bands(sigs: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    """(file_id, lang, band_id, band_hash) under the config's banding."""
+    return bands_from_signatures(
+        sigs, key_cols=("lang",), bands=cfg.bands, rows_per_band=cfg.num_perm // cfg.bands
+    )
 
 
 def _entry_batch_id(entry: dict) -> int:
@@ -134,46 +165,20 @@ def _compact_state(spark: SparkSession, state: TableIO, manifest: dict) -> dict:
         "batches": [],
         "compacted_through": compacted_through,
     }
-    _publish_manifest(state, new_manifest)  # commit point
+    publish_json(spark, state.path(_MANIFEST), new_manifest)  # commit point
 
     for d in old_dirs:
         fsio.delete(spark, state.path(d))  # best-effort, post-commit
     return new_manifest
 
 
-def _list_state_dirs(spark: SparkSession, base) -> list[str]:
-    """Names of existing state delta dirs, via the Hadoop FileSystem API
-    (works on any Hadoop-compatible FS, not just the local one —
-    ADVICE r2 #5). Only consulted when the manifest is absent: the
-    steady-state read path never lists directories."""
-    return fsio.list_names(spark, str(base))
-
-
-def _read_manifest(state: TableIO) -> dict | None:
-    txt = fsio.read_text(state.spark, state.path(_MANIFEST))
-    return None if txt is None else json.loads(txt)
-
-
-def _publish_manifest(state: TableIO, manifest: dict) -> None:
-    # write-temp + rename through the Hadoop FS API: atomic replace on
-    # local/HDFS, single-writer last-writer-wins on S3-like stores —
-    # the per-FS contract is documented on fsio.write_text_atomic. This
-    # is the commit point (VERDICT r4 'What's wrong' #3: the old
-    # os.replace form silently assumed a POSIX-rename filesystem).
-    fsio.write_text_atomic(
-        state.spark, state.path(_MANIFEST), json.dumps(manifest, indent=1)
-    )
-
-
-def _migrate_legacy_state(
-    spark: SparkSession, state: TableIO, num_perm: int, bands: int
-) -> dict:
+def _migrate_legacy_state(spark: SparkSession, state: TableIO, cfg: LinkageConfig) -> dict:
     """One-time upgrade of pre-manifest state dirs: backfill missing sig
     columns from content, derive band deltas from the persisted sigs,
     publish the manifest. A genuine read error on existing state
     propagates — only truly-missing state may start fresh."""
     entries = sorted(
-        d for d in _list_state_dirs(spark, state.base)
+        d for d in fsio.list_names(spark, str(state.base))
         if d.startswith("members_delta_")
         and not d.endswith("m")
         and fsio.is_dir(spark, state.path(d))
@@ -187,10 +192,7 @@ def _migrate_legacy_state(
             # from content once, rewrite the delta in the new format
             # under a distinct name ('...m'); idempotent — a crash
             # before the manifest publish just re-runs the overwrite
-            sigs = signature_table(
-                members.select("file_id", "lang", "content"),
-                key_cols=("lang",), num_perm=num_perm, mode="fast",
-            )
+            sigs = _signatures(members.select("file_id", "lang", "content"), cfg)
             members = members.join(sigs.select("file_id", "sig"), "file_id")
             members_name = d + "m"
             state.write(members_name, members)
@@ -199,13 +201,9 @@ def _migrate_legacy_state(
         else:
             members_name = d
         bands_name = "bands" + members_name.removeprefix("members")
-        ob = bands_from_signatures(
-            members.select("file_id", "lang", "sig"),
-            key_cols=("lang",), bands=bands, rows_per_band=num_perm // bands,
-        )
-        state.write(bands_name, ob)
+        state.write(bands_name, _bands(members.select("file_id", "lang", "sig"), cfg))
         manifest["batches"].append({"members": members_name, "bands": bands_name})
-    _publish_manifest(state, manifest)
+    publish_json(spark, state.path(_MANIFEST), manifest)
     # the manifest is now the source of truth; drop superseded legacy
     # dirs so naive directory readers can't double-count (best-effort)
     for d in replaced:
@@ -216,13 +214,16 @@ def _migrate_legacy_state(
 def incremental_link_batch(
     batch: DataFrame,
     state: TableIO,
-    threshold: float = 0.72,
-    num_perm: int = 64,
-    bands: int = 16,
+    cfg: LinkageConfig | None = None,
     batch_id: int = 0,
     compact_every: int = 8,
 ) -> DataFrame:
     """Link one micro-batch against current state; returns assignments.
+
+    ``cfg`` (default ``LinkageConfig()``) sets every signature, cascade,
+    scoring and threshold parameter, as in ``run_linkage``. The state
+    stores bands under it, so one state directory takes one MinHash
+    family (num_perm, bands, signature_mode, shingle_k) for its life.
 
     New rows joining an existing cluster inherit its cluster_id; rows
     matching only each other form a new cluster keyed by their min
@@ -232,13 +233,19 @@ def incremental_link_batch(
     the reference's alignment to a fixed KB entity
     (/root/reference/cogie/toolkit/el/el_toolkit.py:131-143).
     """
+    cfg = cfg or LinkageConfig()
+    if (cfg.id_col, cfg.content_col, cfg.key_cols) != _LAYOUT:
+        raise ValueError(
+            f"the linkage stream's state columns are fixed: (id_col, content_col, "
+            f"key_cols) must be {_LAYOUT}"
+        )
     spark = batch.sparkSession
-    manifest = _read_manifest(state)
+    manifest = read_json(spark, state.path(_MANIFEST))
     if manifest is None and any(
         d.startswith("members_delta_")
-        for d in _list_state_dirs(spark, state.base)  # Hadoop-FS, ADVICE r3 #4
+        for d in fsio.list_names(spark, str(state.base))  # Hadoop-FS, ADVICE r3 #4
     ):
-        manifest = _migrate_legacy_state(spark, state, num_perm=num_perm, bands=bands)
+        manifest = _migrate_legacy_state(spark, state, cfg)
 
     # idempotent commit (ADVICE r3 #1): foreachBatch is at-least-once —
     # a retry of an already-committed batch_id must NOT append its delta
@@ -259,10 +266,11 @@ def incremental_link_batch(
 
     have_state = bool(manifest and (manifest["batches"] or manifest.get("base")))
 
-    # batch-scoped persists, released at the end of the batch — a
-    # long-running stream otherwise accumulates cached partitions from
-    # every past micro-batch (ADVICE r2 #5)
-    to_unpersist: list[DataFrame] = []
+    # batch-scoped persists (and the IDF broadcast and the links
+    # checkpoint), released at the end of the batch — a long-running
+    # stream otherwise accumulates cached partitions from every past
+    # micro-batch (ADVICE r2 #5)
+    to_unpersist: list = []
 
     def _persist(df: DataFrame) -> DataFrame:
         df = df.persist()
@@ -271,21 +279,15 @@ def incremental_link_batch(
 
     try:
         batch = _persist(batch)
-        new_sigs = _persist(
-            signature_table(batch, key_cols=("lang",), num_perm=num_perm, mode="fast")
-        )
+        new_sigs = _persist(_signatures(batch, cfg))
 
         if have_state:
-            members_paths = _state_member_paths(state, manifest)
-            bands_paths = _state_band_paths(state, manifest)
-            old = spark.read.parquet(*members_paths)
+            old = spark.read.parquet(*_state_member_paths(state, manifest))
             # state bands come straight off parquet — derived ONCE at
             # write time; no per-batch re-explode of the state sig table
-            ob = spark.read.parquet(*bands_paths)
-            nb = bands_from_signatures(
-                new_sigs, key_cols=("lang",), bands=bands, rows_per_band=num_perm // bands
-            )
-            cand = (
+            ob = spark.read.parquet(*_state_band_paths(state, manifest))
+            nb = _bands(new_sigs, cfg)
+            cand = _persist(
                 nb.alias("n")
                 .join(
                     ob.alias("o"),
@@ -298,30 +300,48 @@ def incremental_link_batch(
                 )
                 .distinct()
             )
-            # feature join bounded to rows that actually appear in a
-            # candidate pair: the state is only SCANNED (columnar read),
-            # never shuffled wholesale — per-batch shuffle cost stays
-            # O(batch + matched)
+            # the rows of both sides that appear in a candidate pair, with
+            # the signatures the batch just computed and the state stored:
+            # the state is only SCANNED (columnar read), never shuffled
+            # wholesale — per-batch shuffle cost stays O(batch + matched)
             cand_ids = (
                 cand.select(F.col("left_id").alias("file_id"))
                 .unionByName(cand.select(F.col("right_id").alias("file_id")))
                 .distinct()
             )
-            both = (
+            rows = _persist(
                 batch.select("file_id", "lang", "content")
-                .unionByName(old.select("file_id", "lang", "content"))
+                .join(new_sigs.select("file_id", "sig"), "file_id")
+                .unionByName(old.select("file_id", "lang", "content", "sig"))
                 .join(cand_ids, "file_id", "left_semi")
             )
+            pairs = cascade_pairs(cand, rows, rows, cfg, release_into=to_unpersist)
+            idf = None
+            if cfg.idf_max_terms:
+                idf = spark.sparkContext.broadcast(
+                    corpus_idf(rows, max_terms=cfg.idf_max_terms)
+                )
+                to_unpersist.append(idf)
             # partitions=None: unconditional cores*2 spread — micro-batch
-            # pair tables are small (shuffle is cheap) and the old probe
-            # double-executed the feature join EVERY batch under AQE
-            scored = score_pairs(cand, both)
+            # pair tables are narrow, and AQE would coalesce the scorer
+            # stage onto one or two cores
+            scored = score_features(
+                pairs, jw_chars=cfg.jw_chars, ts_chars=cfg.ts_chars,
+                weights=cfg.weights, idf=idf,
+            )
+            # checkpointed (one row per linked file): read by the
+            # unassigned split AND the assignment union below, so the
+            # pairs are scored once; and run_linkage below plans over a
+            # plain row scan instead of the whole cross-batch lineage,
+            # whose repeated text in every plan string grows the heap
             links = (
-                scored.filter(F.col("score") >= threshold)
+                match_edges(scored, threshold=cfg.threshold)
                 .join(old.select(F.col("file_id").alias("right_id"), "cluster_id"), "right_id")
                 .groupBy(F.col("left_id").alias("file_id"))
                 .agg(F.min("cluster_id").alias("cluster_id"))
+                .localCheckpoint(eager=True)
             )
+            to_unpersist.append(CheckpointHandle(links))
         else:
             links = spark.createDataFrame([], "file_id string, cluster_id string")
 
@@ -329,11 +349,7 @@ def incremental_link_batch(
         # inner pipeline's cached inputs are batch-scoped too — release
         # them with ours once the delta is written
         unassigned = batch.join(links, "file_id", "left_anti")
-        from cogie_spark.plans.linkage import LinkageConfig, run_linkage
-
-        intra_out = run_linkage(
-            unassigned, LinkageConfig(threshold=threshold, num_perm=num_perm, bands=bands)
-        )
+        intra_out = run_linkage(unassigned, cfg)
         # _checkpoints too: released only at batch end, AFTER the delta
         # parquet write durably commits everything derived from them
         to_unpersist.extend(intra_out.get("_persisted", []))
@@ -356,17 +372,13 @@ def incremental_link_batch(
         bands_name = f"bands_delta_{batch_id:05d}"
         state.write(members_name, new_members)
         state.write(
-            bands_name,
-            bands_from_signatures(
-                state.read(members_name).select("file_id", "lang", "sig"),
-                key_cols=("lang",), bands=bands, rows_per_band=num_perm // bands,
-            ),
+            bands_name, _bands(state.read(members_name).select("file_id", "lang", "sig"), cfg)
         )
         manifest = manifest or {"batches": []}
         manifest["batches"].append(
             {"members": members_name, "bands": bands_name, "batch_id": batch_id}
         )
-        _publish_manifest(state, manifest)
+        publish_json(spark, state.path(_MANIFEST), manifest)
         if compact_every and len(manifest["batches"]) >= compact_every:
             # compaction runs AFTER the batch commit point: a failure here
             # (or a crash mid-compaction) never loses the batch — the next
@@ -395,17 +407,17 @@ def start_incremental_stream(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "repo string, path string, commit string, lang string, content string, sha256 string, file_id string",
-    threshold: float = 0.72,
+    cfg: LinkageConfig | None = None,
     compact_every: int = 8,
 ):
     """File-source Structured Stream: every new parquet file under
-    ``input_dir`` is a micro-batch of code_files rows to link."""
+    ``input_dir`` is a micro-batch of code_files rows to link under
+    ``cfg`` (see :func:`incremental_link_batch`)."""
     state = TableIO(spark, state_dir)
 
     def handle(batch: DataFrame, batch_id: int):
         incremental_link_batch(
-            batch, state, threshold=threshold, batch_id=batch_id,
-            compact_every=compact_every,
+            batch, state, cfg=cfg, batch_id=batch_id, compact_every=compact_every
         )
 
     return (

@@ -83,11 +83,17 @@ def test_flagship_f1(spark):
 
 def test_blocking_recall(spark):
     """All true pairs must survive blocking (recall gate before scoring)."""
-    from cogie_spark.operators.blocking import candidate_pairs, with_blocks
+    from cogie_spark.operators.blocking import (
+        bands_from_signatures,
+        candidate_pairs,
+        signature_table,
+    )
 
     files = code_files(spark, n_groups=60, seed=42, with_truth=True)
     lp = labeled_pairs(files).filter("is_match").select("left_id", "right_id")
-    blocks = with_blocks(files.drop("group_id", "member_idx"))
+    # portable char-shingle family, 32 permutations, 16 bands x 2 rows
+    sigs = signature_table(files.drop("group_id", "member_idx"), num_perm=32, mode="portable")
+    blocks = bands_from_signatures(sigs, bands=16, rows_per_band=2)
     pairs, _ = candidate_pairs(blocks)
     missed = lp.join(pairs, ["left_id", "right_id"], "left_anti").count()
     total = lp.count()

@@ -10,7 +10,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from cogie_spark.fixtures.codefiles import code_files
-from cogie_spark.io.tableio import TableIO
+from cogie_spark.io.tableio import TableIO, read_json
 from cogie_spark.streaming.incremental import incremental_link_batch
 
 
@@ -271,7 +271,7 @@ def test_retry_is_idempotent(spark):
     assert manifest2 == manifest, "retry of a compacted batch mutated the manifest"
 
 
-def test_compaction_crash_before_publish_keeps_state_readable(spark):
+def test_compaction_crash_before_publish_keeps_state_readable(spark, monkeypatch):
     """Crash between base write and manifest publish: the old manifest
     (and every dir it references) stays the committed truth; the next
     compaction succeeds with a fresh generation."""
@@ -290,17 +290,14 @@ def test_compaction_crash_before_publish_keeps_state_readable(spark):
         *inc_mod._state_member_paths(state, before)
     ).count()
 
-    orig = inc_mod._publish_manifest
-
-    def exploding(st, manifest):
+    def exploding(spark_, path, manifest):
         raise RuntimeError("simulated crash at the commit point")
 
-    inc_mod._publish_manifest = exploding
-    try:
+    # the shared manifest publish helper, as the stream module calls it
+    with monkeypatch.context() as m:
+        m.setattr(inc_mod, "publish_json", exploding)
         with pytest.raises(RuntimeError):
             inc_mod._compact_state(spark, state, dict(before))
-    finally:
-        inc_mod._publish_manifest = orig
 
     after = json.loads((state.base / "_state_manifest.json").read_text())
     assert after == before, "crashed compaction mutated the committed manifest"
@@ -371,7 +368,7 @@ def test_uri_base_manifest_publish_and_compaction_cleanup(spark):
         incremental_link_batch(b, state, batch_id=i, compact_every=2)
 
     # manifest was published via the Hadoop route; readable both ways
-    manifest = inc_mod._read_manifest(state)
+    manifest = read_json(spark, state.path(inc_mod._MANIFEST))
     assert manifest is not None and manifest.get("base")
     local_manifest = json.loads(
         (pathlib.Path(local) / "_state_manifest.json").read_text()
@@ -395,7 +392,7 @@ def test_uri_base_manifest_publish_and_compaction_cleanup(spark):
     # through the same Hadoop route)
     retry = incremental_link_batch(batches[0], state, batch_id=0, compact_every=2)
     assert retry.count() == batches[0].count()
-    assert inc_mod._read_manifest(state) == manifest
+    assert read_json(spark, state.path(inc_mod._MANIFEST)) == manifest
 
 
 def test_checkpoint_manager_uri_base(spark):
@@ -460,7 +457,7 @@ def test_corpus_stream_cross_batch_dedup_and_idempotent_retry(spark):
 
 def test_corpus_stream_compaction_preserves_dedup(spark):
     from cogie_spark.plans.corpus import CorpusConfig
-    from cogie_spark.streaming.corpus import _read_manifest, incremental_clean_batch
+    from cogie_spark.streaming.corpus import _MANIFEST, incremental_clean_batch
 
     state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_corpus_cmp_"))
     cfg = CorpusConfig(redact=False)
@@ -469,7 +466,7 @@ def test_corpus_stream_compaction_preserves_dedup(spark):
         b = _docs(spark, [(100 + i, _GOOD + f" variant number {i} of the corpus")])
         incremental_clean_batch(b, state, cfg, batch_id=i, compact_every=2)
 
-    m = _read_manifest(state)
+    m = read_json(spark, state.path(_MANIFEST))
     assert m["base"] is not None, "hash deltas were not folded"
     assert all("hashes" not in e for e in m["batches"][: m["compacted_through"] + 1])
 
@@ -561,7 +558,7 @@ def test_corpus_stream_near_dup_survives_compaction(spark):
     """Band-state compaction folds the deltas into a base generation and
     the admission gate still drops near-dups of pre-compaction docs."""
     from cogie_spark.plans.corpus import CorpusConfig
-    from cogie_spark.streaming.corpus import _read_manifest, incremental_clean_batch
+    from cogie_spark.streaming.corpus import _MANIFEST, incremental_clean_batch
 
     state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_corpus_ndc_"))
     cfg = CorpusConfig(redact=False)
@@ -572,7 +569,7 @@ def test_corpus_stream_near_dup_survives_compaction(spark):
             _docs(spark, [(i, texts[i])]), state, cfg,
             batch_id=i, compact_every=2, near_dup=True,
         )
-    man = _read_manifest(state)
+    man = read_json(spark, state.path(_MANIFEST))
     assert man["base"] and man["base"].get("bands"), "bands folded into base"
     assert not any(e.get("bands") for e in man["batches"])
 
