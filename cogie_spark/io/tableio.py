@@ -35,11 +35,15 @@ Also maintains the north rule's per-stage observability tables:
 
 from __future__ import annotations
 
+import functools
 import json
+import re
 import time
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from cogie_spark.io import fsio
 
@@ -57,6 +61,140 @@ def publish_json(spark: SparkSession, path: str, obj: dict) -> None:
     local/HDFS, single-writer last-writer-wins on S3-like stores (the
     per-FS contract is documented on fsio.write_text_atomic)."""
     fsio.write_text_atomic(spark, path, json.dumps(obj, indent=1))
+
+
+def union_parts(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
+    """The plain :class:`StateLog` fold: every part's rows, by column name."""
+    return functools.reduce(DataFrame.unionByName, (df for _, df in parts))
+
+
+class StateLog:
+    """Committed state of a micro-batch stream: parquet directories under
+    one TableIO, listed by one JSON manifest.
+
+    Each manifest entry is one batch: its ``batch_id`` and one directory
+    name per *kind* (``members``, ``bands``, ``kept``, ``hashes``). New
+    directories are named ``{kind}_delta_{batch:05d}``. Directory names
+    are always read from the manifest, never rebuilt, so state written
+    under older naming schemes keeps resolving.
+
+    The manifest is the single commit point: directories are written
+    first and become state only when the manifest that lists them is
+    published (``publish_json``). A crash in between leaves the previous
+    manifest, and every directory it lists, intact.
+
+    Kinds named in ``folds`` are folded by :meth:`compact` into one
+    ``{kind}_base_{gen:05d}`` directory. Each fold gets the kind's parts,
+    base first, as ``(batch_id, frame)`` pairs (``None`` for the base),
+    and returns the new base. Other kinds stay in the entries as a log.
+    """
+
+    def __init__(
+        self,
+        io: TableIO,
+        name: str,
+        folds: dict[str, Callable[[list[tuple[int | None, DataFrame]]], DataFrame]],
+    ):
+        self.io = io
+        self.folds = folds
+        self._path = io.path(name)
+        self.manifest = read_json(io.spark, self._path) or {"batches": []}
+
+    @property
+    def entries(self) -> list[dict]:
+        return self.manifest["batches"]
+
+    @property
+    def base(self) -> dict:
+        return self.manifest.get("base") or {}
+
+    @staticmethod
+    def batch_id(entry: dict) -> int:
+        """An entry's batch id; entries written by the linkage stream's
+        pre-manifest migration carry it only in their directory names
+        (``members_delta_NNNNN[m]``)."""
+        if "batch_id" in entry:
+            return int(entry["batch_id"])
+        m = re.search(r"\d+", min(entry.values()))
+        return int(m.group()) if m else -1
+
+    @staticmethod
+    def delta_name(kind: str, batch_id: int) -> str:
+        return f"{kind}_delta_{batch_id:05d}"
+
+    def entry(self, batch_id: int) -> dict | None:
+        """The committed entry of ``batch_id``: the idempotent-retry
+        lookup (foreachBatch is at-least-once)."""
+        return next((e for e in self.entries if self.batch_id(e) == batch_id), None)
+
+    def paths(self, kind: str) -> list[str]:
+        """The kind's base directory, if any, then every delta of it."""
+        names = [self.base[kind]] if self.base.get(kind) else []
+        names += [e[kind] for e in self.entries if e.get(kind)]
+        return [self.io.path(n) for n in names]
+
+    def committed(self, batch_id: int, kind: str) -> DataFrame | None:
+        """The rows ``batch_id`` committed under ``kind``, or None if the
+        batch is not committed: its delta while the manifest lists it,
+        else the base's rows carrying ``src_batch == batch_id``."""
+        e = self.entry(batch_id)
+        if e is not None and e.get(kind):
+            return self.io.read(e[kind])
+        if self.base.get(kind) and batch_id <= int(self.manifest.get("compacted_through", -1)):
+            return self.io.read(self.base[kind]).filter(F.col("src_batch") == batch_id)
+        return None
+
+    def publish(self) -> None:
+        """Publish the manifest: the commit point."""
+        publish_json(self.io.spark, self._path, self.manifest)
+
+    def commit(self, batch_id: int, dirs: dict[str, str]) -> None:
+        """Append ``batch_id``'s entry (``{kind: directory}``, already
+        written) and publish the manifest."""
+        self.entries.append({"batch_id": batch_id, **dirs})
+        self.publish()
+
+    def compact(self, compact_every: int) -> None:
+        """Fold the folded kinds into a new base generation once
+        ``compact_every`` entries still hold one (0 = never).
+
+        The new bases are written before the manifest is published, so
+        a crash leaves the previous manifest committed and the next
+        compaction overwrites the half-written generation. Superseded
+        directories are deleted, best-effort, only after the publish.
+        """
+        holding = [e for e in self.entries if any(e.get(k) for k in self.folds)]
+        if not compact_every or len(holding) < compact_every:
+            return
+        # earlier corpus manifests count generations in base.gen
+        gen = int(self.manifest.get("generation", self.base.get("gen", 0))) + 1
+        new_base, superseded = {}, []
+        for kind, fold in self.folds.items():
+            names = [(None, self.base[kind])] if self.base.get(kind) else []
+            names += [(self.batch_id(e), e[kind]) for e in holding if e.get(kind)]
+            if not names:
+                continue
+            new_base[kind] = f"{kind}_base_{gen:05d}"
+            self.io.write(new_base[kind], fold([(b, self.io.read(n)) for b, n in names]))
+            superseded += [n for _, n in names]
+        entries = []
+        for e in self.entries:
+            rest = {k: v for k, v in e.items() if k not in self.folds}
+            if rest.keys() - {"batch_id"}:
+                entries.append(rest)
+        self.manifest = {
+            **self.manifest,
+            "generation": gen,
+            "base": new_base,
+            "batches": entries,
+            "compacted_through": max(
+                [int(self.manifest.get("compacted_through", -1))]
+                + [self.batch_id(e) for e in holding]
+            ),
+        }
+        self.publish()
+        for n in superseded:
+            fsio.delete(self.io.spark, self.io.path(n))
 
 
 def _init_base(spark: SparkSession, base: str):

@@ -227,7 +227,8 @@ def candidate_pairs(
         logging.getLogger(__name__).warning(
             "candidate_pairs: dropping %d block(s) larger than %d members "
             "(max seen %d) — pairs inside them are not generated; the "
-            "dropped_blocks table lists them",
+            "dropped_blocks table lists them; raise max_block_size or "
+            "exact-dedup first",
             int(max_row["d"] or 0), drop_cap, max_seen,
         )
     if max_seen <= max_block_size:

@@ -274,30 +274,15 @@ def ngram_jaccard_pairs(
             sigs, id_col="_id", key_cols=key_cols, bands=bands,
             rows_per_band=num_perm // bands,
         )
-        # verified is eagerly checkpointed and dropped eagerly counted
-        # below, so candidate_pairs' internal caches are releasable
-        # before returning (no lazy consumer outlives this call)
+        # verified is eagerly checkpointed below, so candidate_pairs'
+        # internal caches are releasable before returning (no lazy
+        # consumer outlives this call); candidate_pairs logs any drops
         cp_caches: list[DataFrame] = []
-        cp_stats: dict = {}
-        pairs, dropped = candidate_pairs(
+        pairs, _ = candidate_pairs(
             blocks, id_col="_id", key_cols=key_cols,
             max_block_size=max_block_size, release_into=cp_caches,
-            stats_into=cp_stats,
         )
         verified = _verify(pairs.select("left_id", "right_id")).localCheckpoint(eager=True)
-        # drop count comes free from the precheck aggregate — the old
-        # dropped.count() was one extra job per call for the same number
-        n_dropped = cp_stats.get("n_dropped_blocks", 0)
-        if n_dropped:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "ngram_jaccard_pairs(banded): %d oversized blocks dropped "
-                "(max_block_size=%d) — pairs inside them were never "
-                "compared; raise max_block_size or exact-dedup first",
-                n_dropped,
-                max_block_size,
-            )
         side.unpersist()
         for df in cp_caches:
             df.unpersist()
@@ -585,8 +570,6 @@ def semantic_duplicates(
     aggregation, two id-keyed feature joins for the verify — no
     all-pairs stage anywhere at the default settings.
     """
-    import logging
-
     from pyspark import StorageLevel
 
     from cogie_spark.operators.ann import _ivf_lists_arrow, infer_dim, ivf_train
@@ -609,13 +592,12 @@ def semantic_duplicates(
         .withColumn("band_id", F.lit(0))
     )
     # same eager-consumption shape as the banded n-gram path: verified
-    # is checkpointed and dropped counted before return, so the
-    # internal caches release here
+    # is checkpointed before return, so the internal caches release
+    # here; candidate_pairs logs any oversized lists it drops
     cp_caches: list[DataFrame] = []
-    cp_stats: dict = {}
-    pairs, dropped = candidate_pairs(
+    pairs, _ = candidate_pairs(
         blocks, id_col="_id", key_cols=(), max_block_size=max_list_size,
-        release_into=cp_caches, stats_into=cp_stats,
+        release_into=cp_caches,
     )
     verified = (
         pairs.select("left_id", "right_id")
@@ -626,17 +608,6 @@ def semantic_duplicates(
         .select("left_id", "right_id", "cosine")
         .localCheckpoint(eager=True)
     )
-    # dropped-list count comes from the precheck aggregate candidate_
-    # pairs already ran (stats_into) — the old dropped.count() action
-    # cost one extra job per call for the same number
-    n_dropped = cp_stats.get("n_dropped_blocks", 0)
-    if n_dropped:
-        logging.getLogger(__name__).warning(
-            "semantic_duplicates: %d oversized centroid lists dropped "
-            "(max_list_size=%d) — pairs inside them were never compared; "
-            "raise max_list_size, raise nlist, or exact-dedup first",
-            n_dropped, max_list_size,
-        )
     side.unpersist()
     for df in cp_caches:
         df.unpersist()

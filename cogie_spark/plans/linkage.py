@@ -300,8 +300,9 @@ def run_linkage(
 
     if checkpoint is not None:
         pairs = checkpoint.commit("pairs", pairs)
-        n_dropped = dropped.count()
-        checkpoint.log_metric("blocking", 0, "dropped_blocks", float(n_dropped))
+        checkpoint.log_metric(
+            "blocking", 0, "dropped_blocks", float(blocking_stats["n_dropped_blocks"])
+        )
     else:
         # downstream stages (scoring, CC seed) and caller actions each
         # reference the pair table — never recompute the self-join

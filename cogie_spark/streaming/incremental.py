@@ -23,32 +23,31 @@ No separate streaming implementation of the operators exists, so a
 pair that matches in a batch run matches in the stream (up to the IDF
 corpus, which is the rows each run links).
 
-State layout (under ``state_dir``, via TableIO):
-- ``members_delta_NNNNN`` : (file_id, cluster_id, lang, content, sig)
-  — the rows linked by batch N, WITH their MinHash signatures.
+State layout (under ``state_dir``): a ``tableio.StateLog`` over
+``_state_manifest.json``, the one state log both streams share. Batch N
+commits two directories, named ``{kind}_delta_{N:05d}``:
+- ``members_delta_NNNNN`` : (file_id, cluster_id, lang, content, sig,
+  src_batch) — the rows linked by batch N, WITH their MinHash signatures.
 - ``bands_delta_NNNNN``   : (file_id, lang, band_id, band_hash)
   — the SAME rows' LSH band memberships, derived from the signatures
   ONCE at write time. Banding the accumulated state used to re-explode
   every persisted signature through the hash family each micro-batch
   (O(state) expression work per batch — VERDICT r2 'What's wrong' #2);
   now the state's band table is a plain columnar scan.
-- ``members_base_NNNNN`` / ``bands_base_NNNNN``: compacted state — every
-  ``compact_every`` batches the accumulated deltas are rewritten into a
-  single base generation and the manifest is truncated, so the
+- ``members_base_NNNNN`` / ``bands_base_NNNNN``: both kinds are folded
+  — every ``compact_every`` batches ``StateLog.compact`` rewrites the
+  deltas into one base generation and truncates the manifest, so the
   steady-state read is one base scan + at most ``compact_every`` delta
   scans instead of one parquet dir per historical batch (VERDICT r3
   'What's wrong' #2: at 10^4+ micro-batches per-batch listing/small-file
-  cost otherwise dominates).
-- ``_state_manifest.json``: the committed list of delta batches,
-  published by ``tableio.publish_json`` (write-temp + atomic rename);
-  ``generation`` counts compactions. Readers take the manifest as truth —
-  no per-batch directory glob, whose listing cost grew with batch
-  count and whose semantics were local-FS-only. Each entry records its
-  ``batch_id``; ``compacted_through`` is the highest batch id folded
-  into the base. Commits are IDEMPOTENT: a foreachBatch retry of an
-  already-committed batch_id (Structured Streaming is at-least-once)
-  short-circuits to the committed assignments instead of appending the
-  same delta twice (ADVICE r3 #1).
+  cost otherwise dominates). The manifest's ``generation`` counts
+  compactions; ``compacted_through`` is the highest batch id folded.
+- Readers take the manifest as truth — no per-batch directory glob.
+  Commits are IDEMPOTENT: a foreachBatch retry of an already-committed
+  batch_id (Structured Streaming is at-least-once) short-circuits to
+  the committed assignments (``StateLog.committed``: the delta, or the
+  base filtered on ``src_batch``) instead of appending the same delta
+  twice (ADVICE r3 #1).
 
 Per-batch cost: signature + banding O(batch); state is SCANNED
 (columnar, predicate-prunable) but never re-hashed and never shuffled
@@ -67,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cogie_spark.io import fsio
-from cogie_spark.io.tableio import TableIO, publish_json, read_json
+from cogie_spark.io.tableio import StateLog, TableIO, union_parts
 from cogie_spark.operators.blocking import bands_from_signatures, signature_table
 from cogie_spark.operators.cc import CheckpointHandle
 from cogie_spark.operators.scoring import corpus_idf, match_edges, score_features
@@ -93,97 +92,33 @@ def _bands(sigs: DataFrame, cfg: LinkageConfig) -> DataFrame:
     )
 
 
-def _entry_batch_id(entry: dict) -> int:
-    """Batch id of a manifest entry; legacy entries (no batch_id field)
-    carry it in the delta name (members_delta_NNNNN[m])."""
-    if "batch_id" in entry:
-        return int(entry["batch_id"])
-    import re
-
-    m = re.search(r"(\d+)", entry["members"])
-    return int(m.group(1)) if m else -1
-
-
-def _state_member_paths(state: TableIO, manifest: dict) -> list[str]:
-    paths = []
-    if manifest.get("base"):
-        paths.append(state.path(manifest["base"]["members"]))
-    paths.extend(state.path(b["members"]) for b in manifest["batches"])
-    return paths
+def _fold_members(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
+    """Members fold: the base always carries ``src_batch``, which is what
+    makes retried already-compacted batches answerable; deltas migrated
+    from the pre-manifest format lack it, so it is backfilled from their
+    batch id."""
+    return union_parts([
+        (b, df if "src_batch" in df.columns else df.withColumn("src_batch", F.lit(b)))
+        for b, df in parts
+    ])
 
 
-def _state_band_paths(state: TableIO, manifest: dict) -> list[str]:
-    paths = []
-    if manifest.get("base"):
-        paths.append(state.path(manifest["base"]["bands"]))
-    paths.extend(state.path(b["bands"]) for b in manifest["batches"])
-    return paths
+def _state_log(state: TableIO) -> StateLog:
+    return StateLog(state, _MANIFEST, folds={"members": _fold_members, "bands": union_parts})
 
 
-def _compact_state(spark: SparkSession, state: TableIO, manifest: dict) -> dict:
-    """Fold every delta (plus the previous base) into one new base
-    generation and publish a truncated manifest.
-
-    Crash-safe: the new base dirs are fully written BEFORE the manifest
-    rename; a crash in between leaves the old manifest (and all dirs it
-    references) intact — the orphaned half-written generation is ignored
-    and overwritten by the next compaction. Superseded dirs are removed
-    best-effort only after the publish commit point."""
-    gen = int(manifest.get("generation", 0)) + 1
-    members_base = f"members_base_{gen:05d}"
-    bands_base = f"bands_base_{gen:05d}"
-
-    # per-delta read (bounded by compact_every) so legacy deltas written
-    # without the src_batch provenance column can be backfilled from
-    # their batch id — the base ALWAYS carries src_batch, which is what
-    # makes retried already-compacted batches answerable
-    parts = []
-    if manifest.get("base"):
-        parts.append(state.read(manifest["base"]["members"]))
-    for entry in manifest["batches"]:
-        df = state.read(entry["members"])
-        if "src_batch" not in df.columns:
-            df = df.withColumn("src_batch", F.lit(_entry_batch_id(entry)))
-        parts.append(df)
-    members = parts[0]
-    for p in parts[1:]:
-        members = members.unionByName(p)
-    state.write(members_base, members)
-    bands = spark.read.parquet(*_state_band_paths(state, manifest))
-    state.write(bands_base, bands)
-
-    compacted_through = max(
-        [int(manifest.get("compacted_through", -1))]
-        + [_entry_batch_id(b) for b in manifest["batches"]]
-    )
-    old_dirs = [d for b in manifest["batches"] for d in (b["members"], b["bands"])]
-    if manifest.get("base"):
-        old_dirs += [manifest["base"]["members"], manifest["base"]["bands"]]
-    new_manifest = {
-        "generation": gen,
-        "base": {"members": members_base, "bands": bands_base},
-        "batches": [],
-        "compacted_through": compacted_through,
-    }
-    publish_json(spark, state.path(_MANIFEST), new_manifest)  # commit point
-
-    for d in old_dirs:
-        fsio.delete(spark, state.path(d))  # best-effort, post-commit
-    return new_manifest
-
-
-def _migrate_legacy_state(spark: SparkSession, state: TableIO, cfg: LinkageConfig) -> dict:
+def _migrate_legacy_state(spark: SparkSession, log: StateLog, cfg: LinkageConfig) -> None:
     """One-time upgrade of pre-manifest state dirs: backfill missing sig
     columns from content, derive band deltas from the persisted sigs,
     publish the manifest. A genuine read error on existing state
     propagates — only truly-missing state may start fresh."""
+    state = log.io
     entries = sorted(
         d for d in fsio.list_names(spark, str(state.base))
         if d.startswith("members_delta_")
         and not d.endswith("m")
         and fsio.is_dir(spark, state.path(d))
     )
-    manifest: dict = {"batches": []}
     replaced: list[str] = []
     for d in entries:
         members = state.read(d)
@@ -202,13 +137,13 @@ def _migrate_legacy_state(spark: SparkSession, state: TableIO, cfg: LinkageConfi
             members_name = d
         bands_name = "bands" + members_name.removeprefix("members")
         state.write(bands_name, _bands(members.select("file_id", "lang", "sig"), cfg))
-        manifest["batches"].append({"members": members_name, "bands": bands_name})
-    publish_json(spark, state.path(_MANIFEST), manifest)
+        # no batch_id field: StateLog reads it off the directory name
+        log.entries.append({"members": members_name, "bands": bands_name})
+    log.publish()
     # the manifest is now the source of truth; drop superseded legacy
     # dirs so naive directory readers can't double-count (best-effort)
     for d in replaced:
         fsio.delete(spark, state.path(d))
-    return manifest
 
 
 def incremental_link_batch(
@@ -240,31 +175,22 @@ def incremental_link_batch(
             f"key_cols) must be {_LAYOUT}"
         )
     spark = batch.sparkSession
-    manifest = read_json(spark, state.path(_MANIFEST))
-    if manifest is None and any(
+    log = _state_log(state)
+    if not log.paths("members") and any(
         d.startswith("members_delta_")
         for d in fsio.list_names(spark, str(state.base))  # Hadoop-FS, ADVICE r3 #4
     ):
-        manifest = _migrate_legacy_state(spark, state, cfg)
+        _migrate_legacy_state(spark, log, cfg)
 
     # idempotent commit (ADVICE r3 #1): foreachBatch is at-least-once —
     # a retry of an already-committed batch_id must NOT append its delta
     # a second time (doubling state rows for every later batch). Return
     # the committed assignments instead.
-    if manifest is not None:
-        for entry in manifest["batches"]:
-            if _entry_batch_id(entry) == batch_id:
-                return state.read(entry["members"]).select("file_id", "cluster_id")
-        if batch_id <= int(manifest.get("compacted_through", -1)):
-            # the delta was folded into the base; its rows carry
-            # src_batch provenance (predicate-prunable columnar filter)
-            return (
-                state.read(manifest["base"]["members"])
-                .filter(F.col("src_batch") == batch_id)
-                .select("file_id", "cluster_id")
-            )
+    done = log.committed(batch_id, "members")
+    if done is not None:
+        return done.select("file_id", "cluster_id")
 
-    have_state = bool(manifest and (manifest["batches"] or manifest.get("base")))
+    have_state = bool(log.paths("members"))
 
     # batch-scoped persists (and the IDF broadcast and the links
     # checkpoint), released at the end of the batch — a long-running
@@ -282,10 +208,10 @@ def incremental_link_batch(
         new_sigs = _persist(_signatures(batch, cfg))
 
         if have_state:
-            old = spark.read.parquet(*_state_member_paths(state, manifest))
+            old = spark.read.parquet(*log.paths("members"))
             # state bands come straight off parquet — derived ONCE at
             # write time; no per-batch re-explode of the state sig table
-            ob = spark.read.parquet(*_state_band_paths(state, manifest))
+            ob = spark.read.parquet(*log.paths("bands"))
             nb = _bands(new_sigs, cfg)
             cand = _persist(
                 nb.alias("n")
@@ -368,34 +294,22 @@ def incremental_link_batch(
             .join(new_sigs.select("file_id", "sig"), "file_id")
             .withColumn("src_batch", F.lit(batch_id))
         )
-        members_name = f"members_delta_{batch_id:05d}"
-        bands_name = f"bands_delta_{batch_id:05d}"
+        members_name = log.delta_name("members", batch_id)
+        bands_name = log.delta_name("bands", batch_id)
         state.write(members_name, new_members)
         state.write(
             bands_name, _bands(state.read(members_name).select("file_id", "lang", "sig"), cfg)
         )
-        manifest = manifest or {"batches": []}
-        manifest["batches"].append(
-            {"members": members_name, "bands": bands_name, "batch_id": batch_id}
-        )
-        publish_json(spark, state.path(_MANIFEST), manifest)
-        if compact_every and len(manifest["batches"]) >= compact_every:
-            # compaction runs AFTER the batch commit point: a failure here
-            # (or a crash mid-compaction) never loses the batch — the next
-            # batch just sees an uncompacted manifest and retries
-            manifest = _compact_state(spark, state, manifest)
+        log.commit(batch_id, {"members": members_name, "bands": bands_name})
+        # compaction runs AFTER the batch commit point: a failure here
+        # (or a crash mid-compaction) never loses the batch — the next
+        # batch just sees an uncompacted manifest and retries
+        log.compact(compact_every)
         # return the COMMITTED assignments (a parquet scan of committed
         # state, never the live plan): the caller may act on this after
         # the batch's cached inputs are released below, and must not
-        # re-trigger the linkage plan. If compaction just folded this
-        # batch's delta away, read it back from the base via src_batch.
-        if any(b["members"] == members_name for b in manifest["batches"]):
-            return state.read(members_name).select("file_id", "cluster_id")
-        return (
-            state.read(manifest["base"]["members"])
-            .filter(F.col("src_batch") == batch_id)
-            .select("file_id", "cluster_id")
-        )
+        # re-trigger the linkage plan
+        return log.committed(batch_id, "members").select("file_id", "cluster_id")
     finally:
         for df in to_unpersist:
             df.unpersist()

@@ -13,3 +13,15 @@ def spark():
     s = get_spark(app_name="cogie_spark_tests", master=f"local[{cpus}]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_leaked_rdds(spark):
+    """Fail the test if an RDD it persisted or localCheckpointed is still
+    persisted when it ends. Ids, not a count: the context cleaner may
+    drop other tests' garbage-collected caches meanwhile."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    yield
+    left = set(rdds().keySet()) - before
+    assert not left, f"test left persisted RDDs {sorted(left)}"

@@ -17,6 +17,8 @@ from cogie_spark.io.tableio import TableIO
 from cogie_spark.plans.linkage import LinkageConfig, run_linkage
 from cogie_spark.streaming.incremental import incremental_link_batch
 
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
+
 
 def _persistent_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

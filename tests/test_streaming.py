@@ -7,11 +7,14 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from cogie_spark.fixtures.codefiles import code_files
 from cogie_spark.io.tableio import TableIO, read_json
 from cogie_spark.streaming.incremental import incremental_link_batch
+
+pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
 
 def test_incremental_two_batches(spark):
@@ -61,6 +64,7 @@ def test_incremental_two_batches(spark):
         by_group.setdefault(gid, set()).add(got[fid])
     frag = {g: cs for g, cs in by_group.items() if len(cs) > 1}
     assert not frag, f"groups split across clusters: {frag}"
+    files.unpersist()
 
 
 def test_state_bands_persisted_not_recomputed(spark):
@@ -99,6 +103,7 @@ def test_state_bands_persisted_not_recomputed(spark):
     bands = spark.read.parquet(*[str(state.base / b["bands"]) for b in manifest["batches"]])
     assert bands.count() == files.count() * 16  # 16 bands per file
     assert set(bands.columns) == {"file_id", "lang", "band_id", "band_hash"}
+    files.unpersist()
 
 
 def test_legacy_state_migration(spark):
@@ -135,6 +140,7 @@ def test_legacy_state_migration(spark):
         1 for fid, cid in got.items() if cid == legacy_cluster_by_group.get(truth[fid])
     )
     assert joined >= int(0.9 * b2.count()), (joined, b2.count())
+    files.unpersist()
 
 
 def test_stream_wiring_availablenow(spark):
@@ -182,14 +188,15 @@ def test_corrupt_state_raises_not_relinks(spark):
 
 
 def _slices(spark, n_groups, n_batches, seed=42):
-    """Deterministic round-robin split of the fixture into micro-batches."""
+    """Deterministic round-robin split of the fixture into micro-batches,
+    after the cached numbered table they filter (the caller releases it)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as FF
 
     files = code_files(spark, n_groups=n_groups, seed=seed)
     w = Window.orderBy("file_id")
     numbered = files.withColumn("_rn", FF.row_number().over(w)).cache()
-    return [
+    return numbered, [
         numbered.filter(FF.col("_rn") % n_batches == i).drop("_rn")
         for i in range(n_batches)
     ]
@@ -204,7 +211,7 @@ def test_compaction_bounds_manifest_and_preserves_assignments(spark):
 
     import cogie_spark.streaming.incremental as inc_mod
 
-    batches = _slices(spark, n_groups=10, n_batches=6)
+    numbered, batches = _slices(spark, n_groups=10, n_batches=6)
     compacted = TableIO(spark, tempfile.mkdtemp(prefix="cogie_compact_"))
     plain = TableIO(spark, tempfile.mkdtemp(prefix="cogie_plain_"))
     for i, b in enumerate(batches):
@@ -218,7 +225,7 @@ def test_compaction_bounds_manifest_and_preserves_assignments(spark):
     got_c = {
         (r["file_id"], r["cluster_id"])
         for r in spark.read.parquet(
-            *inc_mod._state_member_paths(compacted, manifest)
+            *inc_mod._state_log(compacted).paths("members")
         ).select("file_id", "cluster_id").collect()
     }
     plain_manifest = json.loads((plain.base / "_state_manifest.json").read_text())
@@ -226,7 +233,7 @@ def test_compaction_bounds_manifest_and_preserves_assignments(spark):
     got_p = {
         (r["file_id"], r["cluster_id"])
         for r in spark.read.parquet(
-            *inc_mod._state_member_paths(plain, plain_manifest)
+            *inc_mod._state_log(plain).paths("members")
         ).select("file_id", "cluster_id").collect()
     }
     assert got_c == got_p, "compaction changed assignments"
@@ -236,6 +243,7 @@ def test_compaction_bounds_manifest_and_preserves_assignments(spark):
     }
     on_disk = {d.name for d in compacted.base.iterdir() if d.is_dir()}
     assert on_disk == live, f"orphaned dirs: {on_disk - live}"
+    numbered.unpersist()
 
 
 def test_retry_is_idempotent(spark):
@@ -245,7 +253,7 @@ def test_retry_is_idempotent(spark):
     into the compacted base)."""
     import json
 
-    batches = _slices(spark, n_groups=8, n_batches=3)
+    numbered, batches = _slices(spark, n_groups=8, n_batches=3)
     state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_retry_"))
     a0 = incremental_link_batch(batches[0], state, batch_id=0, compact_every=0)
     n0 = a0.count()
@@ -269,6 +277,7 @@ def test_retry_is_idempotent(spark):
     assert retry0.count() == n0
     manifest2 = json.loads((state.base / "_state_manifest.json").read_text())
     assert manifest2 == manifest, "retry of a compacted batch mutated the manifest"
+    numbered.unpersist()
 
 
 def test_compaction_crash_before_publish_keeps_state_readable(spark, monkeypatch):
@@ -279,30 +288,31 @@ def test_compaction_crash_before_publish_keeps_state_readable(spark, monkeypatch
 
     import pytest
 
+    import cogie_spark.io.tableio as tableio_mod
     import cogie_spark.streaming.incremental as inc_mod
 
-    batches = _slices(spark, n_groups=8, n_batches=3)
+    numbered, batches = _slices(spark, n_groups=8, n_batches=3)
     state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_crash_"))
     for i, b in enumerate(batches[:2]):
         incremental_link_batch(b, state, batch_id=i, compact_every=0)
     before = json.loads((state.base / "_state_manifest.json").read_text())
     total = spark.read.parquet(
-        *inc_mod._state_member_paths(state, before)
+        *inc_mod._state_log(state).paths("members")
     ).count()
 
     def exploding(spark_, path, manifest):
         raise RuntimeError("simulated crash at the commit point")
 
-    # the shared manifest publish helper, as the stream module calls it
+    # the manifest publish helper, as StateLog calls it
     with monkeypatch.context() as m:
-        m.setattr(inc_mod, "publish_json", exploding)
+        m.setattr(tableio_mod, "publish_json", exploding)
         with pytest.raises(RuntimeError):
-            inc_mod._compact_state(spark, state, dict(before))
+            inc_mod._state_log(state).compact(2)
 
     after = json.loads((state.base / "_state_manifest.json").read_text())
     assert after == before, "crashed compaction mutated the committed manifest"
     assert spark.read.parquet(
-        *inc_mod._state_member_paths(state, after)
+        *inc_mod._state_log(state).paths("members")
     ).count() == total
 
     # the next batch triggers a clean compaction over the same deltas
@@ -312,6 +322,7 @@ def test_compaction_crash_before_publish_keeps_state_readable(spark, monkeypatch
     assert spark.read.parquet(
         str(state.base / final["base"]["members"])
     ).count() >= total
+    numbered.unpersist()
 
 
 def test_stream_wiring_with_compaction(spark):
@@ -345,6 +356,7 @@ def test_stream_wiring_with_compaction(spark):
     assert base.select("file_id").distinct().count() == files.count()
     # cluster count equals group count: wave-2 duplicates joined wave-1
     assert base.select("cluster_id").distinct().count() == 6
+    files.unpersist()
 
 
 def test_uri_base_manifest_publish_and_compaction_cleanup(spark):
@@ -363,7 +375,7 @@ def test_uri_base_manifest_publish_and_compaction_cleanup(spark):
     state = TableIO(spark, f"file://{local}")
     assert isinstance(state.base, str) and state.base.startswith("file://")
 
-    batches = _slices(spark, n_groups=8, n_batches=4)
+    numbered, batches = _slices(spark, n_groups=8, n_batches=4)
     for i, b in enumerate(batches):
         incremental_link_batch(b, state, batch_id=i, compact_every=2)
 
@@ -384,7 +396,7 @@ def test_uri_base_manifest_publish_and_compaction_cleanup(spark):
     assert on_disk == live, f"orphaned dirs: {on_disk - live}"
 
     # state reads resolve through the URI paths
-    members = spark.read.parquet(*inc_mod._state_member_paths(state, manifest))
+    members = spark.read.parquet(*inc_mod._state_log(state).paths("members"))
     total = sum(b.count() for b in batches)
     assert members.count() == total
 
@@ -393,6 +405,7 @@ def test_uri_base_manifest_publish_and_compaction_cleanup(spark):
     retry = incremental_link_batch(batches[0], state, batch_id=0, compact_every=2)
     assert retry.count() == batches[0].count()
     assert read_json(spark, state.path(inc_mod._MANIFEST)) == manifest
+    numbered.unpersist()
 
 
 def test_checkpoint_manager_uri_base(spark):
@@ -481,6 +494,60 @@ def test_corpus_stream_compaction_preserves_dedup(spark):
     assert [r["doc_id"] for r in k0r.collect()] == [100]
 
 
+def test_corpus_stream_reads_earlier_layout_state(spark):
+    """State written under the corpus stream's earlier layout — kept_N /
+    hashes_N deltas and a hash_base_0 base carrying ``gen`` — keeps
+    resolving: retries, cross-batch dedup and the next compaction."""
+    import json
+
+    from cogie_spark.plans.corpus import CorpusConfig, kept_from_docs
+    from cogie_spark.streaming.corpus import _MANIFEST, incremental_clean_batch
+
+    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_corpus_old_"))
+    cfg = CorpusConfig(redact=False)
+    texts = [_GOOD + f" variant number {b} of the corpus" for b in range(3)]
+    for b, text in enumerate(texts):
+        kept = kept_from_docs(_docs(spark, [(100 + b, text)]), cfg, hash_col="sha256")
+        state.write(f"kept_{b}", kept.withColumn("src_batch", F.lit(b)))
+    # batches 0 and 1 already folded into the base, batch 2 still a delta
+    state.write("hashes_2", state.read("kept_2").select("sha256", "src_batch"))
+    state.write(
+        "hash_base_0",
+        spark.read.parquet(state.path("kept_0"), state.path("kept_1"))
+        .select("sha256", "src_batch"),
+    )
+    (state.base / _MANIFEST).write_text(json.dumps({
+        "batches": [
+            {"batch_id": 0, "kept": "kept_0"},
+            {"batch_id": 1, "kept": "kept_1"},
+            {"batch_id": 2, "kept": "kept_2", "hashes": "hashes_2"},
+        ],
+        "base": {"hashes": "hash_base_0", "gen": 0},
+        "compacted_through": 1,
+    }))
+
+    # a retry of a listed batch returns its committed kept rows
+    k0r = incremental_clean_batch(_docs(spark, [(100, texts[0])]), state, cfg, batch_id=0)
+    assert [r["doc_id"] for r in k0r.collect()] == [100]
+
+    # a duplicate of a doc whose hash lives only in hash_base_0 is
+    # dropped; this batch's delta makes two, so it compacts
+    b3 = _docs(spark, [(200, texts[0]), (201, _GOOD + " genuinely new content")])
+    k3 = incremental_clean_batch(b3, state, cfg, batch_id=3, compact_every=2)
+    assert [r["doc_id"] for r in k3.collect()] == [201]
+
+    m = read_json(spark, state.path(_MANIFEST))
+    assert m["generation"] == 1 and m["compacted_through"] == 3
+    assert [e["batch_id"] for e in m["batches"]] == [0, 1, 2, 3]
+    assert not any("hashes" in e for e in m["batches"])
+    live = set(m["base"].values()) | {e["kept"] for e in m["batches"]}
+    on_disk = {d.name for d in state.base.iterdir() if d.is_dir()}
+    assert on_disk == live, f"orphaned dirs: {on_disk - live}"
+    # the new base still admits each hash once, from its first batch
+    base = {r["sha256"]: r["src_batch"] for r in state.read(m["base"]["hashes"]).collect()}
+    assert sorted(base.values()) == [0, 1, 2, 3]
+
+
 def test_corpus_stream_wiring_availablenow(spark):
     from cogie_spark.plans.corpus import CorpusConfig
     from cogie_spark.streaming.corpus import start_corpus_stream
@@ -550,7 +617,7 @@ def test_corpus_stream_near_dup_admission_gate(spark):
     with _pytest.raises(ValueError, match="pinned"):
         incremental_clean_batch(
             _docs(spark, [(99, _ESSAY + " tail")]), state, cfg,
-            batch_id=2, near_dup=True, nd_num_perm=64,
+            batch_id=2, near_dup=True, jaccard_threshold=0.8,
         )
 
 
