@@ -1,10 +1,7 @@
 from cogie_spark.functions.hashing import (  # noqa: F401
     h64,
-    h64_sql,
     minhash_bands,
-    minhash_signature,
     simhash64,
-    stable_id,
 )
 from cogie_spark.functions.text import (  # noqa: F401
     char_shingles,

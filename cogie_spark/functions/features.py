@@ -1,10 +1,9 @@
-"""Feature-building scalar functions (SURVEY.md §2.8 F4/F5/F12/F15).
+"""Feature-building scalar functions (SURVEY.md §2.8 F4 and W6).
 
 The reference builds fixed-width token-id tensors with quota math and
 padding (/root/reference/cogie/toolkit/el/el_toolkit.py:209-236);
-Spark arrays are variable-length so padding is usually unnecessary —
-these exist for parity and for consumers that need rectangular output
-(e.g. Arrow hand-off to a training framework).
+Spark arrays are variable-length, so padding is unnecessary; what
+remains is the quota math and the distance-bucket code.
 """
 
 from __future__ import annotations
@@ -69,19 +68,3 @@ def dis2idx(dist: Column | str) -> Column:
     return (
         F.when(d == 0, 19).when(d < 0, mag + 9).otherwise(mag).cast("int")
     )
-
-
-def pad_to(col: Column | str, n: int, pad=0) -> Column:
-    """F5: fixed-length padding (el_toolkit.py:234-236) — truncate to n
-    or right-pad with ``pad``."""
-    c = F.col(col) if isinstance(col, str) else col
-    truncated = F.slice(c, 1, n)
-    padding = F.array_repeat(F.lit(pad), F.greatest(F.lit(n) - F.size(c), F.lit(0)))
-    return F.concat(truncated, padding)
-
-
-def seq_len_mask(length: Column | str, max_len: int) -> Column:
-    """F15: seq_len -> boolean mask
-    (/root/reference/cogie/core/utils.py:627)."""
-    c = F.col(length) if isinstance(length, str) else length
-    return F.transform(F.sequence(F.lit(1), F.lit(max_len)), lambda i: i <= c)

@@ -35,24 +35,6 @@ def h64(col: Column | str, salt: str = "") -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def h64_sql(expr: str, salt: str = "") -> str:
-    """The DuckDB-side SQL text equivalent of :func:`h64` (for oracles)."""
-    inner = f"'{salt}:' || {expr}" if salt else expr
-    return f"('0x' || substring(md5({inner}), 1, 15))::BIGINT"
-
-
-def stable_id(*cols: Column | str) -> Column:
-    """Stable node id = sha256 over the natural key (SURVEY.md §7.3:
-    connected-components needs a total order on node ids).
-
-    Mirrors the reference's dense ``local_idx`` assignment
-    (/root/reference/cogie/utils/util.py:427-444) but is order-free and
-    therefore safe under distributed, re-partitioned input.
-    """
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.sha2(F.concat_ws("", *cs), 256)
-
-
 # Linear-permutation MinHash family over a single base hash:
 #   base(s)  = top 28 bits of md5(s)            (one md5 per shingle)
 #   perm_i(h)= (a_i * h + b_i) mod P            (exact int64, no overflow:
@@ -71,37 +53,6 @@ def _perm_coeffs(i: int) -> tuple[int, int]:
 def base_hash28(col: Column) -> Column:
     """Portable 28-bit base hash: ('0x'||substring(md5(x),1,7))::BIGINT."""
     return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("bigint")
-
-
-def minhash_signature(shingles: Column, num_perm: int) -> Column:
-    """MinHash signature: array of ``num_perm`` BIGINT minima.
-
-    One md5 per shingle, then ``num_perm`` linear permutations — the
-    standard k-permutation construction, kept cheap enough to run per row
-    at 10^12-file scale. Pure built-in exprs (transform + array_min),
-    whole-stage codegen'd. Replaces the role of the reference's
-    bi-encoder+FAISS retrieval
-    (/root/reference/cogie/toolkit/el/el_toolkit.py:511-535).
-    """
-    return minhash_from_hashes(F.transform(shingles, base_hash28), num_perm)
-
-
-def minhash_from_hashes(hashes: Column, num_perm: int) -> Column:
-    """Signature from precomputed base hashes. Callers should materialize
-    the base-hash array in its own projection first (operators/blocking.py
-    does) so the md5 pass runs once, not ``num_perm`` times.
-    """
-    def perm(a: int, b: int):
-        # unary closure — PySpark maps lambda arity to HOF arg count,
-        # so default-arg tricks would mis-declare a 3-arg lambda
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    mins = []
-    for i in range(num_perm):
-        a, b = _perm_coeffs(i)
-        mins.append(F.array_min(F.transform(hashes, perm(a, b))))
-    return F.array(*mins)
-
 
 
 def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:

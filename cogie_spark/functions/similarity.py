@@ -501,14 +501,3 @@ def cosine_native(a: Column | str, b: Column | str, dim: int | None = None) -> C
     na = F.aggregate(ca, F.lit(0.0), lambda acc, v: acc + v * v)
     nb = F.aggregate(cb, F.lit(0.0), lambda acc, v: acc + v * v)
     return dot / F.sqrt(na * nb)
-
-
-@pandas_udf(DoubleType())
-def simhash_hamming64(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Hamming distance between two int64 SimHash columns (vectorized)."""
-    x = a.to_numpy(dtype=np.uint64) ^ b.to_numpy(dtype=np.uint64)
-    cnt = np.zeros(len(x), dtype=np.float64)
-    for _ in range(64):
-        cnt += (x & np.uint64(1)).astype(np.float64)
-        x >>= np.uint64(1)
-    return pd.Series(cnt)

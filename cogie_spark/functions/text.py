@@ -86,46 +86,3 @@ def word_ngrams(col: Column | str, n: int = 3, distinct: bool = True) -> Column:
     # sequence(1, 1) form emitted concat_ws of an empty slice)
     grams = F.when(F.size(toks) == F.lit(0), F.array(F.lit(""))).otherwise(grams)
     return F.array_distinct(grams) if distinct else grams
-
-
-def nltk_tokens_udf():
-    """F1 full-parity tokenizer: a vectorized pandas UDF wrapping
-    ``nltk.word_tokenize`` — the reference's TokenizeToolkit
-    (/root/reference/cogie/toolkit/tokenize/tokenize_toolkit.py:52-55).
-
-    OPTIONAL: nltk (and its punkt data) is not shipped in this sandbox,
-    so the UDF is built lazily and raises a clear ImportError when nltk
-    is unavailable. The engine's default tokenizers (whitespace
-    :func:`tokens` and the BPE-ish regex in operators/textstats.py) are
-    the portable, oracle-checkable paths; this exists for users who
-    need byte-level parity with the reference's NLTK tokenization.
-    """
-    try:
-        import nltk  # noqa: F401
-        from nltk.tokenize import word_tokenize
-    except ImportError as e:  # pragma: no cover - sandbox has no nltk
-        raise ImportError(
-            "nltk_tokens_udf requires the optional 'nltk' package "
-            "(pip install nltk; python -m nltk.downloader punkt). "
-            "Use cogie_spark.functions.text.tokens for the portable path."
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(word_tokenize)
-
-    return _tok
-
-
-def shingles_sql(expr: str, k: int = 8, distinct: bool = True) -> str:
-    """DuckDB SQL text equivalent of :func:`char_shingles` (for oracles)."""
-    norm = f"trim(regexp_replace(lower({expr}), '\\s+', ' ', 'g'))"
-    base = (
-        f"list_transform(range(1, greatest(length({norm}) - {k - 2}, 2)), "
-        f"i -> substring({norm}, i::INT, {k}))"
-    )
-    return f"list_distinct({base})" if distinct else base

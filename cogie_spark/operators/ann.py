@@ -46,8 +46,8 @@ def brute_force_topk(
 
     Output: (probe_id, vec_id, cosine, rank). Deterministic tie-break on
     vec_id. Cost is |probes| * |corpus| vector ops, all JVM-side
-    (zip_with/aggregate) — the right baseline and the recall oracle for
-    the bucketed variant.
+    (zip_with/aggregate) — the exact baseline the IVF path is checked
+    against.
 
     Pass ``dim`` when known: omitting it costs one bounded ``first()``
     probe job at plan-build time (ann.infer_dim).
@@ -198,37 +198,6 @@ def infer_dim(df: DataFrame, vec_col: str = "embedding", strict: bool = False) -
     return int(row["d"])
 
 
-def lsh_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Random-hyperplane LSH bucket id per vector (sign-bit code).
-
-    Projections are derived from the portable hash family — no model
-    state to ship; any driver rebuilds the same planes. Output:
-    (vec_id, bucket, embedding).
-    """
-    dim = dim or infer_dim(df, vec_col)
-    base = df.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("_v")
-    )
-    if n_bits * dim > CODEGEN_NODE_BUDGET:
-        codes = _band_codes_arrow(1, n_bits, dim)
-        return base.select(
-            "vec_id",
-            F.element_at(codes(F.col("_v")), 1).alias("bucket"),
-            F.col("_v").alias("embedding"),
-        )
-    v = F.col("_v")
-    bucket = F.lit(0).cast("long")
-    for b in range(n_bits):
-        bucket = bucket * 2 + _plane_sign(v, plane_weights(b, dim))
-    return base.select("vec_id", bucket.alias("bucket"), F.col("_v").alias("embedding"))
-
-
 def lsh_band_table(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -269,41 +238,6 @@ def lsh_band_table(
         "vec_id",
         F.col("_band.band_id").alias("band_id"),
         F.col("_band.band_hash").alias("band_hash"),
-    )
-
-
-def bucketed_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    n_bits: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: probes only score corpus vectors in the same
-    LSH bucket — the sub-linear scale path (candidate recall traded for
-    a |corpus|/2^n_bits expected fan-in per probe).
-
-    Pass ``dim`` when known: omitting it costs ONE bounded ``first()``
-    probe job here (never two — the inferred width is forwarded to both
-    bucket builds and the cosine)."""
-    dim = dim or infer_dim(corpus, vec_col)
-    cb = lsh_buckets(corpus, id_col=id_col, vec_col=vec_col, n_bits=n_bits, dim=dim)
-    pb = lsh_buckets(probes, id_col=probe_id_col, vec_col=vec_col, n_bits=n_bits, dim=dim).select(
-        F.col("vec_id").alias("probe_id"), "bucket", F.col("embedding").alias("_pv")
-    )
-    scored = (
-        cb.join(F.broadcast(pb), "bucket")
-        .withColumn("cosine", F.round(cosine_native(F.col("_pv"), F.col("embedding"), dim=dim), 6))
-        .select("probe_id", "vec_id", "cosine")
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "vec_id", "cosine", "rank")
     )
 
 

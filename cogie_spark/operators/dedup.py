@@ -387,16 +387,6 @@ def contamination_tags(
     )
 
 
-def simhash_table(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
-    """Per-document SimHash value (token-level). 16-bit default keeps the
-    expression tree small; pair with hamming distance (pandas UDF
-    ``simhash_hamming64``) or bucket on the value for near-dup grouping."""
-    return df.select(
-        F.col(id_col).alias("doc_id_out"),
-        simhash64(tokens(text_col), bits=bits).alias("simhash"),
-    )
-
-
 def simhash_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -612,232 +602,3 @@ def semantic_duplicates(
     for df in cp_caches:
         df.unpersist()
     return verified
-
-
-def substring_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 50,
-    winnow: int = 1,
-    scope_col: str | None = None,
-) -> DataFrame:
-    """Cross-document exact SUBSTRING dedup: excise every repeated
-    ``k``-token passage except its first-seen occurrence.
-
-    The dedup mode the row-level family (exact/MinHash/SimHash) cannot
-    express: two long documents that share one boilerplate passage are
-    NOT near-duplicates of each other, yet the passage is still
-    duplicated training text (Lee et al. 2022, "Deduplicating Training
-    Data Makes Language Models Better", arXiv:2107.06499 — the
-    suffix-array ExactSubstr dedup; this is its scalable
-    fingerprint-window restatement: every length-``k`` token window is
-    fingerprinted, a fingerprint seen more than once keeps only the
-    globally first occurrence by (doc id, position), and all other
-    occurrences are merged into excision intervals).
-
-    Output: the input rows with ``text_col`` rebuilt from the kept
-    tokens plus ``n_tokens_removed`` / ``n_spans_removed`` audit
-    columns. Tokens are whitespace-delimited and the rebuilt text is
-    single-space joined — the operator's contract is token-stream
-    fidelity, not byte fidelity (same as the reference-class tools,
-    which operate on token ids). A NULL ``text_col`` passes through as
-    NULL with zero-valued audit columns.
-
-    Correctness guards (each review-found and regression-tested):
-
-    - **The kept first occurrence is never eroded.** Same-fingerprint
-      windows that OVERLAP the owner's window inside the owner doc are
-      not excised (content with self-repeat period < k — boilerplate
-      runs, markup — previously lost its canonical copy too; now up to
-      k-1 repeat tokens adjacent to the first occurrence survive
-      instead, the safe direction).
-    - **128-bit effective fingerprints.** Windows key on TWO xxhash64
-      values under independent seeds; a false excision needs both to
-      collide (~n^2/2^129 — negligible at the 10^12-window scale where
-      single-64-bit birthday collisions would excise millions of
-      unique passages).
-    - **Alignment-independent subsampling.** ``winnow`` > 1 selects
-      ~1/winnow of window starts by WINNOWING (Schleimer et al. 2003,
-      the q29 fingerprint trick): each run of ``winnow`` consecutive
-      starts contributes its min-fingerprint position, so selection is
-      content-defined — both copies of a shared passage select the
-      SAME interior windows no matter their offsets (a positional
-      stride misses offsets differing mod stride entirely), and
-      consecutive selections are <= winnow apart so their k-token
-      spans always merge (winnow <= k enforced), and the LAST window
-      start is always selected (tail guard — see the inline comment).
-      Precision cost: up to winnow-1 leaked duplicate tokens per
-      passage edge (2*(winnow-1) per passage); detection needs
-      passages ~k + 2*winnow tokens long (boundary winnowing windows
-      see differing context per copy).
-
-    Scale shape (10^12 files): ONE explode to (doc, pos, fp128) rows —
-    ~corpus tokens / ``winnow``. Owner detection is groupBy (map-side
-    combine collapses hot boilerplate fingerprints to one row per map
-    partition BEFORE the exchange — the skew protection; a window over
-    the fingerprint key would buffer+sort a 10^8-occurrence header
-    fingerprint in one task) + a streaming join back of the small
-    repeated-only owners table; then one groupBy doc folding duplicate
-    windows into merged intervals, one join to the input on
-    ``id_col``. Interval merge and token excision are pure
-    higher-order expressions — zero Python in any row path.
-    ``scope_col`` (e.g. lang) joins the partition key directly (exact
-    isolation — a salt hash could collide scopes), so dedup never
-    crosses scopes; use short low-cardinality scope keys.
-    """
-    if k < 2:
-        raise ValueError(f"k must be >= 2 (got {k})")
-    if not 1 <= winnow <= k:
-        raise ValueError(f"winnow must be in [1, k={k}] (got {winnow})")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    base = df.withColumn("_toks", toks)
-    # all window fingerprints: xxhash64 over the k-token slice
-    # (US-separated so token boundaries can't alias); a doc shorter
-    # than k tokens (or NULL text: size = -1) has no windows
-    base = base.withColumn(
-        "_hs",
-        F.expr(
-            f"CASE WHEN size(_toks) < {k} THEN cast(array() as array<bigint>) "
-            f"ELSE transform(sequence(0, size(_toks) - {k}), "
-            f"i -> xxhash64(concat_ws('\\u001f', slice(_toks, i + 1, {k})))) END"
-        ),
-    )
-    # selected window starts: every start at winnow=1, else winnowing
-    # (leftmost-min per run of `winnow` consecutive fingerprints —
-    # content-defined, so duplicate passages select identically)
-    if winnow == 1:
-        sel_sql = (
-            "CASE WHEN size(_hs) = 0 THEN cast(array() as array<int>) "
-            "ELSE sequence(0, size(_hs) - 1) END"
-        )
-    else:
-        # the last window start is always selected (tail guard): with
-        # tied fingerprints in a run (self-repeating content, period <
-        # winnow) leftmost-min never selects past size-winnow, and for
-        # a doc barely longer than k the ONLY start clear of the kept
-        # first occurrence (start >= k) can sit in that unselected
-        # tail — 'na'*100 @ k=50, winnow=4 previously removed nothing
-        sel_sql = (
-            f"CASE WHEN size(_hs) = 0 THEN cast(array() as array<int>) "
-            f"ELSE array_distinct(concat(transform("
-            f"sequence(0, greatest(size(_hs) - {winnow}, 0)), "
-            f"p -> cast(p + array_position(slice(_hs, p + 1, {winnow}), "
-            f"array_min(slice(_hs, p + 1, {winnow}))) - 1 AS int)), "
-            f"array(cast(size(_hs) - 1 AS int)))) END"
-        )
-    base = base.withColumn("_sel", F.expr(sel_sql))
-    # second fingerprint under an independent seed, for SELECTED starts
-    # only (leading literal reseeds xxhash64 BEFORE the content — the
-    # trailing-literal form xxhash64(s, 1) is a pure function of
-    # xxhash64(s) and adds no collision protection)
-    wins = base.select(
-        F.col(id_col).alias("_did"),
-        (F.col(scope_col) if scope_col else F.lit(0)).alias("_scope"),
-        F.explode(
-            F.expr(
-                f"transform(_sel, i -> named_struct("
-                f"'s', cast(i as bigint), "
-                f"'h1', element_at(_hs, i + 1), "
-                f"'h2', xxhash64(1, concat_ws('\\u001f', slice(_toks, i + 1, {k})))))"
-            )
-        ).alias("_w"),
-    ).select(
-        "_did",
-        "_scope",
-        F.col("_w.s").alias("_start"),
-        F.col("_w.h1").alias("_h1"),
-        F.col("_w.h2").alias("_h2"),
-    )
-    # first-seen owner per repeated fingerprint: min (doc, start) via
-    # groupBy + join back, NOT a window over the fingerprint key. The
-    # hot keys are this operator's entire point (a license header
-    # repeated 10^7-10^8 times at 10^12-token scale): WindowExec must
-    # buffer AND sort every occurrence of such a fingerprint inside one
-    # task (ExternalAppendOnlyUnsafeRowArray spill -> multi-hour
-    # straggler), while groupBy's partial aggregation collapses a hot
-    # key to ONE row per map partition before the exchange, and the
-    # join back streams — skew-free on both sides. Cost: the owners
-    # table is a second (partial-agg-shrunk) shuffle and the probe side
-    # re-evaluates the narrow explode/hash pipeline once more; both are
-    # linear and parallel, unlike the window's single-task hot group.
-    keys = ["_scope", "_h1", "_h2"]
-    owners = (
-        wins.groupBy(*keys)
-        .agg(
-            F.min(F.struct("_did", "_start")).alias("_own"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        # only repeated fingerprints survive — typically a small
-        # fraction of all windows, so AQE often broadcasts this side
-        .filter(F.col("_n") > 1)
-        .select(*keys, "_own")
-    )
-    dup_wins = (
-        wins.join(owners, keys)
-        # excise every occurrence EXCEPT windows overlapping the kept
-        # first occurrence in the owner doc itself (within the owner
-        # doc _start > _own._start always, so >= start+k is exactly
-        # "clear of the kept copy")
-        .filter(
-            (F.col("_did") != F.col("_own._did"))
-            | (F.col("_start") >= F.col("_own._start") + F.lit(k))
-        )
-        .select("_did", "_start", (F.col("_start") + F.lit(k)).alias("_end"))
-    )
-    # per-doc interval merge: sort starts, fold overlapping/adjacent
-    # windows into maximal excision spans — a pure aggregate() fold
-    spans = dup_wins.groupBy("_did").agg(
-        F.expr(
-            """
-            aggregate(
-              array_sort(collect_list(struct(_start AS s, _end AS e))),
-              cast(array() as array<struct<s:bigint,e:bigint>>),
-              (acc, x) -> CASE
-                WHEN size(acc) > 0 AND element_at(acc, -1).e >= x.s THEN
-                  concat(
-                    slice(acc, 1, size(acc) - 1),
-                    array(named_struct(
-                      's', element_at(acc, -1).s,
-                      'e', greatest(element_at(acc, -1).e, x.e)))
-                  )
-                ELSE concat(acc, array(x))
-              END
-            )
-            """
-        ).alias("_spans")
-    )
-    out_cols = [c for c in df.columns]
-    kept_toks = F.expr(
-        """
-        filter(
-          zip_with(_toks, sequence(0, size(_toks) - 1),
-                   (t, i) -> CASE WHEN exists(_spans, sp -> i >= sp.s AND i < sp.e)
-                             THEN NULL ELSE t END),
-          t -> t IS NOT NULL
-        )
-        """
-    )
-    joined = base.join(
-        spans, F.col(id_col) == F.col("_did"), "left"
-    ).withColumn(
-        "_spans",
-        F.coalesce(
-            F.col("_spans"),
-            F.expr("cast(array() as array<struct<s:bigint,e:bigint>>)"),
-        ),
-    )
-    # NULL text passes through (split/filter leave _toks NULL): rebuilt
-    # text stays NULL and the audit columns read "nothing removed" —
-    # coercing to '' broke IS NULL semantics and NULL audit arithmetic
-    no_toks = F.col("_toks").isNull()
-    return joined.select(
-        *[c for c in out_cols if c != text_col],
-        F.when(no_toks, F.lit(None).cast("string"))
-        .otherwise(F.concat_ws(" ", kept_toks))
-        .alias(text_col),
-        F.when(no_toks, F.lit(0))
-        .otherwise(F.size("_toks") - F.size(kept_toks))
-        .alias("n_tokens_removed"),
-        F.size("_spans").alias("n_spans_removed"),
-    )

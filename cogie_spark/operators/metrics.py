@@ -41,14 +41,6 @@ def pairwise_prf(predicted: DataFrame, labeled: DataFrame) -> dict[str, float]:
     return {"tp": tp, "fp": fp, "fn": fn, "precision": p, "recall": r, "f1": f1}
 
 
-def confusion_matrix(df: DataFrame, target: str, pred: str) -> DataFrame:
-    """groupBy(target, pred).count — reference ConfusionMatrixMetric
-    (/root/reference/cogie/core/metrics.py:162-229)."""
-    return df.groupBy(
-        F.col(target).alias("target"), F.col(pred).alias("pred")
-    ).agg(F.count("*").alias("n"))
-
-
 def accuracy(df: DataFrame, target: str, pred: str) -> DataFrame:
     """Masked accuracy as avg(indicator) — reference AccuracyMetric
     (/root/reference/cogie/core/metrics.py:231-292)."""
@@ -224,15 +216,6 @@ def tuple_prf(pred: DataFrame, gold: DataFrame, keys: tuple[str, ...]) -> DataFr
         "pred_num", "gold_num", "right_num",
         pr.alias("precision"), rc.alias("recall"), f1.alias("f1"),
     )
-
-
-def grouped_accuracy_macro(df: DataFrame, group: str, target: str, pred: str) -> DataFrame:
-    """Per-group accuracy then unweighted macro mean — reference
-    per-world accuracy (/root/reference/cogie/toolkit/el/el_toolkit.py:574-621)."""
-    per = df.groupBy(group).agg(
-        F.avg(F.when(F.col(target) == F.col(pred), 1.0).otherwise(0.0)).alias("acc")
-    )
-    return per.agg(F.avg("acc").alias("macro_acc"))
 
 
 def bcubed(

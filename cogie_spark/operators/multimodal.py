@@ -40,9 +40,9 @@ FEATURE_DIM = 16
 def _decode_image(payload: bytes) -> np.ndarray:
     """STUB decode: deterministic fake 'pixel' grid from the bytes.
 
-    The default decoder — deterministic, dependency-free, and what the
-    frozen q42 oracle expects. Raises on empty payload the way a real
-    decoder raises on garbage.
+    Deterministic, dependency-free, and what the frozen q42 oracle
+    expects. Raises on empty payload the way a real decoder raises on
+    garbage.
     """
     if not payload:
         raise ValueError("empty media payload")
@@ -51,169 +51,14 @@ def _decode_image(payload: bytes) -> np.ndarray:
     return rng.reshape(32, 32).astype(np.float32)
 
 
-def pil_decoder():
-    """REAL image decode via PIL, built lazily (same optional-dependency
-    gate as functions/text.nltk_tokens_udf — VERDICT r3 #5): grayscale
-    pixel grid as float32, same array contract as the stub, so the
-    downstream featurize/quarantine plumbing is identical either way.
-
-    OPT-IN, never auto-detected: the deterministic stub stays the
-    default so pipeline outputs (and the frozen q42 oracle) do not
-    depend on which libraries happen to be installed.
-    """
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as e:  # pragma: no cover - sandbox has no PIL
-        raise ImportError(
-            "pil_decoder requires the optional 'Pillow' package "
-            "(pip install Pillow). The default deterministic stub "
-            "decoder needs no dependencies."
-        ) from e
-
-    def _decode(payload: bytes) -> np.ndarray:
-        if not payload:
-            raise ValueError("empty media payload")
-        img = Image.open(io.BytesIO(payload)).convert("L")
-        return np.asarray(img, dtype=np.float32)
-
-    return _decode
-
-
-def audio_decoder(sample_rate: int = 16_000):
-    """REAL audio decode via soundfile (libsndfile) with a librosa
-    fallback, behind the same lazy optional-dependency gate as
-    :func:`pil_decoder`: returns the mono waveform as a float32 1-D
-    array — same ``bytes -> np.ndarray`` contract as the stub, so the
-    featurize/quarantine plumbing downstream is identical.
-
-    OPT-IN, never auto-detected, for the same reason as the image gate:
-    pipeline outputs (and the frozen q42 oracle) must not depend on
-    which media libraries happen to be installed. Resolution happens on
-    the driver, so a missing library fails at plan build, not inside
-    executor tasks.
-    """
-    try:
-        import io
-
-        import soundfile  # noqa: F401  (sandbox has neither lib)
-
-        def _decode(payload: bytes) -> np.ndarray:
-            if not payload:
-                raise ValueError("empty media payload")
-            data, _sr = soundfile.read(io.BytesIO(payload), dtype="float32")
-            if data.ndim > 1:  # downmix to mono
-                data = data.mean(axis=1)
-            return data.astype(np.float32)
-
-        return _decode
-    except ImportError:
-        pass
-    try:
-        import io
-
-        import librosa
-
-        def _decode(payload: bytes) -> np.ndarray:
-            if not payload:
-                raise ValueError("empty media payload")
-            data, _sr = librosa.load(io.BytesIO(payload), sr=sample_rate, mono=True)
-            return data.astype(np.float32)
-
-        return _decode
-    except ImportError as e:  # pragma: no cover - sandbox has no audio libs
-        raise ImportError(
-            "audio_decoder requires the optional 'soundfile' or 'librosa' "
-            "package (pip install soundfile). The default deterministic "
-            "stub decoder needs no dependencies."
-        ) from e
-
-
-def video_decoder(frame_stride: int = 10, max_frames: int = 32):
-    """REAL video decode via PyAV behind the same lazy gate as
-    :func:`pil_decoder` / :func:`audio_decoder`: demux the container's
-    first video stream, keep every ``frame_stride``-th decoded frame up
-    to ``max_frames``, and return them stacked as a float32 array of
-    shape (frames, H, W, 3) in [0, 1] — the ``bytes -> np.ndarray``
-    contract the featurize/quarantine plumbing expects. Frame sampling
-    at decode time bounds both decode CPU and the Arrow batch footprint
-    per row, the property that matters when the blob column is 100 TB.
-
-    OPT-IN, never auto-detected (same rationale as the other gates:
-    pipeline outputs and the frozen q42 oracle must not depend on which
-    media libraries are installed). Resolved on the driver so a missing
-    library fails at plan build, not inside executor tasks.
-    """
-    try:
-        import io
-
-        import av  # noqa: F401  (sandbox has no video libs)
-    except ImportError as e:  # pragma: no cover - sandbox has no video libs
-        raise ImportError(
-            "video_decoder requires the optional 'av' (PyAV) package "
-            "(pip install av). The default deterministic stub decoder "
-            "needs no dependencies."
-        ) from e
-
-    def _decode(payload: bytes) -> np.ndarray:  # pragma: no cover - needs av
-        if not payload:
-            raise ValueError("empty media payload")
-        frames = []
-        with av.open(io.BytesIO(payload)) as container:
-            stream = next(
-                (s for s in container.streams if s.type == "video"), None
-            )
-            if stream is None:
-                raise ValueError("no video stream in payload")
-            for i, frame in enumerate(container.decode(stream)):
-                if i % frame_stride:
-                    continue
-                frames.append(
-                    frame.to_ndarray(format="rgb24").astype(np.float32) / 255.0
-                )
-                if len(frames) >= max_frames:
-                    break
-        if not frames:
-            raise ValueError("video stream decoded to zero frames")
-        return np.stack(frames)
-
-    return _decode
-
-
-def extract_features(
-    df: DataFrame, batch_bytes: int = 64 << 20, decoder="stub"
-) -> DataFrame:
+def extract_features(df: DataFrame, batch_bytes: int = 64 << 20) -> DataFrame:
     """media table -> (media_id, kind, feature: array<float>, decode_error).
 
     One mapInPandas pass; blobs are re-chunked by payload size so a
     single Arrow batch never exceeds ``batch_bytes``. Decode failures
     become rows with decode_error set (never task failures — at 10^12
     rows some blobs WILL be garbage).
-
-    ``decoder``: 'stub' (default — deterministic fake decode),
-    'pil' (real image decode, requires Pillow), 'audio' (real audio
-    decode, requires soundfile or librosa), 'video' (real video decode,
-    requires PyAV), or any callable ``bytes -> np.ndarray``. The
-    callable is resolved ON THE DRIVER so a missing optional dependency
-    fails at plan build with a clear ImportError, not inside executor
-    tasks.
     """
-    if decoder == "stub":
-        decode = _decode_image
-    elif decoder == "pil":
-        decode = pil_decoder()
-    elif decoder == "audio":
-        decode = audio_decoder()
-    elif decoder == "video":
-        decode = video_decoder()
-    elif callable(decoder):
-        decode = decoder
-    else:
-        raise ValueError(
-            f"unknown decoder {decoder!r}: use 'stub', 'pil', 'audio', "
-            "'video', or a callable"
-        )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -234,7 +79,7 @@ def extract_features(
         errs: list[str | None] = []
         for payload in pdf["media"]:
             try:
-                img = decode(payload)
+                img = _decode_image(payload)
                 # 16-bin histogram over the pixels — the shape a
                 # real embedding/feature extractor would produce
                 hist, _ = np.histogram(img, bins=FEATURE_DIM, range=(0, 255))

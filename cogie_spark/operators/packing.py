@@ -133,25 +133,6 @@ def pack_sequences(
     return narrow.groupBy("shard").applyInPandas(pack_shard, schema=schema)
 
 
-def pack_manifest(packed: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Per-pack assembly manifest: the ordered document ids a sequence
-    builder concatenates, plus the pack's token total. One shuffle
-    (groupBy pack_id); ordering rides inside the aggregate —
-    collect_list of (slot, id) structs, array_sort on the slot (struct
-    order is field order), then strip the slots. No window, no second
-    shuffle, array size bounded by docs-per-pack (≤ budget since every
-    doc has ≥ 1 token)."""
-    return packed.groupBy("pack_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pack_slot", F.col(id_col)))),
-            lambda s: s[id_col],
-        ).alias("doc_ids"),
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("pack_tokens"),
-        F.max("oversize").alias("oversize"),
-    )
-
-
 def pack_stats(packed: DataFrame, budget: int) -> DataFrame:
     """One-row packing quality summary: pack count, token fill rate
     (tokens / (non-oversize packs × budget)), waste fraction, and the

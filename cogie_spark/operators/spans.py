@@ -83,26 +83,3 @@ def tag_spans_decode(tokens_df: DataFrame, scheme: str = "bio") -> DataFrame:
             "doc_id", "sent_id", F.col("_label").alias("label"), "start", "end", "text"
         )
     )
-
-
-def bio_decode(tokens_df: DataFrame) -> DataFrame:
-    """BIO-scheme span decode (back-compat wrapper).
-
-    Tags: 'B-X', 'I-X', 'O'. An 'I-X' that follows 'O' or a different
-    label starts a new span (reference ner_toolkit.py:222-227).
-    """
-    return tag_spans_decode(tokens_df, scheme="bio")
-
-
-def span_f1(pred: DataFrame, gold: DataFrame, keys=("doc_id", "sent_id", "label", "start", "end")) -> DataFrame:
-    """Span micro-F1 via full-outer join — reference SpanFPreRecMetric
-    (/root/reference/cogie/core/metrics.py:599-698) restated as one join
-    + one aggregation."""
-    p = pred.select(*keys).withColumn("_p", F.lit(1))
-    g = gold.select(*keys).withColumn("_g", F.lit(1))
-    j = p.join(g, list(keys), "full_outer")
-    return j.agg(
-        F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("_p").isNotNull() & F.col("_g").isNull(), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(F.col("_p").isNull() & F.col("_g").isNotNull(), 1).otherwise(0)).alias("fn"),
-    )

@@ -38,64 +38,6 @@ def build_vocab(
     return ranked
 
 
-def save_vocab_tsv(
-    vocab: DataFrame,
-    path: str,
-    max_size: int | None = None,
-    min_freq: int = 1,
-    unknown: str = "<unk>",
-    padding: str = "<pad>",
-) -> None:
-    """Write the reference's vocabulary TSV format
-    (/root/reference/cogie/utils/vocabulary.py:244-269): a key\\tvalue
-    header block (max_size/min_freq/unknown/padding/rebuild), a blank
-    line, then ``word\\tcount\\tidx\\tis_no_create_entry`` rows.
-
-    The vocab dim table is bounded by construction (max_size /
-    min_freq), so the driver-side write is a bounded collect — the same
-    budget as the corpus_idf broadcast, not a data-scale action.
-    """
-    rows = vocab.select("word", "count", "idx").orderBy("idx", "word").collect()
-    with open(path, "w", encoding="utf-8") as f:
-        f.write(f"max_size\t{max_size}\n")
-        f.write(f"min_freq\t{min_freq}\n")
-        f.write(f"unknown\t{unknown}\n")
-        f.write(f"padding\t{padding}\n")
-        f.write("rebuild\tFalse\n")
-        f.write("\n")
-        for r in rows:
-            # is_no_create_entry is a trainer-only flag — always 0 here
-            f.write(f"{r['word']}\t{r['count']}\t{r['idx']}\t0\n")
-
-
-def load_vocab_tsv(spark, path: str) -> tuple[DataFrame, dict]:
-    """Read the reference vocabulary TSV back as (vocab DF, header meta)
-    — the inverse of :func:`save_vocab_tsv`
-    (reference loader vocabulary.py:271-329)."""
-    meta: dict[str, object] = {}
-    rows: list[tuple[str, int, int]] = []
-    in_header = True
-    with open(path, encoding="utf-8") as f:
-        for line in f:
-            line = line.rstrip("\n")
-            if in_header:
-                if not line:
-                    in_header = False
-                    continue
-                name, value = line.split("\t", 1)
-                if name in ("max_size", "min_freq"):
-                    meta[name] = int(value) if value != "None" else None
-                elif name == "rebuild":
-                    meta[name] = value == "True"
-                else:
-                    meta[name] = value if value != "None" else None
-            elif line:
-                word, count, idx, _flag = line.split("\t")
-                rows.append((word, int(count), int(idx)))
-    df = spark.createDataFrame(rows, "word string, count long, idx int")
-    return df, meta
-
-
 def encode_tokens(df: DataFrame, vocab: DataFrame, text_col: str = "text", unk_idx: int = 1) -> DataFrame:
     """Map token arrays to id arrays via broadcast join against the
     vocab dim (the reference's word2idx lookup, vocabulary.py:214-230).

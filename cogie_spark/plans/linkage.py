@@ -95,11 +95,8 @@ class LinkageConfig:
     # cap on the IDF broadcast vocabulary (corpus_idf); 0 disables the
     # tf-idf scorer's corpus weighting (plain TF cosine)
     idf_max_terms: int = 100_000
-    # collapse byte-identical files (same sha256) to one representative
-    # BEFORE blocking: identical boilerplate otherwise forms the hottest
-    # LSH blocks, and at 10^12 files the quadratic pair step must only
-    # ever see distinct contents
-    exact_prededup: bool = True
+    # content hash column for the exact prededup (sha2 of content_col
+    # when absent)
     sha_col: str = "sha256"
 
 
@@ -214,37 +211,37 @@ def run_linkage(
     # 200k-group fixture — the single wide shuffle scales fine here,
     # while the extra parquet scan + broadcast build are pure overhead.
     all_files = _persist(files)
-    files = all_files
 
-    file2rep = None
-    if cfg.exact_prededup:
-        # exact dedup (SURVEY.md §2.7 U2): one representative per
-        # distinct content; the expensive pipeline runs on reps only.
-        # min_by over the full row struct keeps this to ONE shuffle of
-        # the input (the groupBy) — the previous groupBy-then-join form
-        # shuffled the full table a second time for the join-back.
-        sha = cfg.sha_col if cfg.sha_col in files.columns else None
-        sha_expr = F.col(sha) if sha else F.sha2(F.col(cfg.content_col), 256)
-        keyed = all_files.withColumn("_sha", sha_expr)
-        data_cols = [c for c in keyed.columns if c != "_sha"]
-        reps_rows = keyed.groupBy("_sha").agg(
-            F.expr(
-                f"min_by(struct({', '.join(data_cols)}), {cfg.id_col})"
-            ).alias("_r"),
-            F.min(cfg.id_col).alias("_rep_id"),
-        )
-        file2rep = _persist(
-            keyed.select(cfg.id_col, "_sha")
-            .join(reps_rows.select("_sha", "_rep_id"), "_sha")
-            .select(cfg.id_col, F.col("_rep_id"))
-        )
-        # NOTE (round-4 A/B): replacing this persist with a lazy
-        # localCheckpoint — to truncate lineage and cut the multi-second
-        # Catalyst re-planning of the scan→min_by tree per downstream
-        # query — measured 12 s SLOWER at bench scale: the RDD-row cache
-        # loses the InMemoryRelation's columnar compression and column
-        # pruning, which cost more than the planning it saved.
-        files = _persist(reps_rows.select("_r.*"))
+    # exact dedup (SURVEY.md §2.7 U2): one representative per
+    # distinct content; the expensive pipeline runs on reps only.
+    # Identical boilerplate otherwise forms the hottest LSH blocks, and
+    # at 10^12 files the quadratic pair step must only ever see
+    # distinct contents.
+    # min_by over the full row struct keeps this to ONE shuffle of
+    # the input (the groupBy) — the previous groupBy-then-join form
+    # shuffled the full table a second time for the join-back.
+    sha = cfg.sha_col if cfg.sha_col in all_files.columns else None
+    sha_expr = F.col(sha) if sha else F.sha2(F.col(cfg.content_col), 256)
+    keyed = all_files.withColumn("_sha", sha_expr)
+    data_cols = [c for c in keyed.columns if c != "_sha"]
+    reps_rows = keyed.groupBy("_sha").agg(
+        F.expr(
+            f"min_by(struct({', '.join(data_cols)}), {cfg.id_col})"
+        ).alias("_r"),
+        F.min(cfg.id_col).alias("_rep_id"),
+    )
+    file2rep = _persist(
+        keyed.select(cfg.id_col, "_sha")
+        .join(reps_rows.select("_sha", "_rep_id"), "_sha")
+        .select(cfg.id_col, F.col("_rep_id"))
+    )
+    # NOTE (round-4 A/B): replacing this persist with a lazy
+    # localCheckpoint — to truncate lineage and cut the multi-second
+    # Catalyst re-planning of the scan→min_by tree per downstream
+    # query — measured 12 s SLOWER at bench scale: the RDD-row cache
+    # loses the InMemoryRelation's columnar compression and column
+    # pruning, which cost more than the planning it saved.
+    files = _persist(reps_rows.select("_r.*"))
 
     sigs = _persist(
         signature_table(
@@ -357,31 +354,21 @@ def run_linkage(
         comp = comp.withColumnRenamed("file_id", cfg.id_col)
 
     # every file gets a cluster: singletons map to themselves
-    if file2rep is not None:
-        # file2rep already maps EVERY file to its representative, so
-        # one left join against the component table suffices — members
-        # inherit coalesce(rep's component min, rep id). The former
-        # two-join form (files ⋈ comp to build rep_clusters, then
-        # file2rep ⋈ rep_clusters) joined the rep universe twice for
-        # the same rows (r6: one join/shuffle stage removed, output
-        # identical by construction — comp's nodes are a subset of the
-        # reps file2rep maps onto).
-        comp_r = comp.select(
-            F.col(cfg.id_col).alias("_rep_id"), F.col("cluster_id")
-        )
-        clusters = file2rep.join(comp_r, "_rep_id", "left").select(
-            F.col(cfg.id_col).alias("file_id"),
-            F.coalesce("cluster_id", F.col("_rep_id")).alias("cluster_id"),
-        )
-    else:
-        clusters = (
-            files.select(cfg.id_col)
-            .join(comp, cfg.id_col, "left")
-            .select(
-                F.col(cfg.id_col).alias("file_id"),
-                F.coalesce("cluster_id", F.col(cfg.id_col)).alias("cluster_id"),
-            )
-        )
+    # file2rep already maps EVERY file to its representative, so
+    # one left join against the component table suffices — members
+    # inherit coalesce(rep's component min, rep id). The former
+    # two-join form (files ⋈ comp to build rep_clusters, then
+    # file2rep ⋈ rep_clusters) joined the rep universe twice for
+    # the same rows (r6: one join/shuffle stage removed, output
+    # identical by construction — comp's nodes are a subset of the
+    # reps file2rep maps onto).
+    comp_r = comp.select(
+        F.col(cfg.id_col).alias("_rep_id"), F.col("cluster_id")
+    )
+    clusters = file2rep.join(comp_r, "_rep_id", "left").select(
+        F.col(cfg.id_col).alias("file_id"),
+        F.coalesce("cluster_id", F.col("_rep_id")).alias("cluster_id"),
+    )
     if checkpoint is not None:
         clusters = checkpoint.commit("clusters", clusters)
 
@@ -392,10 +379,10 @@ def run_linkage(
         "scored": scored,
         "edges": edges,
         "clusters": clusters,
-        # exact-prededup lineage (None when cfg.exact_prededup is off):
-        # (id_col, _rep_id) — needed to evaluate the BLOCKING stage
-        # (metrics.blocking_quality) in representative space, since true
-        # pairs between byte-identical files never enter the pair table
+        # exact-prededup lineage: (id_col, _rep_id) — needed to evaluate
+        # the BLOCKING stage (metrics.blocking_quality) in representative
+        # space, since true pairs between byte-identical files never
+        # enter the pair table
         "file2rep": file2rep,
         # cached inputs of THIS run; callers that loop (streaming) must
         # unpersist these once the run's outputs are materialized —

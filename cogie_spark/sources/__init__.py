@@ -1,2 +1,1 @@
 from cogie_spark.sources.conll import read_conll  # noqa: F401
-from cogie_spark.sources.json_io import read_json_corpus, write_jsonl  # noqa: F401

@@ -44,33 +44,7 @@ def main() -> None:
                          "omit for the operator defaults")
     ap.add_argument("--vec-col", default="embedding",
                     help="embedding column for --near-dup semantic")
-    ap.add_argument(
-        "--mix", default="",
-        help="target domain mix for the training view, e.g. "
-             "'en=0.6,fr=0.3,code=0.1' (operators/sampling.mix_sample); "
-             "proportions must sum to 1; requires --mix-budget",
-    )
-    ap.add_argument("--mix-budget", type=int, default=0,
-                    help="total token budget the --mix proportions apply to")
-    ap.add_argument(
-        "--substr-dedup-k", type=int, default=0,
-        help="excise every repeated k-token passage except its first-seen "
-             "occurrence (dedup.substring_dedup; Lee et al. ExactSubstr); "
-             "0 = off. Runs after near-dup pruning, before --mix",
-    )
-    ap.add_argument("--substr-dedup-winnow", type=int, default=1,
-                    help="winnowing window for --substr-dedup-k (>1 keeps "
-                         "~1/winnow of window starts via content-defined "
-                         "min-fingerprint selection — alignment-independent, "
-                         "unlike a positional stride; trades span-edge "
-                         "precision for fewer exploded rows)")
-    ap.add_argument("--mix-stratum-col", default="lang_pred",
-                    help="column holding the stratum/domain label; the "
-                         "default is the language tag this job's own "
-                         "clean_corpus stage computes")
     args = ap.parse_args()
-    if bool(args.mix) != (args.mix_budget > 0):
-        ap.error("--mix and --mix-budget must be given together")
 
     from pyspark.sql import SparkSession
 
@@ -119,45 +93,6 @@ def main() -> None:
         nd = near_dup_prune(kept, cfg, method=args.near_dup, **kw)
         n_dup_pruned = nd["dup_groups"].count()
         kept = nd["pruned"]
-    substr_removed = None
-    if args.substr_dedup_k > 0:
-        from pyspark.sql import functions as F
-
-        from cogie_spark.operators.dedup import substring_dedup
-
-        kept = substring_dedup(
-            kept, args.id_col, args.text_col,
-            k=args.substr_dedup_k, winnow=args.substr_dedup_winnow,
-            scope_col="lang_pred" if "lang_pred" in kept.columns else None,
-        ).persist()  # the stats agg below and the downstream consumers
-        # (--output write / counts) otherwise each re-run the window
-        # explode + owner shuffle; one-shot job, session-end release
-        substr_removed = kept.agg(
-            F.sum("n_tokens_removed").alias("t"),
-            F.sum((F.col("n_spans_removed") > 0).cast("long")).alias("d"),
-        ).collect()[0]
-        kept = kept.drop("n_tokens_removed", "n_spans_removed")
-    mix_rows = None
-    if args.mix:
-        from pyspark.sql import functions as F
-
-        from cogie_spark.operators.sampling import mix_sample
-        from cogie_spark.operators.textstats import token_count
-
-        mix = {}
-        for part in args.mix.split(","):
-            s, _, p = part.partition("=")
-            mix[s.strip()] = float(p)
-        mix_rows = []
-        kept = mix_sample(
-            kept.withColumn("_mix_tokens", token_count(args.text_col)),
-            mix,
-            float(args.mix_budget),
-            stratum_col=args.mix_stratum_col,
-            weight_col="_mix_tokens",
-            id_col=args.id_col,
-            report=mix_rows,
-        ).drop("_mix_tokens")
     if args.output:
         # the training view on disk is the FINAL (gated, deduped,
         # near-dup-pruned) one; downstream stats/packing read the
@@ -173,20 +108,7 @@ def main() -> None:
     }
     if n_dup_pruned is not None:
         stats["near_dup_pruned"] = n_dup_pruned
-    if substr_removed is not None:
-        stats["substr_tokens_removed"] = int(substr_removed["t"] or 0)
-        stats["substr_docs_affected"] = int(substr_removed["d"] or 0)
-    if mix_rows is not None:
-        # docs_kept counts emitted rows INCLUDING upsampled copies (so
-        # kept_frac can exceed 1); docs_unique is the distinct originals
-        stats["docs_unique"] = kept.filter(F.col("copy_idx") == 0).count()
-        stats["mix"] = [
-            {k: (round(v, 4) if isinstance(v, float) else v) for k, v in r.items()}
-            for r in mix_rows
-        ]
     if args.pack_budget > 0:
-        from pyspark.sql import functions as F
-
         from cogie_spark.operators.packing import pack_sequences, pack_stats
         from cogie_spark.operators.textstats import token_count
 
@@ -197,21 +119,10 @@ def main() -> None:
             int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
             n_kept // 64,
         ))
-        # after --mix upsampling the id column is no longer unique
-        # (copy_idx numbers the extra epochs) — pack on a derived
-        # unique id so each copy occupies its own pack slot
-        pack_id_col = args.id_col
-        pack_in = kept
-        if mix_rows is not None:
-            pack_id_col = "_pack_id"
-            pack_in = kept.withColumn(
-                "_pack_id",
-                F.concat_ws("#", F.col(args.id_col).cast("string"), F.col("copy_idx")),
-            )
         packed = pack_sequences(
-            pack_in.select(pack_id_col, token_count(args.text_col).alias("n_tokens")),
+            kept.select(args.id_col, token_count(args.text_col).alias("n_tokens")),
             budget=args.pack_budget,
-            id_col=pack_id_col,
+            id_col=args.id_col,
             shards=shards,
         )
         if args.pack_output:

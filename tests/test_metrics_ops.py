@@ -1,5 +1,5 @@
 """Round-2 operators: F-beta family, tuple metrics, tag-scheme decode,
-ET thresholding, T-REx loader — parity-tested against hand-computed
+ET thresholding — parity-tested against hand-computed
 reference-formula values and a pure-Python reimplementation of the
 reference decoders (/root/reference/cogie/core/metrics.py:419-505).
 """
@@ -203,38 +203,6 @@ def test_w2ner_decode_hand_case(spark):
         for r in w2ner_decode(df).collect()
     }
     assert got == {(0, i, t) for i, t in expected}
-
-
-def test_trex_loader_boundaries(spark):
-    import json
-    import tempfile
-
-    # "Alpha Beta. Gamma." — two sentences, entity over 'Alpha Beta' and 'Gamma'
-    text = "Alpha Beta. Gamma."
-    doc = {
-        "text": text,
-        "sentences_boundaries": [[0, 11], [12, 18]],
-        "words_boundaries": [[0, 5], [6, 10], [10, 11], [12, 17], [17, 18]],
-        "entities": [
-            {"boundaries": [0, 10], "uri": "Q1"},   # Alpha Beta -> words 0,1 of sent 0
-            {"boundaries": [12, 17], "uri": "Q2"},  # Gamma -> word 0 of sent 1
-        ],
-    }
-    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
-        f.write(json.dumps(doc) + "\n")
-        path = f.name
-    from cogie_spark.sources.trex import read_trex_json, trex_entity_indices, trex_tokens
-
-    docs = read_trex_json(spark, path)
-    toks = {
-        (r["sent_id"], r["pos"]): r["token"] for r in trex_tokens(docs).collect()
-    }
-    assert toks[(0, 0)] == "Alpha" and toks[(0, 1)] == "Beta" and toks[(0, 2)] == "."
-    assert toks[(1, 0)] == "Gamma" and toks[(1, 1)] == "."
-    ents = {
-        (r["uri"], r["sent_id"], r["pos"]) for r in trex_entity_indices(docs).collect()
-    }
-    assert ents == {("Q1", 0, 0), ("Q1", 0, 1), ("Q2", 1, 0)}
 
 
 def test_encode_tokens_duplicate_rows(spark):

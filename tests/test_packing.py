@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from cogie_spark.operators.packing import (
     _bfd_assign,
-    pack_manifest,
     pack_sequences,
     pack_stats,
 )
@@ -100,21 +99,6 @@ def test_pack_stats(spark):
     assert row.n_oversize == 4
     assert row.n_packs > row.n_oversize
     assert 0.5 <= row.fill_rate <= 1.0
-
-
-def test_pack_manifest(spark):
-    df = _docs(spark, n=150, seed=9)
-    packed = pack_sequences(df, BUDGET, shards=4).cache()
-    man = {r.pack_id: r for r in pack_manifest(packed).collect()}
-    by_pack: dict[int, list] = {}
-    for r in sorted(packed.collect(), key=lambda r: (r.pack_id, r.pack_slot)):
-        by_pack.setdefault(r.pack_id, []).append(r)
-    assert set(man) == set(by_pack)
-    for pid, rows in by_pack.items():
-        assert man[pid].doc_ids == [r.doc_id for r in rows]  # slot order
-        assert man[pid].n_docs == len(rows)
-        assert man[pid].pack_tokens == sum(r.n_tokens for r in rows) <= BUDGET
-    packed.unpersist()
 
 
 def test_pack_plan_single_exchange(spark):

@@ -1,5 +1,5 @@
 """Source scans: CoNLL sessionized parser vs a reference-style Python
-parse of the same file; JSON round-trip."""
+parse of the same file."""
 
 from __future__ import annotations
 
@@ -46,34 +46,3 @@ def test_conll_scan_matches_reference_parse(spark):
     got = read_conll(spark, str(d / "sample.conll")).orderBy("sent_id").collect()
     want = _reference_parse(CONLL)
     assert [(list(r["tokens"]), list(r["tags"])) for r in got] == want
-
-
-def test_jsonl_roundtrip(spark):
-    from cogie_spark.sources.json_io import read_json_corpus, write_jsonl
-
-    d = tempfile.mkdtemp(prefix="jsonl_")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    write_jsonl(df, d)
-    back = read_json_corpus(spark, d, schema="id long, s string")
-    assert sorted((r["id"], r["s"]) for r in back.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_vocab_tsv_roundtrip(spark, tmp_path):
-    """S7: the reference's vocabulary TSV codec round-trips exactly
-    (header block + word\\tcount\\tidx rows, vocabulary.py:244-329)."""
-    from cogie_spark.operators.vocab import build_vocab, load_vocab_tsv, save_vocab_tsv
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    vocab = build_vocab(docs, "text", min_freq=5, n_special=2)
-    path = str(tmp_path / "vocab.tsv")
-    save_vocab_tsv(vocab, path, min_freq=5)
-
-    with open(path, encoding="utf-8") as f:
-        head = f.read().split("\n\n", 1)[0].splitlines()
-    assert head[0].startswith("max_size\t") and head[1] == "min_freq\t5"
-
-    loaded, meta = load_vocab_tsv(spark, path)
-    assert meta["min_freq"] == 5 and meta["unknown"] == "<unk>" and meta["rebuild"] is False
-    orig = {(r["word"], r["count"], r["idx"]) for r in vocab.collect()}
-    back = {(r["word"], r["count"], r["idx"]) for r in loaded.collect()}
-    assert orig == back and orig
