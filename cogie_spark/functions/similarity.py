@@ -12,8 +12,8 @@ Scorers:
 - ``jaro_winkler``            : string similarity (names/titles), pandas UDF.
 - ``token_set_ratio_native``  : Levenshtein ratio over sorted unique tokens
                                 as pure JVM expressions (the pipeline form);
-                                ``token_set_ratio``/``token_set_ratio_py``
-                                remain as the property-test oracle.
+                                ``token_set_ratio_py`` remains as the
+                                property-test oracle.
 - ``tfidf_cosine``            : cosine over hashed TF vectors with IDF weights
                                 (a broadcast doc-frequency dict stands in for
                                 the reference's precomputed candidate
@@ -223,17 +223,6 @@ def token_set_ratio_py(a: str, b: str) -> float:
     d = _levenshtein(ta, tb)
     denom = max(len(ta), len(tb))
     return 1.0 - d / denom if denom else 1.0
-
-
-@pandas_udf(DoubleType())
-def token_set_ratio(a: pd.Series, b: pd.Series) -> pd.Series:
-    """pandas-UDF form — kept as the property-test oracle for
-    token_set_ratio_native; the pipeline uses the native expression."""
-    out = np.empty(len(a), dtype=np.float64)
-    av, bv = a.to_numpy(dtype=object), b.to_numpy(dtype=object)
-    for i in range(len(av)):
-        out[i] = token_set_ratio_py(av[i], bv[i])
-    return pd.Series(out)
 
 
 def _token_set_join(c: Column) -> Column:

@@ -6,4 +6,3 @@ from cogie_spark.operators.dedup import (  # noqa: F401
     semantic_duplicates,
 )
 from cogie_spark.operators.metrics import bcubed, blocking_quality, pairwise_prf  # noqa: F401
-from cogie_spark.operators.packing import pack_sequences, pack_stats  # noqa: F401

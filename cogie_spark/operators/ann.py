@@ -46,8 +46,7 @@ def brute_force_topk(
 
     Output: (probe_id, vec_id, cosine, rank). Deterministic tie-break on
     vec_id. Cost is |probes| * |corpus| vector ops, all JVM-side
-    (zip_with/aggregate) — the exact baseline the IVF path is checked
-    against.
+    (zip_with/aggregate).
 
     Pass ``dim`` when known: omitting it costs one bounded ``first()``
     probe job at plan-build time (ann.infer_dim).
@@ -242,18 +241,14 @@ def lsh_band_table(
 
 
 # ----------------------------------------------------------------- IVF
-# Inverted-file ANN — the second scale path beside LSH sign-bucketing.
+# The IVF coarse quantizer that dedup.semantic_duplicates blocks on.
 # Where LSH buckets are data-independent (hyperplanes from a hash
 # family), IVF adapts the partition to the data: a spherical k-means
-# coarse quantizer trained on a bounded deterministic sample, corpus
-# vectors assigned to their nearest centroid list in ONE Arrow matmul
-# projection (no shuffle), probes scoring only their top-``nprobe``
-# lists. This is the FAISS IndexIVFFlat strategy (the reference's ANN
-# role, /root/reference/cogie/models/el/blink.py:97-167) restated as a
-# broadcast-dim-table plan: the quantizer is tiny and lives in the
-# expression tree; the corpus-side list assignment is narrow; the only
-# shuffle anywhere is the final per-probe top-k window, whose input is
-# already cut down by |corpus| * nprobe / nlist.
+# quantizer trained on a bounded deterministic sample, each vector
+# assigned to its nearest centroid lists in ONE Arrow matmul projection
+# (no shuffle). This is the FAISS IndexIVFFlat partition (the
+# reference's ANN role, cogie/models/el/blink.py:97-167) restated as a
+# narrow plan: the quantizer is tiny and lives in the expression tree.
 
 
 def ivf_train(
@@ -341,78 +336,3 @@ def _ivf_lists_arrow(centroids: np.ndarray, nprobe: int, dim: int):
         return pd.Series(out, dtype=object)
 
     return lists
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    out_col: str = "list_id",
-) -> DataFrame:
-    """Attach each vector's nearest-centroid list id — ONE narrow Arrow
-    projection, no shuffle. The result is the materializable IVF index:
-    write it partitioned/bucketed by ``out_col`` and probe-side scans
-    prune to nprobe lists at the file level."""
-    dim = dim or int(centroids.shape[1])
-    lists = _ivf_lists_arrow(centroids, nprobe=1, dim=dim)
-    return df.withColumn(out_col, F.get(lists(F.col(vec_col)), 0))
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "probe_id",
-    nlist: int = 64,
-    nprobe: int = 8,
-    dim: int | None = None,
-    centroids: np.ndarray | None = None,
-    train_size: int = 20_000,
-    seed: int = 13,
-) -> DataFrame:
-    """Approximate cosine top-k via IVF: score only corpus vectors whose
-    list is among the probe's ``nprobe`` nearest centroids.
-
-    Output: (probe_id, vec_id, cosine, rank) — the brute_force_topk
-    contract. nprobe == nlist degenerates to EXACT search (every list
-    probed; unit-tested equal to brute_force_topk), which makes recall
-    a pure nprobe/nlist dial with the exact end always reachable.
-
-    Pass ``centroids`` to reuse a trained quantizer (the streaming /
-    repeated-probe path); otherwise one bounded train job runs at
-    plan-build time.
-    """
-    dim = dim or infer_dim(corpus, vec_col)
-    if centroids is None:
-        centroids = ivf_train(
-            corpus, nlist=nlist, id_col=id_col, vec_col=vec_col,
-            dim=dim, train_size=train_size, seed=seed,
-        )
-    ca = ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col, dim=dim).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("_cv"),
-        "list_id",
-    )
-    plists = _ivf_lists_arrow(centroids, nprobe=nprobe, dim=dim)
-    pa = (
-        probes.select(
-            F.col(probe_id_col).alias("probe_id"),
-            F.col(vec_col).cast("array<double>").alias("_pv"),
-        )
-        .withColumn("list_id", F.explode(plists(F.col("_pv"))))
-    )
-    scored = (
-        ca.join(F.broadcast(pa), "list_id")
-        .withColumn("cosine", F.round(cosine_native(F.col("_pv"), F.col("_cv"), dim=dim), 6))
-        .select("probe_id", "vec_id", "cosine")
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "vec_id", "cosine", "rank")
-    )

@@ -145,6 +145,63 @@ def estimate_jaccard(sig_a: F.Column, sig_b: F.Column, num_perm: int) -> F.Colum
     return total / F.lit(float(num_perm))
 
 
+def cascade_join(
+    pairs: DataFrame,
+    side: DataFrame,
+    num_perm: int,
+    floor: float,
+    id_col: str = "_sid",
+    payload: tuple[str, str, str] | None = None,
+) -> DataFrame:
+    """The MinHash cascade: attach both sides of each candidate pair from
+    a per-id ``side`` table (``id_col``, ``sig``, optional payload) and
+    keep the pairs whose agreement estimate reaches ``floor``.
+
+    The side table is the caller's: run_linkage and the link stream pass
+    the b-bit signature plus the feature window (``payload=("_feat",
+    "_lf", "_rf")`` names the column and its left/right aliases),
+    minhash_near_duplicates its full-width signature table. ``sig`` is
+    read over its first ``num_perm`` components. Adds ``est_jaccard``
+    and the payload aliases; the pair table is joined once per side.
+    """
+
+    def _one(side_name: str, sig_alias: str, pay_alias: int) -> DataFrame:
+        cols = [F.col(id_col).alias(side_name), F.col("sig").alias(sig_alias)]
+        if payload is not None:
+            cols.append(F.col(payload[0]).alias(payload[pay_alias]))
+        return side.select(*cols)
+
+    return (
+        pairs.join(_one("left_id", "_lsig", 1), "left_id")
+        .join(_one("right_id", "_rsig", 2), "right_id")
+        .withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), num_perm))
+        .filter(F.col("est_jaccard") >= floor)
+        .drop("_lsig", "_rsig")
+    )
+
+
+def cross_band_pairs(
+    new_bands: DataFrame,
+    old_bands: DataFrame,
+    id_col: str = "file_id",
+    key_cols: tuple[str, ...] = ("lang",),
+) -> DataFrame:
+    """Candidate pairs BETWEEN two band tables — a stream batch's bands
+    against the committed state's: new ⋈ old on (*key_cols, band_id,
+    band_hash) -> distinct (left_id = new id, right_id = old id). Both
+    streams' cross-batch blocking goes through here."""
+    n, o = new_bands.alias("n"), old_bands.alias("o")
+    cond = None
+    for c in (*key_cols, "band_id", "band_hash"):
+        eq = F.col(f"n.{c}") == F.col(f"o.{c}")
+        cond = eq if cond is None else cond & eq
+    return (
+        n.join(o, cond)
+        .select(F.col(f"n.{id_col}").alias("left_id"), F.col(f"o.{id_col}").alias("right_id"))
+        .distinct()
+    )
+
+
 def candidate_pairs(
     blocks: DataFrame,
     id_col: str = "file_id",

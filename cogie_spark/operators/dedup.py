@@ -47,10 +47,11 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """MinHash-LSH candidate pairs verified with exact shingle Jaccard.
 
-    shingle -> minhash -> band -> bucket-join (operators/blocking.py),
-    then the surviving pairs are verified with exact Jaccard over the
-    distinct shingle sets — candidates are already bounded, so the
-    verify join touches only O(candidates) rows.
+    shingle -> minhash -> band -> bucket-join -> cascade, all in
+    operators/blocking.py (the flagship's candidate path), then the
+    surviving pairs are verified with exact Jaccard over the distinct
+    shingle sets (jaccard_verify_pairs) — candidates are already
+    bounded, so the verify join touches only O(candidates) rows.
 
     Default banding is 8 bands x 4 rows: at background similarity ~0.05
     (typical corpora) chance collisions are ~5e-5 per pair, while pairs
@@ -78,9 +79,11 @@ def minhash_near_duplicates(
     caches live for the session, the acceptable default for one-shot
     jobs (VERDICT r5 #4).
     """
+    from pyspark import StorageLevel
+
     from cogie_spark.operators.blocking import (
         bands_from_signatures,
-        estimate_jaccard,
+        cascade_join,
         signature_table,
     )
 
@@ -92,8 +95,6 @@ def minhash_near_duplicates(
         df, id_col=id_col, content_col=text_col, key_cols=key_cols,
         num_perm=est_perm, shingle_k=shingle_k, mode=mode,
     )
-    from pyspark import StorageLevel
-
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     if release_into is not None:
         release_into.append(sigs)
@@ -111,78 +112,65 @@ def minhash_near_duplicates(
     # prunes the candidate set before the exact shingle-set verify; the
     # margin (threshold - 0.2 at 64+ perms) keeps the miss probability
     # below ~1e-7 per true pair, so the exact-verify output set is
-    # unchanged — only its cost shrinks
-    ss = sigs.select(F.col(id_col), F.col("sig"))
-    # 'fast' signatures estimate word-3gram similarity while the
-    # threshold speaks char-shingle Jaccard — widen the cascade margin
-    # so the estimate never prunes a pair the exact verify would keep
+    # unchanged — only its cost shrinks. 'fast' signatures estimate
+    # word-3gram similarity while the threshold speaks char-shingle
+    # Jaccard — widen the margin so the estimate never prunes a pair
+    # the exact verify would keep
     est_margin = 0.4 if mode == "fast" else 0.2
-    est_floor = max(jaccard_threshold - est_margin, 0.0)
-    pairs = (
-        pairs.join(ss.withColumnRenamed(id_col, "left_id").withColumnRenamed("sig", "_ls"), "left_id")
-        .join(ss.withColumnRenamed(id_col, "right_id").withColumnRenamed("sig", "_rs"), "right_id")
-        .withColumn("_est", estimate_jaccard(F.col("_ls"), F.col("_rs"), est_perm))
-        .filter(F.col("_est") >= est_floor)
-        .drop("_ls", "_rs", "_est")
-    )
-
-    # only candidates need exact shingle sets — semi-join before the
-    # (interpreted, per-row) shingle-array construction
-    from pyspark import StorageLevel as _SL
-
-    pairs = pairs.persist(_SL.MEMORY_AND_DISK)
+    pairs = cascade_join(
+        pairs, sigs, est_perm, max(jaccard_threshold - est_margin, 0.0), id_col=id_col
+    ).drop("est_jaccard")
+    # the verify reads the survivors twice (candidate ids + pair joins)
+    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     if release_into is not None:
         release_into.append(pairs)
-    cand_ids = (
-        pairs.select(F.col("left_id").alias("_cid"))
-        .unionAll(pairs.select(F.col("right_id").alias("_cid")))
-        .distinct()
-    )
-    sh = df.join(
-        cand_ids, F.col(id_col) == F.col("_cid"), "left_semi"
-    ).select(F.col(id_col).alias("_sid"), char_shingles(text_col, k=shingle_k).alias("_sh"))
-    # shared exact-verify definition (jaccard_verify_pairs) — one place
-    # defines "near-duplicate at threshold" for minhash, banded n-gram
-    # and the streaming admission gate alike
     return jaccard_verify_pairs(
-        pairs, sh, threshold=jaccard_threshold, id_col="_sid", set_col="_sh"
+        pairs, df, id_col, text_col, threshold=jaccard_threshold, shingle_k=shingle_k
     )
 
 
 def jaccard_verify_pairs(
     pairs: DataFrame,
-    left_sets: DataFrame,
-    right_sets: DataFrame | None = None,
-    threshold: float = 0.5,
-    id_col: str = "_id",
-    set_col: str = "_g",
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    shingle_k: int = 8,
+    right_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact set-Jaccard verification of candidate pairs — THE shared
-    definition of "near-duplicate at ``threshold``" every banded path
-    funnels through (ngram_jaccard_pairs' banded mode and the streaming
-    admission gate both call this; a change to the Jaccard expression
-    lands in one place so batch and streaming can never diverge).
+    """Exact char-shingle Jaccard verification of candidate pairs — THE
+    shared definition of "near-duplicate at ``threshold``":
+    minhash_near_duplicates and both checks of the streaming admission
+    gate call it, so batch and streaming can never diverge.
 
-    ``pairs`` carries (left_id, right_id); ``left_sets``/``right_sets``
-    carry (``id_col``, ``set_col``) with DISTINCT set elements per row
-    (array_intersect/size are set ops). ``right_sets`` defaults to
-    ``left_sets`` for self-join candidates. Scale shape: two equi-joins
-    on the pair ids, the Jaccard itself is a per-row expression.
-    Returns (left_id, right_id, jaccard) at ``jaccard >= threshold``.
+    ``pairs`` carries (left_id, right_id). Shingle sets are interpreted
+    per-row expressions, so they are built only for the docs a pair
+    names (a semi-join on the candidate ids first). Self case
+    (``right_docs`` None): both ids index ``docs``, and one shingle
+    table covers the union of left and right ids. Cross case: left ids
+    index ``docs``, right ids ``right_docs``. Returns (left_id,
+    right_id, jaccard) at ``jaccard >= threshold``.
     """
-    if right_sets is None:
-        right_sets = left_sets
+
+    def _sets(src: DataFrame, ids: DataFrame) -> DataFrame:
+        return src.join(ids, F.col(id_col) == F.col("_cid"), "left_semi").select(
+            F.col(id_col).alias("_sid"), char_shingles(text_col, k=shingle_k).alias("_sh")
+        )
+
+    left_ids = pairs.select(F.col("left_id").alias("_cid"))
+    right_ids = pairs.select(F.col("right_id").alias("_cid"))
+    if right_docs is None:
+        left_sets = right_sets = _sets(docs, left_ids.unionAll(right_ids).distinct())
+    else:
+        left_sets = _sets(docs, left_ids.distinct())
+        right_sets = _sets(right_docs, right_ids.distinct())
     return (
         pairs.join(
-            left_sets.select(
-                F.col(id_col).alias("left_id"), F.col(set_col).alias("_lg")
-            ),
+            left_sets.select(F.col("_sid").alias("left_id"), F.col("_sh").alias("_lg")),
             "left_id",
         )
         .join(
-            right_sets.select(
-                F.col(id_col).alias("right_id"), F.col(set_col).alias("_rg")
-            ),
+            right_sets.select(F.col("_sid").alias("right_id"), F.col("_sh").alias("_rg")),
             "right_id",
         )
         .withColumn("inter", F.size(F.array_intersect("_lg", "_rg")))
@@ -203,97 +191,14 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    scope_col: str | None = None,
-    method: str = "exact",
-    num_perm: int = 32,
-    bands: int = 8,
-    max_block_size: int = 64,
 ) -> DataFrame:
-    """Word n-gram Jaccard pairs.
-
-    ``method='exact'``: brute-force over all in-scope pairs — the
-    small-table verifier / oracle twin of minhash_near_duplicates.
-    ``scope_col`` bounds the self-join (e.g. same lang).
-
-    ``method='banded'`` (VERDICT r3 #7 — the scale path): MinHash-LSH
-    candidate generation over the SAME gram sets (explode -> min-agg ->
-    band -> bucket join via operators/blocking.py, never a cartesian),
-    then the same exact-Jaccard verify on candidates only. Recall
-    follows the banding S-curve (1-(1-s^r)^b; near 1 above s≈0.7 at
-    8x4) — use it for near-dup thresholds; a threshold far below the
-    S-curve knee belongs on the exact path at bounded scope.
-
-    The banded path EXECUTES EAGERLY (localCheckpoint of the verified
-    pairs): that bounds the lifetime of the gram-side cache — it is
-    released before returning instead of leaking into a long-lived
-    session (ADVICE r4 #2) — at the cost of composing downstream
-    filters into this plan. ``max_block_size`` is the skew cap
-    forwarded to candidate_pairs; blocks beyond its salvage tier are
-    DROPPED and the drop count is logged here (north rule: no silent
-    caps — on boilerplate-heavy corpora raise the cap or pre-dedup).
-    """
-    grams = _word_ngrams(text_col, n)
-    scope_cols = [scope_col] if scope_col else []
-    side = df.select(
-        F.col(id_col).alias("_id"),
-        *(F.col(c).alias("_scope") for c in scope_cols),
-        grams.alias("_g"),
-    )
-
-    def _verify(pairs: DataFrame) -> DataFrame:
-        return jaccard_verify_pairs(
-            pairs, side.select("_id", "_g"), threshold=threshold
-        )
-
-    if method == "banded":
-        from pyspark import StorageLevel
-
-        from cogie_spark.functions.hashing import MINHASH_P, _perm_coeffs
-        from cogie_spark.operators.blocking import bands_from_signatures
-
-        key_cols = tuple("_scope" for _ in scope_cols)
-        exploded = side.select(
-            "_id", *key_cols, F.explode("_g").alias("_gram")
-        ).select(
-            "_id", *key_cols,
-            F.pmod(F.xxhash64("_gram"), F.lit(1 << 28)).alias("_h"),
-        )
-        aggs = []
-        for i in range(num_perm):
-            a_, b_ = _perm_coeffs(i)
-            aggs.append(
-                F.min((F.lit(a_) * F.col("_h") + F.lit(b_)) % F.lit(MINHASH_P)).alias(f"_m{i}")
-            )
-        sigs = (
-            exploded.groupBy("_id", *key_cols)
-            .agg(*aggs)
-            .select("_id", *key_cols, F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig"))
-        )
-        side = side.persist(StorageLevel.MEMORY_AND_DISK)
-        blocks = bands_from_signatures(
-            sigs, id_col="_id", key_cols=key_cols, bands=bands,
-            rows_per_band=num_perm // bands,
-        )
-        # verified is eagerly checkpointed below, so candidate_pairs'
-        # internal caches are releasable before returning (no lazy
-        # consumer outlives this call); candidate_pairs logs any drops
-        cp_caches: list[DataFrame] = []
-        pairs, _ = candidate_pairs(
-            blocks, id_col="_id", key_cols=key_cols,
-            max_block_size=max_block_size, release_into=cp_caches,
-        )
-        verified = _verify(pairs.select("left_id", "right_id")).localCheckpoint(eager=True)
-        side.unpersist()
-        for df in cp_caches:
-            df.unpersist()
-        return verified
-
+    """Exact word n-gram Jaccard over all pairs — the small-table
+    verifier / oracle twin of minhash_near_duplicates (q22). Brute
+    force: bound the input before calling it."""
+    side = df.select(F.col(id_col).alias("_id"), _word_ngrams(text_col, n).alias("_g"))
     a, b = side.alias("a"), side.alias("b")
-    cond = F.col("a._id") < F.col("b._id")
-    if scope_col:
-        cond = cond & (F.col("a._scope") == F.col("b._scope"))
     return (
-        a.join(b, cond)
+        a.join(b, F.col("a._id") < F.col("b._id"))
         .withColumn("inter", F.size(F.array_intersect("a._g", "b._g")))
         .withColumn(
             "jaccard",
@@ -551,7 +456,7 @@ def semantic_duplicates(
     pairs always do (their top-1 lists agree); boundary pairs are
     covered by multi-assignment. assign_probes=nlist degenerates to
     all-pairs-exact (every vector in every list) — the exact end of the
-    dial is always reachable, mirroring ivf_topk's nprobe contract.
+    dial is always reachable.
     Precision is exact regardless: every emitted pair passed the cosine
     verify. Oversized lists are salted/capped by the shared
     candidate_pairs guardrail (drops logged, never silent).
@@ -581,9 +486,8 @@ def semantic_duplicates(
         side.select("_id", F.explode(lists(F.col("_v"))).alias("band_hash"))
         .withColumn("band_id", F.lit(0))
     )
-    # same eager-consumption shape as the banded n-gram path: verified
-    # is checkpointed before return, so the internal caches release
-    # here; candidate_pairs logs any oversized lists it drops
+    # verified is checkpointed before return, so the internal caches
+    # release here; candidate_pairs logs any oversized lists it drops
     cp_caches: list[DataFrame] = []
     pairs, _ = candidate_pairs(
         blocks, id_col="_id", key_cols=(), max_block_size=max_list_size,

@@ -41,14 +41,6 @@ def pairwise_prf(predicted: DataFrame, labeled: DataFrame) -> dict[str, float]:
     return {"tp": tp, "fp": fp, "fn": fn, "precision": p, "recall": r, "f1": f1}
 
 
-def accuracy(df: DataFrame, target: str, pred: str) -> DataFrame:
-    """Masked accuracy as avg(indicator) — reference AccuracyMetric
-    (/root/reference/cogie/core/metrics.py:231-292)."""
-    return df.agg(
-        F.avg(F.when(F.col(target) == F.col(pred), 1.0).otherwise(0.0)).alias("accuracy")
-    )
-
-
 def fbeta_by_class(
     df: DataFrame,
     target: str,

@@ -98,7 +98,7 @@ def score_features(
     tfidf (linear) sees the whole feature window.
 
     The features ride the same pair-table joins as the cascade
-    signature (plans/linkage.cascade_pairs): every avoided pair-table
+    signature (blocking.cascade_join): every avoided pair-table
     shuffle is the dominant cost at 10^12-pair scale.
 
     ``partitions`` controls the pre-scorer spread WITHOUT probing the

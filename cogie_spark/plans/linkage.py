@@ -34,7 +34,7 @@ from cogie_spark.io.tableio import CheckpointManager
 from cogie_spark.operators.blocking import (
     bands_from_signatures,
     candidate_pairs,
-    estimate_jaccard,
+    cascade_join,
     signature_table,
 )
 from cogie_spark.operators.cc import connected_components
@@ -107,14 +107,14 @@ def cascade_pairs(
     cfg: LinkageConfig,
     release_into: list,
 ) -> DataFrame:
-    """Attach both sides' cascade signature and feature window to the
-    candidate pairs; keep the pairs whose MinHash-agreement Jaccard
-    estimate reaches ``cfg.prefilter_est_jaccard``. ``sigs`` carries
-    (id, sig) and ``files`` (id, content) for every id in ``pairs``; the
-    output adds ``est_jaccard`` and the ``_lf``/``_rf`` features that
-    score_features reads. The per-id side table is persisted into
-    ``release_into``. run_linkage and the stream's cross-batch scoring
-    both go through here.
+    """Build linkage's cascade side table — the b-bit signature plus the
+    feature window per id — and run ``blocking.cascade_join`` over it at
+    ``cfg.prefilter_est_jaccard``. ``sigs`` carries (id, sig) and
+    ``files`` (id, content) for every id in ``pairs``; the output adds
+    ``est_jaccard`` and the ``_lf``/``_rf`` features that score_features
+    reads. The side table is persisted into ``release_into``.
+    run_linkage and the stream's cross-batch scoring both go through
+    here.
 
     Cascade + feature attach are FUSED: the pair table is the biggest
     relation at scale, so it is shuffled exactly twice (once per side)
@@ -147,26 +147,8 @@ def cascade_pairs(
     )
     side = side.persist(StorageLevel.MEMORY_AND_DISK)
     release_into.append(side)
-    return (
-        pairs.join(
-            side.select(
-                F.col("_sid").alias("left_id"),
-                F.col("sig").alias("_lsig"),
-                F.col("_feat").alias("_lf"),
-            ),
-            "left_id",
-        )
-        .join(
-            side.select(
-                F.col("_sid").alias("right_id"),
-                F.col("sig").alias("_rsig"),
-                F.col("_feat").alias("_rf"),
-            ),
-            "right_id",
-        )
-        .withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), cfg.num_perm))
-        .filter(F.col("est_jaccard") >= cfg.prefilter_est_jaccard)
-        .drop("_lsig", "_rsig")
+    return cascade_join(
+        pairs, side, cfg.num_perm, cfg.prefilter_est_jaccard, payload=("_feat", "_lf", "_rf")
     )
 
 

@@ -166,10 +166,12 @@ def _near_dup_gate(
     Persisted handles (batch rows, band table) are appended to
     ``to_release`` for the caller to unpersist after its commit.
     """
-    from cogie_spark.functions.text import char_shingles
+    from pyspark import StorageLevel
+
     from cogie_spark.operators.blocking import (
         bands_from_signatures,
         candidate_pairs,
+        cross_band_pairs,
         signature_table,
     )
     from cogie_spark.operators.cc import connected_components
@@ -189,50 +191,24 @@ def _near_dup_gate(
         sigs, id_col=idc, key_cols=(), bands=_ND_BANDS,
         rows_per_band=_ND_NUM_PERM // _ND_BANDS,
     )
-    from pyspark import StorageLevel
-
     nb = nb.persist(StorageLevel.MEMORY_AND_DISK)
     to_release.append(nb)
 
-    def _shingles(src: DataFrame, ids: DataFrame, idcol: str) -> DataFrame:
-        # shingle arrays are interpreted per-row expressions — build
-        # them only for rows that appear in a candidate pair
-        return src.join(ids, F.col(idcol) == F.col("_cid"), "left_semi").select(
-            F.col(idcol).alias("_sid"),
-            char_shingles(cfg.text_col, k=_ND_SHINGLE_K).alias("_sh"),
-        )
-
-    def _verify(pairs: DataFrame, left_sh: DataFrame, right_sh: DataFrame) -> DataFrame:
-        # the ONE shared near-dup-at-threshold definition — batch
-        # (dedup.ngram_jaccard_pairs banded) and this streaming gate
-        # cannot diverge on what counts as a duplicate
+    def _verify(pairs: DataFrame, docs: DataFrame, right_docs: DataFrame | None = None):
+        # the ONE near-dup-at-threshold definition minhash_near_duplicates
+        # also uses: batch and this streaming gate cannot diverge on
+        # what counts as a duplicate
         return jaccard_verify_pairs(
-            pairs, left_sh, right_sh,
-            threshold=jaccard_threshold, id_col="_sid", set_col="_sh",
-        ).select("left_id", "right_id")
+            pairs, docs, idc, cfg.text_col, threshold=jaccard_threshold,
+            shingle_k=_ND_SHINGLE_K, right_docs=right_docs,
+        )
 
     # cross-batch admission gate against the admitted band state
     band_paths = log.paths("bands")
     if band_paths:
-        ob = spark.read.parquet(*band_paths)
-        cross = (
-            nb.alias("n")
-            .join(
-                ob.alias("o"),
-                (F.col("n.band_id") == F.col("o.band_id"))
-                & (F.col("n.band_hash") == F.col("o.band_hash")),
-            )
-            .select(
-                F.col(f"n.{idc}").alias("left_id"), F.col(f"o.{idc}").alias("right_id")
-            )
-            .distinct()
-        )
+        cross = cross_band_pairs(nb, spark.read.parquet(*band_paths), id_col=idc, key_cols=())
         old_txt = spark.read.parquet(*log.paths("kept"))
-        new_sh = _shingles(kept, cross.select(F.col("left_id").alias("_cid")).distinct(), idc)
-        old_sh = _shingles(
-            old_txt, cross.select(F.col("right_id").alias("_cid")).distinct(), idc
-        )
-        dropped_new = _verify(cross, new_sh, old_sh).select(
+        dropped_new = _verify(cross, kept, old_txt).select(
             F.col("left_id").alias(idc)
         ).distinct()
         kept = kept.join(dropped_new, idc, "left_anti")
@@ -248,14 +224,7 @@ def _near_dup_gate(
         .join(surv_ids, F.col("left_id") == F.col("_cid"), "left_semi")
         .join(surv_ids, F.col("right_id") == F.col("_cid"), "left_semi")
     )
-    batch_sh = _shingles(
-        kept,
-        self_pairs.select(F.col("left_id").alias("_cid"))
-        .unionAll(self_pairs.select(F.col("right_id").alias("_cid")))
-        .distinct(),
-        idc,
-    )
-    matched = _verify(self_pairs, batch_sh, batch_sh)
+    matched = _verify(self_pairs, kept).select("left_id", "right_id")
     # release_into: CC's final localCheckpoint joins the batch-scoped
     # caches released at commit — without it every micro-batch leaks
     # session-lifetime checkpoint RDDs (superseded rounds release

@@ -11,11 +11,12 @@ persisted cluster state, then appended to it, under ONE
 
 - batch signatures, state bands and legacy migration use the config's
   MinHash family (num_perm, bands, signature_mode, shingle_k);
-- cross-batch candidates (batch bands x state bands) go through
-  ``cascade_pairs`` — run_linkage's est-Jaccard cascade and feature
-  attach — then ``score_features`` with the config's windows, weights
-  and a corpus IDF over the rows being linked (run_linkage likewise
-  takes IDF over the rows it links);
+- cross-batch candidates (batch bands x state bands,
+  ``blocking.cross_band_pairs``) go through ``cascade_pairs`` —
+  run_linkage's est-Jaccard cascade and feature attach — then
+  ``score_features`` with the config's windows, weights and a corpus
+  IDF over the rows being linked (run_linkage likewise takes IDF over
+  the rows it links);
 - the rows no state cluster claims are clustered by ``run_linkage``
   itself with the same config.
 
@@ -67,7 +68,11 @@ from pyspark.sql import functions as F
 
 from cogie_spark.io import fsio
 from cogie_spark.io.tableio import StateLog, TableIO, union_parts
-from cogie_spark.operators.blocking import bands_from_signatures, signature_table
+from cogie_spark.operators.blocking import (
+    bands_from_signatures,
+    cross_band_pairs,
+    signature_table,
+)
 from cogie_spark.operators.cc import CheckpointHandle
 from cogie_spark.operators.scoring import corpus_idf, match_edges, score_features
 from cogie_spark.plans.linkage import LinkageConfig, cascade_pairs, run_linkage
@@ -212,20 +217,7 @@ def incremental_link_batch(
             # state bands come straight off parquet — derived ONCE at
             # write time; no per-batch re-explode of the state sig table
             ob = spark.read.parquet(*log.paths("bands"))
-            nb = _bands(new_sigs, cfg)
-            cand = _persist(
-                nb.alias("n")
-                .join(
-                    ob.alias("o"),
-                    (F.col("n.lang") == F.col("o.lang"))
-                    & (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.band_hash") == F.col("o.band_hash")),
-                )
-                .select(
-                    F.col("n.file_id").alias("left_id"), F.col("o.file_id").alias("right_id")
-                )
-                .distinct()
-            )
+            cand = _persist(cross_band_pairs(_bands(new_sigs, cfg), ob))
             # the rows of both sides that appear in a candidate pair, with
             # the signatures the batch just computed and the state stored:
             # the state is only SCANNED (columnar read), never shuffled

@@ -4,16 +4,32 @@ plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence files.
 Usage:
     python scripts/capture_plans.py r06 before [sf_dir]
     python scripts/capture_plans.py r06 after  [sf_dir]
+    python scripts/capture_plans.py r06 compare before after
 
 Captures the six relational/dedup headliners plus the corpus-clean plan
 and the flagship stage plans (signatures, pairs, scored, clusters —
 explained WITHOUT running the pipeline's eager actions where possible).
+
+``compare`` reads two captured suffixes of one tag and masks the
+``plan_id=N`` numbers (they count the plans the session built before).
+Per plan it prints ``identical`` (byte-identical after that mask),
+``identical up to ids`` (equal once every ``#N`` expression id is
+renumbered in order of first appearance and every ``RDD[N]`` id is
+masked: both come from JVM-wide counters, so a plan built after a
+changed one, or beside the flagship's IDF driver thread, is renumbered
+without changing), or ``different``/``missing``. It exits non-zero on
+any ``different`` or ``missing`` plan.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
+
+_PLAN_ID = re.compile(r"plan_id=\d+")
+_EXPR_ID = re.compile(r"#\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
 
 
 def _fmt(df) -> str:
@@ -22,14 +38,54 @@ def _fmt(df) -> str:
     )
 
 
+def _masked(path: str) -> str | None:
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return _PLAN_ID.sub("plan_id=N", f.read())
+
+
+def _renumbered(plan: str) -> str:
+    ids: dict[str, str] = {}
+    plan = _RDD_ID.sub("RDD[N]", plan)
+    return _EXPR_ID.sub(lambda m: ids.setdefault(m.group(), f"#{len(ids)}"), plan)
+
+
+def compare(outdir: str, a: str, b: str) -> int:
+    """Print one verdict per plan captured under either suffix; return
+    the number of plans that are different or missing."""
+    names = sorted({
+        f[: -len(f"_{s}.txt")]
+        for s in (a, b)
+        for f in os.listdir(outdir)
+        if f.endswith(f"_{s}.txt")
+    })
+    bad = 0
+    for name in names:
+        pa, pb = (_masked(os.path.join(outdir, f"{name}_{s}.txt")) for s in (a, b))
+        if pa is None or pb is None:
+            verdict = "missing"
+        elif pa == pb:
+            verdict = "identical"
+        elif _renumbered(pa) == _renumbered(pb):
+            verdict = "identical up to ids"
+        else:
+            verdict = "different"
+        bad += verdict in ("missing", "different")
+        print(f"{name}: {verdict}")
+    return bad
+
+
 def main():
     tag = sys.argv[1] if len(sys.argv) > 1 else "r06"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                          "plans", tag)
+    if suffix == "compare":
+        sys.exit(1 if compare(outdir, sys.argv[3], sys.argv[4]) else 0)
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
     from cogie_spark.queries import QUERIES

@@ -28,13 +28,6 @@ def main() -> None:
     ap.add_argument("--langs", default="", help="comma-separated language allowlist (empty = all)")
     ap.add_argument("--no-redact", action="store_true")
     ap.add_argument(
-        "--pack-budget", type=int, default=0,
-        help="if >0, bin-pack kept docs into packs of at most this many "
-             "whitespace tokens (operators/packing.py) and report fill stats",
-    )
-    ap.add_argument("--pack-output", default=None,
-                    help="parquet dir for the (id, pack_id, pack_slot) assignment")
-    ap.add_argument(
         "--near-dup", choices=("off", "minhash", "semantic"), default="off",
         help="near-duplicate pruning of the kept view (plans/corpus.py "
              "near_dup_prune): transitive groups, min-id representative",
@@ -95,7 +88,7 @@ def main() -> None:
         kept = nd["pruned"]
     if args.output:
         # the training view on disk is the FINAL (gated, deduped,
-        # near-dup-pruned) one; downstream stats/packing read the
+        # near-dup-pruned) one; the stats below read the
         # written bytes instead of recomputing the plan
         kept.write.mode("overwrite").parquet(args.output)
         kept = spark.read.parquet(args.output)
@@ -108,32 +101,6 @@ def main() -> None:
     }
     if n_dup_pruned is not None:
         stats["near_dup_pruned"] = n_dup_pruned
-    if args.pack_budget > 0:
-        from cogie_spark.operators.packing import pack_sequences, pack_stats
-        from cogie_spark.operators.textstats import token_count
-
-        # BFD quality needs a decent population per shard (~64+ docs);
-        # the session's shuffle partitioning is the upper bound so huge
-        # corpora still spread across the cluster
-        shards = max(1, min(
-            int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            n_kept // 64,
-        ))
-        packed = pack_sequences(
-            kept.select(args.id_col, token_count(args.text_col).alias("n_tokens")),
-            budget=args.pack_budget,
-            id_col=args.id_col,
-            shards=shards,
-        )
-        if args.pack_output:
-            packed.write.mode("overwrite").parquet(args.pack_output)
-            packed = spark.read.parquet(args.pack_output)
-        ps = pack_stats(packed, args.pack_budget).collect()[0]
-        stats.update(
-            n_packs=ps.n_packs,
-            n_oversize_docs=ps.n_oversize,
-            pack_fill_rate=float(ps.fill_rate) if ps.fill_rate is not None else None,
-        )
     stats["wall_sec"] = round(time.time() - t0, 2)
     print(json.dumps(stats))
     spark.stop()

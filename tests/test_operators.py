@@ -322,31 +322,6 @@ def test_topk_dim_passthrough_no_double_probe(spark):
     assert n_passed == 0
 
 
-def test_ngram_jaccard_banded_matches_exact_no_cartesian(spark):
-    """VERDICT r3 #7: the banded n-gram Jaccard path must (a) find the
-    same pairs as the exact verifier at near-dup thresholds and (b)
-    never plan a cartesian product."""
-    from cogie_spark.operators.dedup import ngram_jaccard_pairs
-
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    rows = [(0, base, "en"), (1, base + " ok", "en"), (2, base.replace("quick", "slow"), "en")]
-    rows += [(10 + i, f"totally different text number {i} with unrelated words {i*7}", "en")
-             for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-
-    exact = ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.6, scope_col="lang")
-    banded = ngram_jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.6, scope_col="lang", method="banded"
-    )
-    e = {(r["left_id"], r["right_id"], r["jaccard"]) for r in exact.collect()}
-    b = {(r["left_id"], r["right_id"], r["jaccard"]) for r in banded.collect()}
-    assert e, "fixture must contain at least one near-dup pair"
-    assert b == e, f"banded {b} != exact {e}"
-
-    plan = banded._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-
-
 def test_contamination_tags_hash_grams_equivalent(spark):
     """The xxhash64-gram join (the 100 TB byte-saving path) must tag the
     same documents as the exact-string join on real data, and the plan
@@ -486,47 +461,26 @@ def test_cc_midloop_failure_releases_checkpoints(spark, monkeypatch):
     assert not left, f"mid-loop failure stranded localCheckpoint RDDs {sorted(left)}"
 
 
-def test_ivf_exact_when_nprobe_equals_nlist(spark):
-    """IVF's exact end of the dial: nprobe == nlist probes every list,
-    so the result must EQUAL brute force row-for-row (same rounding,
-    same vec_id tie-break)."""
-    from cogie_spark.operators.ann import brute_force_topk, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    probes = emb.filter("vec_id < 8").select(F.col("vec_id").alias("probe_id"), "embedding")
-    exact = {tuple(r) for r in brute_force_topk(emb, probes, k=5).collect()}
-    ivf = {tuple(r) for r in ivf_topk(emb, probes, k=5, nlist=8, nprobe=8, seed=13).collect()}
-    assert ivf == exact
-
-
-def test_ivf_recall_and_determinism(spark):
-    """Partial-probe recall vs brute force on real embeddings, and the
-    quantizer's determinism (same corpus + seed -> identical centroids,
-    so two plans give identical results)."""
+def test_ivf_train_determinism(spark):
+    """The quantizer is deterministic: same corpus + seed -> identical
+    centroids, so semantic_duplicates' lists are reproducible."""
     import numpy as np
 
-    from cogie_spark.operators.ann import brute_force_topk, ivf_topk, ivf_train
+    from cogie_spark.operators.ann import ivf_train
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    probes = emb.filter("vec_id < 10").select(F.col("vec_id").alias("probe_id"), "embedding")
-    exact = brute_force_topk(emb, probes, k=5)
-    approx = ivf_topk(emb, probes, k=5, nlist=8, nprobe=3, seed=13)
-    hits = exact.join(approx, ["probe_id", "vec_id"], "inner").count()
-    total = exact.count()
-    assert hits / total >= 0.5, f"recall {hits}/{total}"
-
     c1 = ivf_train(emb, nlist=8, seed=13)
     c2 = ivf_train(emb, nlist=8, seed=13)
     assert np.array_equal(c1, c2)
 
 
-def test_ivf_assign_no_shuffle_and_null_safe(spark):
-    """ivf_assign is ONE narrow Arrow projection (no Exchange in the
-    plan) and NULL / wrong-width vectors get a NULL list_id instead of
-    failing the batch."""
+def test_ivf_lists_no_shuffle_and_null_safe(spark):
+    """The centroid-list projection semantic_duplicates blocks on is ONE
+    narrow Arrow projection (no Exchange in the plan) and NULL /
+    wrong-width vectors get NULL lists instead of failing the batch."""
     import numpy as np
 
-    from cogie_spark.operators.ann import ivf_assign
+    from cogie_spark.operators.ann import _ivf_lists_arrow
 
     cents = np.eye(4, dtype=np.float64)[:3]  # 3 centroids, dim 4
     df = spark.createDataFrame(
@@ -534,11 +488,12 @@ def test_ivf_assign_no_shuffle_and_null_safe(spark):
          (3, None), (4, [1.0, 0.0])],
         "vec_id int, embedding array<double>",
     )
-    out = ivf_assign(df, cents, dim=4)
+    lists = _ivf_lists_arrow(cents, nprobe=1, dim=4)
+    out = df.withColumn("lists", lists(F.col("embedding")))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    rows = {r["vec_id"]: r["list_id"] for r in out.collect()}
-    assert rows[1] == 0 and rows[2] == 1
+    rows = {r["vec_id"]: r["lists"] for r in out.collect()}
+    assert rows[1] == [0] and rows[2] == [1]
     assert rows[3] is None and rows[4] is None
 
 
@@ -608,24 +563,11 @@ def test_semantic_duplicates_clustered_recall(spark):
     assert s == e, f"missing={e - s} extra={s - e}"
 
 
-def test_fast_family_recall_on_word_boundary_edits(spark):
-    """Adversarial recall bound for the 'fast' signature family
-    (VERDICT r5 #6): word-boundary deletions between LONG tokens keep
-    char-8-shingle Jaccard >= 0.9 (each deleted space perturbs ~14 of
-    >1000 shingles) while destroying ~3 word-3-grams per edit — the
-    documented pathological case where banding over word-gram
-    signatures under-recalls relative to the char-shingle domain the
-    threshold speaks. Pins the measured behavior: mode='portable'
-    (char-shingle signatures) recalls ALL such pairs; mode='fast'
-    recalls most but NOT all (0.783 at this fixed seed — the gap is
-    real and stated in the operator docstring). Precision is exact for
-    both (the char-shingle verify)."""
+def _word_boundary_docs(spark):
+    """60 long-token docs, each paired with a copy that lost 5 word
+    boundaries: char-8-shingle Jaccard >= 0.9, word-gram similarity
+    much lower (the adversarial near-dup corpus)."""
     import random
-
-    from pyspark.sql import functions as F
-
-    from cogie_spark.functions.text import char_shingles
-    from cogie_spark.operators.dedup import minhash_near_duplicates
 
     rng = random.Random(3)
     stems = [
@@ -644,7 +586,27 @@ def test_fast_family_recall_on_word_boundary_edits(spark):
         for j in rng.sample(spaces, 5):  # 5 word-boundary deletions
             chars[j] = ""
         docs.append((2 * i + 1, "".join(chars)))
-    df = spark.createDataFrame(docs, "doc_id long, text string")
+    return spark.createDataFrame(docs, "doc_id long, text string")
+
+
+def test_fast_family_recall_on_word_boundary_edits(spark):
+    """Adversarial recall bound for the 'fast' signature family
+    (VERDICT r5 #6): word-boundary deletions between LONG tokens keep
+    char-8-shingle Jaccard >= 0.9 (each deleted space perturbs ~14 of
+    >1000 shingles) while destroying ~3 word-3-grams per edit — the
+    documented pathological case where banding over word-gram
+    signatures under-recalls relative to the char-shingle domain the
+    threshold speaks. Pins the measured behavior: mode='portable'
+    (char-shingle signatures) recalls ALL such pairs; mode='fast'
+    recalls most but NOT all (0.783 at this fixed seed — the gap is
+    real and stated in the operator docstring). Precision is exact for
+    both (the char-shingle verify)."""
+    from pyspark.sql import functions as F
+
+    from cogie_spark.functions.text import char_shingles
+    from cogie_spark.operators.dedup import minhash_near_duplicates
+
+    df = _word_boundary_docs(spark)
 
     # ground truth: brute-force exact char-shingle Jaccard >= 0.9
     sh = df.select("doc_id", char_shingles("text", k=8).alias("sh"))
@@ -675,3 +637,26 @@ def test_fast_family_recall_on_word_boundary_edits(spark):
     # below 1 here (the gap exists) but at least 0.7 (it degrades, not
     # collapses). Deterministic at this seed: observed 0.783.
     assert 0.7 <= recall["fast"] < 1.0, recall
+
+
+def test_minhash_near_duplicates_releases_every_cache(spark):
+    """release_into hands back every cache the near-dup path makes (the
+    signature table, candidate_pairs' block table, the cascade
+    survivors): once the caller unpersists them, no RDD persisted during
+    the call is left. Ids, not a count, as in the no_leaked_rdds
+    fixture."""
+    from cogie_spark.operators.dedup import minhash_near_duplicates
+
+    df = _word_boundary_docs(spark)
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    caches: list = []
+    out = minhash_near_duplicates(
+        df, id_col="doc_id", text_col="text", jaccard_threshold=0.9, release_into=caches
+    )
+    assert out.collect(), "fixture must yield near-dup pairs"
+    assert caches
+    for c in caches:
+        c.unpersist()
+    left = set(rdds().keySet()) - before
+    assert not left, f"near-dup path left persisted RDDs {sorted(left)}"

@@ -7,10 +7,9 @@ The roots are every name in the driver contract (``bench.py``,
 (``scripts/``, ``perfbench/``) and the module-level statements of the
 package (imports excepted: re-exporting a name is not using it). The
 walk follows names through the bodies of the defs it reaches until
-nothing new turns up. Matching is by bare name, not by module, and a
-word inside a string counts as a name (a docstring that cites a def as
-the oracle for another keeps it), so the guard can only err toward
-"reached".
+nothing new turns up. Matching is by bare name, not by module, so the
+guard can only err toward "reached". Words inside strings do not count:
+a docstring that cites a def keeps nothing alive.
 
 ``cogie_spark/fixtures/`` builds test data; its defs are kept and walked
 as roots, so the helpers they call stay reachable.
@@ -20,7 +19,6 @@ Runs without Spark: the files are parsed, never imported.
 from __future__ import annotations
 
 import ast
-import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -41,16 +39,22 @@ ROOT_GLOBS = (
 # Reference implementations kept only so a test can compare against them:
 # "module/path.py:def_name" -> "tests/test_file.py::test_name". Entries
 # are walked like roots, so the helpers they call stay reached.
-ALLOWLIST: dict[str, str] = {}
+ALLOWLIST: dict[str, str] = {
+    "cogie_spark/functions/similarity.py:jaro_winkler_py":
+        "tests/test_similarity.py::test_jaro_winkler_matches_duckdb",
+    "cogie_spark/functions/similarity.py:_levenshtein":
+        "tests/test_similarity.py::test_levenshtein_matches_duckdb",
+    "cogie_spark/functions/similarity.py:token_set_ratio_py":
+        "tests/test_similarity.py::test_token_set_ratio_native_matches_python",
+}
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 _IMPORTS = (ast.Import, ast.ImportFrom)
-_WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
 def _names(node: ast.AST) -> set[str]:
-    """Every identifier ``node`` mentions: names, attributes, def names,
-    imported names and the identifier-shaped words of string constants."""
+    """Every identifier ``node`` mentions: names, attributes, def names
+    and imported names."""
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, _DEFS):
@@ -61,8 +65,6 @@ def _names(node: ast.AST) -> set[str]:
             out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.add(n.name.rsplit(".", 1)[-1])
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
-            out.update(_WORD.findall(n.value))
     return out
 
 

@@ -48,12 +48,10 @@ def test_token_set_ratio_properties():
 
 
 def test_pandas_udfs_run(spark):
-    from pyspark.sql import functions as F
-
-    from cogie_spark.functions.similarity import jaro_winkler, token_set_ratio
+    from cogie_spark.functions.similarity import jaro_winkler
 
     df = spark.createDataFrame([("martha", "marhta"), ("abc", "xyz")], ["a", "b"])
-    out = df.select(jaro_winkler("a", "b").alias("jw"), token_set_ratio("a", "b").alias("ts")).collect()
+    out = df.select(jaro_winkler("a", "b").alias("jw")).collect()
     assert out[0]["jw"] == pytest.approx(0.9611111111111111)
     assert out[1]["jw"] < 0.6
 
