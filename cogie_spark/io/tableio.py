@@ -42,6 +42,7 @@ import time
 from pathlib import Path
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -530,3 +531,60 @@ class CheckpointManager:
 
     def lineage_df(self) -> DataFrame:
         return self._log_df("lineage.jsonl")
+
+
+class _Releasable:
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
+
+
+class RunScope(_Releasable, list):
+    """The owner of every cache one pipeline run makes: persisted frames
+    and broadcasts in the list itself (what operators' ``release_into``
+    appends to), localCheckpoint handles (``cc.CheckpointHandle``) in
+    ``checkpoints``. ``release()`` (or leaving the ``with`` block) drops
+    both, so it comes only after every output derived from the run has
+    been consumed or committed: a released checkpoint cannot recompute.
+    """
+
+    def __init__(self, checkpoint: CheckpointManager | None = None):
+        super().__init__()
+        self.checkpoint = checkpoint
+        self.checkpoints: list = []
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
+
+    def keep(self, stage: str, df: DataFrame, cache: bool = True) -> DataFrame:
+        """A stage output later stages re-read: committed through the
+        CheckpointManager when the run has one, else persisted (or, with
+        ``cache=False``, returned as is)."""
+        if self.checkpoint is not None:
+            return self.checkpoint.commit(stage, df)
+        return self.persist(df) if cache else df
+
+    def log_metric(self, stage: str, key: str, value: Callable[[], float]) -> None:
+        """Log ``value()`` to the CheckpointManager's metrics; without one
+        ``value`` is never called, so it may run a job."""
+        if self.checkpoint is not None:
+            self.checkpoint.log_metric(stage, 0, key, float(value()))
+
+    def release(self) -> None:
+        for handle in self + self.checkpoints:
+            handle.unpersist()
+        self.clear()
+        self.checkpoints.clear()
+
+
+class RunResult(_Releasable, dict):
+    """A run's named outputs, read as a dict, plus ``release()`` / ``with``
+    for the scope that owns their caches. ``_persisted`` and
+    ``_checkpoints`` are the scope's two lists, for hand release."""
+
+    def __init__(self, scope: RunScope, **outputs):
+        super().__init__(outputs, _persisted=scope, _checkpoints=scope.checkpoints)
+        self.release = scope.release

@@ -208,7 +208,8 @@ def candidate_pairs(
     key_cols: tuple[str, ...] = ("lang",),
     max_block_size: int = 64,
     salvage_factor: int = 32,
-    release_into: list | None = None,
+    *,
+    release_into: list,
     stats_into: dict | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Self-join blocks into deduped candidate pairs with a two-tier
@@ -236,11 +237,9 @@ def candidate_pairs(
     logged, without a second action on ``dropped``).
 
     Returns (pairs, dropped_blocks). Both are LAZY over internal caches
-    (the block table, and the per-block sizes on the hot path); pass
-    ``release_into`` to collect those persisted frames so loop-style
-    callers (streaming micro-batches) can unpersist them once pairs and
-    dropped are materialized — without it the caches live until session
-    end / LRU eviction, the acceptable default for one-shot jobs.
+    (the block table, and the per-block sizes on the hot path), which
+    are appended to ``release_into``: the caller unpersists them once
+    pairs and dropped are materialized.
     """
     from pyspark import StorageLevel
 
@@ -251,8 +250,7 @@ def candidate_pairs(
     # shuffle twice costs more than the cache round-trip at both core
     # counts. MEMORY_AND_DISK spills at scale.
     blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-    if release_into is not None:
-        release_into.append(blocks)
+    release_into.append(blocks)
     sizes = blocks.groupBy(*key).agg(F.count("*").alias("block_size"))
 
     # adaptive guardrail: the sizes AGGREGATION is cheap (map-side
@@ -295,8 +293,7 @@ def candidate_pairs(
         # hot-block path: sizes is re-read by the keep/dropped splits
         # and the salting join — cache the (1 row per block) table here
         sizes = sizes.persist(StorageLevel.MEMORY_AND_DISK)
-        if release_into is not None:
-            release_into.append(sizes)
+        release_into.append(sizes)
         keep = sizes.filter(F.col("block_size") <= max_block_size * salvage_factor)
         dropped = sizes.filter(F.col("block_size") > max_block_size * salvage_factor)
 

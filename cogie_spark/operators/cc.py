@@ -156,7 +156,8 @@ def connected_components(
     max_iter: int = 20,
     checkpoint=None,
     check_every: int = 1,
-    release_into: list | None = None,
+    *,
+    release_into: list,
     local_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """Edge list (left_id, right_id) -> (file_id, cluster_id).
@@ -170,11 +171,10 @@ def connected_components(
     edge set is committed as a resumable snapshot, and a restarted call
     continues from the last committed iteration.
 
-    ``release_into``: optional list collecting the FINAL round's
-    localCheckpoint DataFrame so loop-style callers (streaming
-    micro-batches) can unpersist it once the clusters are durably
-    committed — without it each batch leaks one session-lifetime
-    localCheckpoint. Superseded intermediate rounds are released
+    ``release_into``: receives the FINAL round's localCheckpoint handle
+    (``CheckpointHandle``), which the output is lazy over; the caller
+    unpersists it once the clusters are consumed or durably committed.
+    Superseded intermediate rounds are released
     in-loop either way (each round's barrier materializes before its
     predecessor is dropped, so nothing can need recomputing). CAUTION:
     unpersisting a localCheckpoint deletes its only copy (lineage is
@@ -228,8 +228,7 @@ def connected_components(
         with _jd(cur, "cogie:cc-local-count"):
             n_edges = cur.count()
         if n_edges <= local_max_edges:
-            if release_into is not None:
-                release_into.append(CheckpointHandle(cur))
+            release_into.append(CheckpointHandle(cur))
             return _components_single_task(cur)
 
     # `owned` is the live localCheckpoint backing `cur` (None when cur
@@ -305,9 +304,8 @@ def connected_components(
         raise
 
     # hand the FINAL localCheckpoint to the caller for post-commit
-    # release; with no release_into it stays session-lifetime (the
-    # one-shot batch-job behavior of rounds 1-4)
-    if release_into is not None and owned is not None:
+    # release (None when parquet-backed by a CheckpointManager commit)
+    if owned is not None:
         release_into.append(CheckpointHandle(owned))
 
     # converged: every node points at its component minimum

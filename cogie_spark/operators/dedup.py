@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from cogie_spark.functions.hashing import simhash64
 from cogie_spark.functions.similarity import cosine_native
 from cogie_spark.functions.text import char_shingles, tokens
+from cogie_spark.io.tableio import RunScope
 from cogie_spark.operators.blocking import candidate_pairs
 
 
@@ -43,7 +44,8 @@ def minhash_near_duplicates(
     jaccard_threshold: float = 0.7,
     max_block_size: int = 256,
     mode: str = "portable",
-    release_into: list | None = None,
+    *,
+    release_into: list,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs verified with exact shingle Jaccard.
 
@@ -72,12 +74,9 @@ def minhash_near_duplicates(
     pairs where 'portable' recalls 1.0; choose 'portable' when recall
     in the char-shingle domain must be analytic.
 
-    ``release_into``: optional list collecting this call's persisted
-    frames (signature table, pair table, block caches) so loop-style
-    callers (near_dup_prune per corpus, streaming batches) can
-    unpersist them once the output is materialized — without it the
-    caches live for the session, the acceptable default for one-shot
-    jobs (VERDICT r5 #4).
+    ``release_into``: collects this call's persisted frames (signature
+    table, block caches, the cascade survivors' ids); the caller
+    unpersists them once the output is materialized (VERDICT r5 #4).
     """
     from pyspark import StorageLevel
 
@@ -96,8 +95,7 @@ def minhash_near_duplicates(
         num_perm=est_perm, shingle_k=shingle_k, mode=mode,
     )
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-    if release_into is not None:
-        release_into.append(sigs)
+    release_into.append(sigs)
     blocks = bands_from_signatures(
         sigs, id_col=id_col, key_cols=key_cols, bands=bands, rows_per_band=num_perm // bands
     )
@@ -119,11 +117,11 @@ def minhash_near_duplicates(
     est_margin = 0.4 if mode == "fast" else 0.2
     pairs = cascade_join(
         pairs, sigs, est_perm, max(jaccard_threshold - est_margin, 0.0), id_col=id_col
-    ).drop("est_jaccard")
-    # the verify reads the survivors twice (candidate ids + pair joins)
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    if release_into is not None:
-        release_into.append(pairs)
+    )
+    # the verify reads the survivors twice (candidate ids + pair joins),
+    # and only their ids
+    pairs = pairs.select("left_id", "right_id").persist(StorageLevel.MEMORY_AND_DISK)
+    release_into.append(pairs)
     return jaccard_verify_pairs(
         pairs, df, id_col, text_col, threshold=jaccard_threshold, shingle_k=shingle_k
     )
@@ -464,9 +462,11 @@ def semantic_duplicates(
     One narrow Arrow projection (list codes), one bounded-bucket pair
     aggregation, two id-keyed feature joins for the verify — no
     all-pairs stage anywhere at the default settings.
-    """
-    from pyspark import StorageLevel
 
+    The result is an eager localCheckpoint (the internal caches are
+    released before returning); the caller owns it and releases it with
+    ``cc.CheckpointHandle(result).unpersist()`` once consumed.
+    """
     from cogie_spark.operators.ann import _ivf_lists_arrow, infer_dim, ivf_train
 
     dim = dim or infer_dim(df, vec_col)
@@ -475,34 +475,30 @@ def semantic_duplicates(
             df, nlist=nlist, id_col=id_col, vec_col=vec_col,
             dim=dim, train_size=train_size, seed=seed,
         )
-    side = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     lists = _ivf_lists_arrow(centroids, nprobe=assign_probes, dim=dim)
-    # NULL / wrong-width vectors get NULL codes; explode drops them —
-    # the family's null-propagation convention (they can never pair)
-    blocks = (
-        side.select("_id", F.explode(lists(F.col("_v"))).alias("band_hash"))
-        .withColumn("band_id", F.lit(0))
-    )
     # verified is checkpointed before return, so the internal caches
     # release here; candidate_pairs logs any oversized lists it drops
-    cp_caches: list[DataFrame] = []
-    pairs, _ = candidate_pairs(
-        blocks, id_col="_id", key_cols=(), max_block_size=max_list_size,
-        release_into=cp_caches,
-    )
-    verified = (
-        pairs.select("left_id", "right_id")
-        .join(side.select(F.col("_id").alias("left_id"), F.col("_v").alias("_lv")), "left_id")
-        .join(side.select(F.col("_id").alias("right_id"), F.col("_v").alias("_rv")), "right_id")
-        .withColumn("cosine", F.round(cosine_native(F.col("_lv"), F.col("_rv"), dim=dim), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select("left_id", "right_id", "cosine")
-        .localCheckpoint(eager=True)
-    )
-    side.unpersist()
-    for df in cp_caches:
-        df.unpersist()
+    with RunScope() as caches:
+        side = caches.persist(df.select(
+            F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+        ))
+        # NULL / wrong-width vectors get NULL codes; explode drops them —
+        # the family's null-propagation convention (they can never pair)
+        blocks = (
+            side.select("_id", F.explode(lists(F.col("_v"))).alias("band_hash"))
+            .withColumn("band_id", F.lit(0))
+        )
+        pairs, _ = candidate_pairs(
+            blocks, id_col="_id", key_cols=(), max_block_size=max_list_size,
+            release_into=caches,
+        )
+        verified = (
+            pairs.select("left_id", "right_id")
+            .join(side.select(F.col("_id").alias("left_id"), F.col("_v").alias("_lv")), "left_id")
+            .join(side.select(F.col("_id").alias("right_id"), F.col("_v").alias("_rv")), "right_id")
+            .withColumn("cosine", F.round(cosine_native(F.col("_lv"), F.col("_rv"), dim=dim), 6))
+            .filter(F.col("cosine") >= threshold)
+            .select("left_id", "right_id", "cosine")
+            .localCheckpoint(eager=True)
+        )
     return verified

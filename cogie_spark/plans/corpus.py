@@ -31,6 +31,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cogie_spark.io.tableio import RunResult, RunScope
+from cogie_spark.operators.cc import CheckpointHandle, connected_components
 from cogie_spark.operators.pii import pii_counts, redact_pii
 from cogie_spark.operators.textstats import (
     lang_id,
@@ -194,7 +196,7 @@ def near_dup_prune(
     pairs: DataFrame | None = None,
     cc_max_iter: int = 20,
     **dedup_kwargs,
-) -> dict:
+) -> RunResult:
     """The pipeline stage AFTER :func:`clean_corpus`: near-duplicate
     pruning of the kept corpus — pairs -> transitive groups -> one
     representative per group.
@@ -219,7 +221,9 @@ def near_dup_prune(
     representative is the group's MINIMUM id (deterministic,
     order-free, same rule as the flagship's exact prededup). Returns
     ``pruned`` (the training view) and ``dup_groups`` (the audit
-    table: every non-representative member with its group id).
+    table: every non-representative member with its group id) in a
+    ``RunResult``: both are lazy over CC's final checkpoint, so consume
+    them inside ``with near_dup_prune(...) as out:`` or release after.
 
     Scale shape: pair generation is the banded/bucketed family path
     (bounded blocks, logged drops); CC runs on the PAIR graph — near-
@@ -228,33 +232,32 @@ def near_dup_prune(
     cluster table, broadcastable whenever dup groups fit the threshold.
     """
     cfg = cfg or CorpusConfig()
-    dedup_caches: list[DataFrame] = []
-    if pairs is None:
-        if method == "minhash":
-            from cogie_spark.operators.dedup import minhash_near_duplicates
+    scope = RunScope()
+    # the pair generator's caches: CC eagerly materializes its deduped
+    # edge seed (localCheckpoint), truncating `groups`' lineage past the
+    # pair table, so they release as soon as CC returns instead of
+    # living as long as the result (VERDICT r5 #4)
+    with RunScope() as dedup_caches:
+        if pairs is None:
+            if method == "minhash":
+                from cogie_spark.operators.dedup import minhash_near_duplicates
 
-            pairs = minhash_near_duplicates(
-                kept, id_col=cfg.id_col, text_col=cfg.text_col,
-                release_into=dedup_caches, **dedup_kwargs
-            )
-        elif method == "semantic":
-            from cogie_spark.operators.dedup import semantic_duplicates
+                pairs = minhash_near_duplicates(
+                    kept, id_col=cfg.id_col, text_col=cfg.text_col,
+                    release_into=dedup_caches, **dedup_kwargs
+                )
+            elif method == "semantic":
+                from cogie_spark.operators.dedup import semantic_duplicates
 
-            pairs = semantic_duplicates(kept, id_col=cfg.id_col, **dedup_kwargs)
-        else:
-            raise ValueError(f"unknown method: {method!r}")
+                pairs = semantic_duplicates(kept, id_col=cfg.id_col, **dedup_kwargs)
+                dedup_caches.checkpoints.append(CheckpointHandle(pairs))
+            else:
+                raise ValueError(f"unknown method: {method!r}")
 
-    from cogie_spark.operators.cc import connected_components
-
-    groups = connected_components(
-        pairs.select("left_id", "right_id"), max_iter=cc_max_iter
-    )
-    # CC eagerly materialized its deduped edge seed (localCheckpoint),
-    # truncating `groups`' lineage past the pair table — the signature/
-    # pair/block caches of this call release NOW instead of living for
-    # the session (VERDICT r5 #4; recompute-safe either way)
-    for c in dedup_caches:
-        c.unpersist()
+        groups = connected_components(
+            pairs.select("left_id", "right_id"), max_iter=cc_max_iter,
+            release_into=scope.checkpoints,
+        )
     members = groups.select(
         F.col("file_id").alias(cfg.id_col), F.col("cluster_id").alias("dup_group_id")
     )
@@ -268,4 +271,4 @@ def near_dup_prune(
         .drop("dup_group_id")
     )
     dup_groups = members.filter(F.col("dup_group_id") != F.col(cfg.id_col))
-    return {"pruned": pruned, "dup_groups": dup_groups}
+    return RunResult(scope, pruned=pruned, dup_groups=dup_groups)

@@ -3,26 +3,22 @@
 Spark restatement of the reference's /linking query lifecycle
 (SURVEY.md §3.1; /root/reference/cogie/interface/interface.py:42-62 →
 cogie/toolkit/el/el_toolkit.py:84-152): one lazily-planned DataFrame
-lineage —
+lineage of named stages over one ``LinkageConfig`` —
 
-  code_files
-    -> normalize + shingle                 (functions/text.py, JVM exprs)
-    -> MinHash-LSH blocking                (operators/blocking.py; the
-                                            FAISS-retrieval replacement)
-    -> bounded candidate-pair table        (skew-capped self-join)
-    -> vectorized pair scoring             (operators/scoring.py; the
-                                            cross-encoder replacement)
-    -> threshold -> match edges
-    -> large-star/small-star clustering    (operators/cc.py; the
-                                            transitive-alignment stage)
-    -> clusters(file_id, cluster_id)
+  prededup -> signatures -> candidates (MinHash-LSH blocking, the FAISS-
+  retrieval replacement) -> cascade_pairs -> score (the cross-encoder
+  replacement) -> cluster (large-star/small-star CC, the transitive-
+  alignment stage) -> expand: clusters(file_id, cluster_id)
 
-with per-stage committed snapshots + metrics (io/tableio.py) so any stage
-resumes from the last commit.
+``run_linkage`` is their one composition; the link stream reuses them.
+One ``io.tableio.RunScope`` owns a run's caches and checkpoints; with a
+CheckpointManager its keep step commits per-stage snapshots, so any
+stage resumes from the last commit.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import Future
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -30,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cogie_spark.functions.text import normalize_text
-from cogie_spark.io.tableio import CheckpointManager
+from cogie_spark.io.tableio import CheckpointManager, RunResult, RunScope
 from cogie_spark.operators.blocking import (
     bands_from_signatures,
     candidate_pairs,
@@ -38,7 +34,7 @@ from cogie_spark.operators.blocking import (
     signature_table,
 )
 from cogie_spark.operators.cc import connected_components
-from cogie_spark.operators.scoring import match_edges
+from cogie_spark.operators.scoring import corpus_idf, match_edges, score_features
 
 
 @dataclass
@@ -100,6 +96,81 @@ class LinkageConfig:
     sha_col: str = "sha256"
 
 
+def prededup(files: DataFrame, cfg: LinkageConfig, scope: RunScope) -> tuple[DataFrame, DataFrame]:
+    """Exact dedup (SURVEY.md §2.7 U2) -> (reps, file2rep): one
+    representative row per distinct content, and (id_col, _rep_id) for
+    EVERY input row. The expensive stages run on reps only: identical
+    boilerplate otherwise forms the hottest LSH blocks, and at 10^12
+    files the quadratic pair step must only ever see distinct contents.
+    """
+    # the input is scanned by the prededup groupBy and (via file2rep)
+    # the final expansion — persist once (spills to disk at scale).
+    # NOTE (round-4 measurement): a broadcast-semi-join prededup that
+    # avoided shuffling content entirely was built and A/B-measured at
+    # 52s SLOWER @8 and 32s SLOWER @32 than this min_by form on the
+    # 200k-group fixture — the single wide shuffle scales fine here,
+    # while the extra parquet scan + broadcast build are pure overhead.
+    all_files = scope.persist(files)
+    # min_by over the full row struct keeps this to ONE shuffle of
+    # the input (the groupBy) — the previous groupBy-then-join form
+    # shuffled the full table a second time for the join-back.
+    sha = cfg.sha_col if cfg.sha_col in all_files.columns else None
+    sha_expr = F.col(sha) if sha else F.sha2(F.col(cfg.content_col), 256)
+    keyed = all_files.withColumn("_sha", sha_expr)
+    data_cols = [c for c in keyed.columns if c != "_sha"]
+    reps_rows = keyed.groupBy("_sha").agg(
+        F.expr(
+            f"min_by(struct({', '.join(data_cols)}), {cfg.id_col})"
+        ).alias("_r"),
+        F.min(cfg.id_col).alias("_rep_id"),
+    )
+    file2rep = scope.persist(
+        keyed.select(cfg.id_col, "_sha")
+        .join(reps_rows.select("_sha", "_rep_id"), "_sha")
+        .select(cfg.id_col, F.col("_rep_id"))
+    )
+    # NOTE (round-4 A/B): replacing this persist with a lazy
+    # localCheckpoint — to truncate lineage and cut the multi-second
+    # Catalyst re-planning of the scan→min_by tree per downstream
+    # query — measured 12 s SLOWER at bench scale: the RDD-row cache
+    # loses the InMemoryRelation's columnar compression and column
+    # pruning, which cost more than the planning it saved.
+    return scope.persist(reps_rows.select("_r.*")), file2rep
+
+
+def signatures(rows: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    """(id, *key_cols, sig) under the config's MinHash family."""
+    return signature_table(
+        rows, id_col=cfg.id_col, content_col=cfg.content_col, key_cols=cfg.key_cols,
+        num_perm=cfg.num_perm, shingle_k=cfg.shingle_k, mode=cfg.signature_mode,
+    )
+
+
+def bands(sigs: DataFrame, cfg: LinkageConfig) -> DataFrame:
+    """(id, *key_cols, band_id, band_hash) under the config's banding."""
+    return bands_from_signatures(
+        sigs, id_col=cfg.id_col, key_cols=cfg.key_cols, bands=cfg.bands,
+        rows_per_band=cfg.num_perm // cfg.bands,
+    )
+
+
+def candidates(
+    sigs: DataFrame, cfg: LinkageConfig, scope: RunScope
+) -> tuple[DataFrame, DataFrame, DataFrame, dict]:
+    """LSH bands -> bounded candidate pairs. Returns (blocks, pairs,
+    dropped_blocks, blocking_stats); the stats ride on the mandatory
+    size-precheck job: the max block size (salting decision), the
+    block rows and the dropped-block count (logged — no silent caps)."""
+    blocks = bands(sigs, cfg)
+    stats: dict = {}
+    pairs, dropped = candidate_pairs(
+        blocks, id_col=cfg.id_col, key_cols=cfg.key_cols,
+        max_block_size=cfg.max_block_size, release_into=scope,
+        stats_into=stats,
+    )
+    return blocks, pairs, dropped, stats
+
+
 def cascade_pairs(
     pairs: DataFrame,
     sigs: DataFrame,
@@ -152,231 +223,141 @@ def cascade_pairs(
     )
 
 
-def run_linkage(
-    files: DataFrame,
-    cfg: LinkageConfig | None = None,
-    checkpoint: CheckpointManager | None = None,
-) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns its materializable stage outputs.
+def idf_terms(rows: DataFrame, cfg: LinkageConfig) -> Future | None:
+    """Start ``corpus_idf`` over ``rows`` in a driver thread (None when
+    ``cfg.idf_max_terms`` is 0); ``score`` joins it. Branch overlap
+    (guide §2.6): started before the blocking precheck, its two bounded
+    actions (count + vocab top-k collect) run CONCURRENTLY with the
+    precheck's signature computation instead of serializing ~2 s of
+    wall after it. Concurrent first materialization of a shared cache
+    is safe: worst case both threads compute a partition and one cache
+    write wins."""
+    if not cfg.idf_max_terms:
+        return None
+    from concurrent.futures import ThreadPoolExecutor
 
-    Keys: blocks, pairs, dropped_blocks, scored, edges, clusters.
-    ``clusters`` covers EVERY input file — files not in any match edge
-    become singleton clusters (cluster_id = own file_id), matching the
-    reference's behavior of always emitting a link result per mention
-    (el_toolkit.py:144-151, 'unk' on miss).
+    pool = ThreadPoolExecutor(max_workers=1)
+    future = pool.submit(corpus_idf, rows, content_col=cfg.content_col, max_terms=cfg.idf_max_terms)
+    pool.shutdown(wait=False)
+    return future
+
+
+def score(
+    pairs: DataFrame,
+    cfg: LinkageConfig,
+    scope: RunScope,
+    idf: Future | None,
+    partitions: int | None = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """Score the cascade's pairs and threshold them: (scored, edges).
+
+    ``idf`` (:func:`idf_terms`) is joined here — re-raising any failure
+    of its thread — and shipped as a Broadcast the scope releases,
+    fetched once per executor instead of re-shipped in every task
+    binary. ``scored`` goes through the scope's keep step, so edges,
+    CC seed and caller actions never re-run the scorers.
+
+    ``partitions`` is score_features'. The batch run scores in place
+    (0): its pair table arrives through the cascade joins, whose
+    post-shuffle width AQE sizes with parallelismFirst (>= cores, which
+    the r5-era partition probe confirmed every run at the cost of an
+    extra action). The stream passes None (cores*2 spread): micro-batch
+    pair tables are narrow, and AQE would coalesce them onto one core.
     """
-    cfg = cfg or LinkageConfig()
+    terms = None
+    if idf is not None:
+        terms = pairs.sparkSession.sparkContext.broadcast(idf.result())
+        scope.append(terms)
+    scored = scope.keep("scored", score_features(
+        pairs, jw_chars=cfg.jw_chars, ts_chars=cfg.ts_chars, weights=cfg.weights,
+        idf=terms, partitions=partitions,
+    ))
+    scope.log_metric("scoring", "pairs_scored", scored.count)
+    return scored, match_edges(scored, threshold=cfg.threshold)
 
-    # every persist in this run is tracked so callers that invoke the
-    # pipeline repeatedly (streaming micro-batches) can release the
-    # cached partitions at batch end via out["_persisted"] — otherwise
-    # a long-running stream accumulates every past batch's cache
-    persisted: list[DataFrame] = []
-    # localCheckpoint handles (CC's final round) are tracked SEPARATELY:
-    # releasing a checkpoint deletes its only copy (lineage truncated),
-    # so a caller that releases and then re-runs an action on a derived
-    # frame crashes instead of recomputing. _persisted keeps the old
-    # recompute-safe contract; _checkpoints is release-after-durable-
-    # commit ONLY.
-    checkpoints: list = []
 
-    def _persist(df: DataFrame) -> DataFrame:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(df)
-        return df
-
-    # the input is scanned by the prededup groupBy and (via file2rep)
-    # the final expansion — persist once (spills to disk at scale).
-    # NOTE (round-4 measurement): a broadcast-semi-join prededup that
-    # avoided shuffling content entirely was built and A/B-measured at
-    # 52s SLOWER @8 and 32s SLOWER @32 than this min_by form on the
-    # 200k-group fixture — the single wide shuffle scales fine here,
-    # while the extra parquet scan + broadcast build are pure overhead.
-    all_files = _persist(files)
-
-    # exact dedup (SURVEY.md §2.7 U2): one representative per
-    # distinct content; the expensive pipeline runs on reps only.
-    # Identical boilerplate otherwise forms the hottest LSH blocks, and
-    # at 10^12 files the quadratic pair step must only ever see
-    # distinct contents.
-    # min_by over the full row struct keeps this to ONE shuffle of
-    # the input (the groupBy) — the previous groupBy-then-join form
-    # shuffled the full table a second time for the join-back.
-    sha = cfg.sha_col if cfg.sha_col in all_files.columns else None
-    sha_expr = F.col(sha) if sha else F.sha2(F.col(cfg.content_col), 256)
-    keyed = all_files.withColumn("_sha", sha_expr)
-    data_cols = [c for c in keyed.columns if c != "_sha"]
-    reps_rows = keyed.groupBy("_sha").agg(
-        F.expr(
-            f"min_by(struct({', '.join(data_cols)}), {cfg.id_col})"
-        ).alias("_r"),
-        F.min(cfg.id_col).alias("_rep_id"),
-    )
-    file2rep = _persist(
-        keyed.select(cfg.id_col, "_sha")
-        .join(reps_rows.select("_sha", "_rep_id"), "_sha")
-        .select(cfg.id_col, F.col("_rep_id"))
-    )
-    # NOTE (round-4 A/B): replacing this persist with a lazy
-    # localCheckpoint — to truncate lineage and cut the multi-second
-    # Catalyst re-planning of the scan→min_by tree per downstream
-    # query — measured 12 s SLOWER at bench scale: the RDD-row cache
-    # loses the InMemoryRelation's columnar compression and column
-    # pruning, which cost more than the planning it saved.
-    files = _persist(reps_rows.select("_r.*"))
-
-    sigs = _persist(
-        signature_table(
-            files,
-            id_col=cfg.id_col,
-            content_col=cfg.content_col,
-            key_cols=cfg.key_cols,
-            num_perm=cfg.num_perm,
-            shingle_k=cfg.shingle_k,
-            mode=cfg.signature_mode,
-        )
-    )
-    blocks = bands_from_signatures(
-        sigs,
-        id_col=cfg.id_col,
-        key_cols=cfg.key_cols,
-        bands=cfg.bands,
-        rows_per_band=cfg.num_perm // cfg.bands,
-    )
-    # IDF branch overlap (guide §2.6): corpus_idf only needs the reps
-    # cache and its dict is not consumed until the scorer stage RUNS, so
-    # its two bounded actions (count + vocab top-k collect) run in a
-    # driver thread CONCURRENTLY with the blocking size-precheck's
-    # signature computation — the scheduler back-fills the precheck's
-    # small stages and gaps with the idf jobs instead of serializing
-    # ~2 s of wall after them. Joined (with exception propagation)
-    # right before the scorer is built. Concurrent first-materialization
-    # of the shared reps cache is safe: worst case both threads compute
-    # a partition and one cache write wins.
-    idf_future = None
-    if cfg.idf_max_terms:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from cogie_spark.operators.scoring import corpus_idf as _cidf
-
-        _idf_pool = ThreadPoolExecutor(max_workers=1)
-        idf_future = _idf_pool.submit(
-            _cidf, files, content_col=cfg.content_col, max_terms=cfg.idf_max_terms
-        )
-        _idf_pool.shutdown(wait=False)
-
-    # blocking_stats rides on the mandatory size-precheck job: the max
-    # block size (salting decision) and the dropped-block count
-    # (logged — no-silent-caps)
-    blocking_stats: dict = {}
-    pairs, dropped = candidate_pairs(
-        blocks, id_col=cfg.id_col, key_cols=cfg.key_cols,
-        max_block_size=cfg.max_block_size, release_into=persisted,
-        stats_into=blocking_stats,
-    )
-
-    pairs = cascade_pairs(pairs, sigs, files, cfg, release_into=persisted)
-
-    if checkpoint is not None:
-        pairs = checkpoint.commit("pairs", pairs)
-        checkpoint.log_metric(
-            "blocking", 0, "dropped_blocks", float(blocking_stats["n_dropped_blocks"])
-        )
-    else:
-        # downstream stages (scoring, CC seed) and caller actions each
-        # reference the pair table — never recompute the self-join
-        pairs = _persist(pairs)
-
-    from cogie_spark.operators.scoring import score_features
-
-    idf = None
-    if idf_future is not None:
-        # proper Broadcast: fetched once per executor instead of being
-        # re-shipped inside every stage's task binary. .result() joins
-        # the overlapped idf thread and re-raises any failure here.
-        idf = files.sparkSession.sparkContext.broadcast(idf_future.result())
-    # score in place (partitions=0): the pair table reaches here through
-    # the cascade/feature joins, whose post-shuffle width AQE sizes with
-    # parallelismFirst (>= min(cores, bytes/minPartitionSize)); the
-    # r5-era pairs.rdd partition probe confirmed ">= cores" every run
-    # while costing one full extra action's worth of jobs + planning.
-    # Callers with pathologically narrow pair tables keep the public
-    # score_features(partitions=None) repartition default.
-    scored = score_features(
-        pairs,
-        jw_chars=cfg.jw_chars,
-        ts_chars=cfg.ts_chars,
-        weights=cfg.weights,
-        idf=idf,
-        partitions=0,
-    )
-    if checkpoint is not None:
-        scored = checkpoint.commit("scored", scored)
-        checkpoint.log_metric("scoring", 0, "pairs_scored", float(scored.count()))
-    else:
-        scored = _persist(scored)
-
-    edges = match_edges(scored, threshold=cfg.threshold)
+def cluster(edges: DataFrame, cfg: LinkageConfig, scope: RunScope) -> DataFrame:
+    """Connected components of the match edges: (id_col, cluster_id) for
+    every node of an edge. CC's final localCheckpoint goes to the
+    scope's checkpoints — the clusters derive from it."""
     comp = connected_components(
-        edges,
-        max_iter=cfg.cc_max_iter,
-        checkpoint=checkpoint,
-        check_every=cfg.cc_check_every,
-        local_max_edges=cfg.cc_local_max_edges,
-        # CC's final localCheckpoint goes into _checkpoints (NOT
-        # _persisted) so loop-style callers release it per batch
-        # without changing _persisted's recompute-safe contract —
-        # out['clusters']/out['edges'] derive from this checkpoint and
-        # become unusable once it is released
-        release_into=checkpoints,
+        edges, max_iter=cfg.cc_max_iter, checkpoint=scope.checkpoint,
+        check_every=cfg.cc_check_every, local_max_edges=cfg.cc_local_max_edges,
+        release_into=scope.checkpoints,
     )
     # connected_components emits (file_id, cluster_id); align its node
     # column with cfg.id_col so custom id columns join correctly
     if cfg.id_col != "file_id":
         comp = comp.withColumnRenamed("file_id", cfg.id_col)
+    return comp
 
-    # every file gets a cluster: singletons map to themselves
-    # file2rep already maps EVERY file to its representative, so
-    # one left join against the component table suffices — members
-    # inherit coalesce(rep's component min, rep id). The former
-    # two-join form (files ⋈ comp to build rep_clusters, then
-    # file2rep ⋈ rep_clusters) joined the rep universe twice for
-    # the same rows (r6: one join/shuffle stage removed, output
-    # identical by construction — comp's nodes are a subset of the
-    # reps file2rep maps onto).
-    comp_r = comp.select(
-        F.col(cfg.id_col).alias("_rep_id"), F.col("cluster_id")
-    )
+
+def expand(comp: DataFrame, file2rep: DataFrame, cfg: LinkageConfig, scope: RunScope) -> DataFrame:
+    """(file_id, cluster_id) for every input row: file2rep maps EVERY row
+    to its representative, so one left join against the component table
+    suffices — members inherit coalesce(rep's component min, rep id),
+    singletons map to themselves. (r6: the former two-join form joined
+    the rep universe twice for the same rows.)"""
+    comp_r = comp.select(F.col(cfg.id_col).alias("_rep_id"), F.col("cluster_id"))
     clusters = file2rep.join(comp_r, "_rep_id", "left").select(
         F.col(cfg.id_col).alias("file_id"),
         F.coalesce("cluster_id", F.col("_rep_id")).alias("cluster_id"),
     )
-    if checkpoint is not None:
-        clusters = checkpoint.commit("clusters", clusters)
+    return scope.keep("clusters", clusters, cache=False)
 
-    return {
-        "blocks": blocks,
-        "pairs": pairs,
-        "dropped_blocks": dropped,
-        "scored": scored,
-        "edges": edges,
-        "clusters": clusters,
-        # exact-prededup lineage: (id_col, _rep_id) — needed to evaluate
-        # the BLOCKING stage (metrics.blocking_quality) in representative
-        # space, since true pairs between byte-identical files never
-        # enter the pair table
-        "file2rep": file2rep,
-        # cached inputs of THIS run; callers that loop (streaming) must
-        # unpersist these once the run's outputs are materialized —
-        # recompute-safe: a later action on a returned frame is merely
-        # slow, never wrong
-        "_persisted": persisted,
-        # localCheckpoint handles (CC final round): release ONLY after
-        # every derived output (clusters/edges) is durably committed —
-        # a released checkpoint CANNOT recompute and further actions
-        # on frames derived from it fail
-        "_checkpoints": checkpoints,
-    }
+
+def run_linkage(
+    files: DataFrame,
+    cfg: LinkageConfig | None = None,
+    checkpoint: CheckpointManager | None = None,
+) -> RunResult:
+    """Run the stages over ``files``; returns their outputs in a
+    ``RunResult`` — consume them inside ``with run_linkage(...) as
+    out:`` (or call ``out.release()`` after): they are lazy over the
+    run's caches and CC's final localCheckpoint. With ``checkpoint``,
+    pairs, scored, CC rounds and clusters are committed snapshots.
+
+    Keys: blocks, pairs, dropped_blocks, blocking_stats (candidate_pairs'
+    ``stats_into`` record, free from the size precheck), scored, edges,
+    clusters, file2rep. ``clusters`` covers EVERY input file — files not
+    in any match edge become singletons (cluster_id = own file_id), as
+    the reference always emits a link result per mention
+    (el_toolkit.py:144-151, 'unk' on miss). ``file2rep`` (id_col,
+    _rep_id) lets metrics.blocking_quality grade the BLOCKING stage in
+    representative space: byte-identical true pairs never enter it.
+    """
+    scope = RunScope(checkpoint)
+    try:
+        return _link(files, cfg or LinkageConfig(), scope)
+    except BaseException:
+        scope.release()
+        raise
+
+
+def _link(
+    files: DataFrame, cfg: LinkageConfig, scope: RunScope, batch_sigs: DataFrame | None = None
+) -> RunResult:
+    """The one composition of the stages, caching into ``scope``.
+    ``batch_sigs``: signatures already computed for a superset of
+    ``files`` (the link stream's batch), semi-joined to the reps."""
+    reps, file2rep = prededup(files, cfg, scope)
+    sigs = scope.persist(
+        signatures(reps, cfg)
+        if batch_sigs is None
+        else batch_sigs.join(reps.select(cfg.id_col), cfg.id_col, "left_semi")
+    )
+    idf = idf_terms(reps, cfg)
+    blocks, pairs, dropped, stats = candidates(sigs, cfg, scope)
+    # downstream stages (scoring, CC seed) and caller actions each
+    # reference the pair table — never recompute the self-join
+    pairs = scope.keep("pairs", cascade_pairs(pairs, sigs, reps, cfg, release_into=scope))
+    scope.log_metric("blocking", "dropped_blocks", lambda: stats["n_dropped_blocks"])
+    scored, edges = score(pairs, cfg, scope, idf)
+    clusters = expand(cluster(edges, cfg, scope), file2rep, cfg, scope)
+    return RunResult(
+        scope, blocks=blocks, pairs=pairs, dropped_blocks=dropped, blocking_stats=stats,
+        scored=scored, edges=edges, clusters=clusters, file2rep=file2rep,
+    )
 
 
 def predicted_pairs_from_clusters(clusters: DataFrame) -> DataFrame:

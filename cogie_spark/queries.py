@@ -17,10 +17,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cogie_spark.functions.hashing import MINHASH_P, _perm_coeffs, base_hash28, h64, simhash64
+from cogie_spark.functions.hashing import MINHASH_P, _perm_coeffs, h64, simhash64
 from cogie_spark.functions.text import char_shingles, tokens
 from cogie_spark.io.spread import spread_scan
 from cogie_spark.operators.ann import brute_force_topk
+from cogie_spark.operators.blocking import signature_table
 from cogie_spark.operators.dedup import (
     embedding_near_duplicates,
     exact_duplicate_groups,
@@ -500,17 +501,10 @@ def q21(spark, sf_dir):
     """MinHash signature values — bit-identical across engines (the
     LSH blocking primitive replacing FAISS, blink.py:157-162)."""
     d = _t(spark, sf_dir, "documents").filter("doc_id < 50")
-    hashed = d.select(
-        "doc_id", F.transform(char_shingles("text"), base_hash28).alias("_h")
+    sigs = signature_table(
+        d, id_col="doc_id", content_col="text", key_cols=(), num_perm=8, mode="portable"
     )
-    def perm(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    cols = []
-    for i in range(8):
-        a, b = _perm_coeffs(i)
-        cols.append(F.array_min(F.transform(F.col("_h"), perm(a, b))).alias(f"m{i}"))
-    return hashed.select("doc_id", *cols)
+    return sigs.select("doc_id", *[F.col("sig")[i].alias(f"m{i}") for i in range(8)])
 
 
 def _simhash_sql(bits: int = 16) -> str:
@@ -734,9 +728,12 @@ def q32(spark, sf_dir):
     # the near-dup operator reads its input twice (signature pass +
     # exact-verify semi-join) — persist the scan+union once
     docs = _docs_with_clones(spark, sf_dir).persist()
+    # the query contract returns a lazy frame, so nothing here can
+    # release the operator's caches (or docs): they live until the
+    # caller clears the session's cache
     out = minhash_near_duplicates(
         docs, id_col="doc_id", text_col="text", key_cols=("lang",),
-        jaccard_threshold=0.9, mode="fast",
+        jaccard_threshold=0.9, mode="fast", release_into=[],
     )
     return out.select("left_id", "right_id", "jaccard")
 

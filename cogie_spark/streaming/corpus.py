@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cogie_spark.io.tableio import StateLog, TableIO, union_parts
+from cogie_spark.io.tableio import RunScope, StateLog, TableIO, union_parts
 from cogie_spark.plans.corpus import CorpusConfig, kept_from_docs
 
 _MANIFEST = "corpus_manifest.json"
@@ -102,12 +102,11 @@ def incremental_clean_batch(
         # shuffled left-anti on the 64-hex key, the partition-count knob
         kept = kept.join(seen.select(_HASH), _HASH, "left_anti")
 
-    # batch-scoped caches (batch rows + band table) — released in the
-    # finally below even when the commit fails mid-batch, so a long
-    # stream with foreachBatch retries never accumulates stranded
-    # persisted partitions from failed attempts
-    to_release: list[DataFrame] = []
-    try:
+    # batch-scoped caches (batch rows + band table, CC's checkpoint) —
+    # released when the scope closes, even when the commit fails
+    # mid-batch, so a long stream with foreachBatch retries never
+    # accumulates stranded persisted partitions from failed attempts
+    with RunScope() as to_release:
         dirs = {"kept": log.delta_name("kept", batch_id)}
         if near_dup:
             params = {
@@ -144,9 +143,6 @@ def incremental_clean_batch(
             )
         log.commit(batch_id, dirs)
         log.compact(compact_every)
-    finally:
-        for df in to_release:
-            df.unpersist()
     return committed.drop(_HASH, "src_batch")
 
 

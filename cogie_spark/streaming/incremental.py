@@ -7,22 +7,26 @@ singleton model caches (/root/reference/cogie/interface/interface.py:
 through the same pipeline. The Spark restatement is micro-batching:
 each foreachBatch invocation is a bounded DataFrame linked against the
 persisted cluster state, then appended to it, under ONE
-``LinkageConfig`` (plans/linkage.py) — the batch pipeline's config:
+``LinkageConfig`` — the batch pipeline's config — through the batch
+pipeline's own stages (plans/linkage.py):
 
-- batch signatures, state bands and legacy migration use the config's
-  MinHash family (num_perm, bands, signature_mode, shingle_k);
+- the batch's signatures are computed ONCE (``linkage.signatures``);
+  they feed the cross-batch bands, the state written for later batches
+  and the intra-batch run;
 - cross-batch candidates (batch bands x state bands,
-  ``blocking.cross_band_pairs``) go through ``cascade_pairs`` —
-  run_linkage's est-Jaccard cascade and feature attach — then
-  ``score_features`` with the config's windows, weights and a corpus
-  IDF over the rows being linked (run_linkage likewise takes IDF over
-  the rows it links);
-- the rows no state cluster claims are clustered by ``run_linkage``
-  itself with the same config.
+  ``blocking.cross_band_pairs``) go through ``linkage.cascade_pairs``
+  and ``linkage.score`` — run_linkage's cascade, feature attach,
+  scorers and threshold — with a corpus IDF over the rows being linked
+  (run_linkage likewise takes IDF over the rows it links);
+- the rows no state cluster claims are clustered by run_linkage's own
+  stage composition, handed the batch signatures of their
+  representatives instead of computing them again.
 
 No separate streaming implementation of the operators exists, so a
 pair that matches in a batch run matches in the stream (up to the IDF
-corpus, which is the rows each run links).
+corpus, which is the rows each run links). One ``RunScope`` owns every
+cache, broadcast and checkpoint of a batch and releases them once the
+batch's delta is committed.
 
 State layout (under ``state_dir``): a ``tableio.StateLog`` over
 ``_state_manifest.json``, the one state log both streams share. Batch N
@@ -67,34 +71,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cogie_spark.io import fsio
-from cogie_spark.io.tableio import StateLog, TableIO, union_parts
-from cogie_spark.operators.blocking import (
-    bands_from_signatures,
-    cross_band_pairs,
-    signature_table,
-)
+from cogie_spark.io.tableio import RunScope, StateLog, TableIO, union_parts
+from cogie_spark.operators.blocking import cross_band_pairs
 from cogie_spark.operators.cc import CheckpointHandle
-from cogie_spark.operators.scoring import corpus_idf, match_edges, score_features
-from cogie_spark.plans.linkage import LinkageConfig, cascade_pairs, run_linkage
+from cogie_spark.plans.linkage import (
+    LinkageConfig,
+    _link,
+    bands,
+    cascade_pairs,
+    idf_terms,
+    score,
+    signatures,
+)
 
 _MANIFEST = "_state_manifest.json"
 # the state layout's columns; a config naming other columns is refused
 _LAYOUT = ("file_id", "content", ("lang",))
-
-
-def _signatures(df: DataFrame, cfg: LinkageConfig) -> DataFrame:
-    """(file_id, lang, sig) under the config's MinHash family."""
-    return signature_table(
-        df, key_cols=("lang",), num_perm=cfg.num_perm,
-        shingle_k=cfg.shingle_k, mode=cfg.signature_mode,
-    )
-
-
-def _bands(sigs: DataFrame, cfg: LinkageConfig) -> DataFrame:
-    """(file_id, lang, band_id, band_hash) under the config's banding."""
-    return bands_from_signatures(
-        sigs, key_cols=("lang",), bands=cfg.bands, rows_per_band=cfg.num_perm // cfg.bands
-    )
 
 
 def _fold_members(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
@@ -132,7 +124,7 @@ def _migrate_legacy_state(spark: SparkSession, log: StateLog, cfg: LinkageConfig
             # from content once, rewrite the delta in the new format
             # under a distinct name ('...m'); idempotent — a crash
             # before the manifest publish just re-runs the overwrite
-            sigs = _signatures(members.select("file_id", "lang", "content"), cfg)
+            sigs = signatures(members.select("file_id", "lang", "content"), cfg)
             members = members.join(sigs.select("file_id", "sig"), "file_id")
             members_name = d + "m"
             state.write(members_name, members)
@@ -141,7 +133,7 @@ def _migrate_legacy_state(spark: SparkSession, log: StateLog, cfg: LinkageConfig
         else:
             members_name = d
         bands_name = "bands" + members_name.removeprefix("members")
-        state.write(bands_name, _bands(members.select("file_id", "lang", "sig"), cfg))
+        state.write(bands_name, bands(members.select("file_id", "lang", "sig"), cfg))
         # no batch_id field: StateLog reads it off the directory name
         log.entries.append({"members": members_name, "bands": bands_name})
     log.publish()
@@ -197,27 +189,20 @@ def incremental_link_batch(
 
     have_state = bool(log.paths("members"))
 
-    # batch-scoped persists (and the IDF broadcast and the links
-    # checkpoint), released at the end of the batch — a long-running
-    # stream otherwise accumulates cached partitions from every past
+    # batch-scoped caches, the IDF broadcast and the links checkpoint,
+    # released once the batch is committed — a long-running stream
+    # otherwise accumulates cached partitions from every past
     # micro-batch (ADVICE r2 #5)
-    to_unpersist: list = []
-
-    def _persist(df: DataFrame) -> DataFrame:
-        df = df.persist()
-        to_unpersist.append(df)
-        return df
-
-    try:
-        batch = _persist(batch)
-        new_sigs = _persist(_signatures(batch, cfg))
+    with RunScope() as scope:
+        batch = scope.persist(batch)
+        new_sigs = scope.persist(signatures(batch, cfg))
 
         if have_state:
             old = spark.read.parquet(*log.paths("members"))
             # state bands come straight off parquet — derived ONCE at
             # write time; no per-batch re-explode of the state sig table
             ob = spark.read.parquet(*log.paths("bands"))
-            cand = _persist(cross_band_pairs(_bands(new_sigs, cfg), ob))
+            cand = scope.persist(cross_band_pairs(bands(new_sigs, cfg), ob))
             # the rows of both sides that appear in a candidate pair, with
             # the signatures the batch just computed and the state stored:
             # the state is only SCANNED (columnar read), never shuffled
@@ -227,52 +212,36 @@ def incremental_link_batch(
                 .unionByName(cand.select(F.col("right_id").alias("file_id")))
                 .distinct()
             )
-            rows = _persist(
+            rows = scope.persist(
                 batch.select("file_id", "lang", "content")
                 .join(new_sigs.select("file_id", "sig"), "file_id")
                 .unionByName(old.select("file_id", "lang", "content", "sig"))
                 .join(cand_ids, "file_id", "left_semi")
             )
-            pairs = cascade_pairs(cand, rows, rows, cfg, release_into=to_unpersist)
-            idf = None
-            if cfg.idf_max_terms:
-                idf = spark.sparkContext.broadcast(
-                    corpus_idf(rows, max_terms=cfg.idf_max_terms)
-                )
-                to_unpersist.append(idf)
-            # partitions=None: unconditional cores*2 spread — micro-batch
-            # pair tables are narrow, and AQE would coalesce the scorer
-            # stage onto one or two cores
-            scored = score_features(
-                pairs, jw_chars=cfg.jw_chars, ts_chars=cfg.ts_chars,
-                weights=cfg.weights, idf=idf,
-            )
+            pairs = cascade_pairs(cand, rows, rows, cfg, release_into=scope)
+            _, edges = score(pairs, cfg, scope, idf_terms(rows, cfg), partitions=None)
             # checkpointed (one row per linked file): read by the
             # unassigned split AND the assignment union below, so the
-            # pairs are scored once; and run_linkage below plans over a
-            # plain row scan instead of the whole cross-batch lineage,
-            # whose repeated text in every plan string grows the heap
+            # pairs are scored once; and the intra-batch run below plans
+            # over a plain row scan instead of the whole cross-batch
+            # lineage, whose repeated text in every plan string grows
+            # the heap
             links = (
-                match_edges(scored, threshold=cfg.threshold)
-                .join(old.select(F.col("file_id").alias("right_id"), "cluster_id"), "right_id")
+                edges.join(old.select(F.col("file_id").alias("right_id"), "cluster_id"), "right_id")
                 .groupBy(F.col("left_id").alias("file_id"))
                 .agg(F.min("cluster_id").alias("cluster_id"))
                 .localCheckpoint(eager=True)
             )
-            to_unpersist.append(CheckpointHandle(links))
+            scope.checkpoints.append(CheckpointHandle(links))
         else:
             links = spark.createDataFrame([], "file_id string, cluster_id string")
 
-        # within-batch clustering of the still-unassigned rows; the
-        # inner pipeline's cached inputs are batch-scoped too — release
-        # them with ours once the delta is written
+        # within-batch clustering of the still-unassigned rows, in this
+        # batch's scope: the run's caches and CC checkpoint release with
+        # ours, after the delta parquet write durably commits everything
+        # derived from them
         unassigned = batch.join(links, "file_id", "left_anti")
-        intra_out = run_linkage(unassigned, cfg)
-        # _checkpoints too: released only at batch end, AFTER the delta
-        # parquet write durably commits everything derived from them
-        to_unpersist.extend(intra_out.get("_persisted", []))
-        to_unpersist.extend(intra_out.get("_checkpoints", []))
-        intra = intra_out["clusters"]
+        intra = _link(unassigned, cfg, scope, batch_sigs=new_sigs)["clusters"]
 
         assignments = links.unionByName(intra)
         out = batch.select("file_id", "lang", "content").join(assignments, "file_id")
@@ -290,7 +259,7 @@ def incremental_link_batch(
         bands_name = log.delta_name("bands", batch_id)
         state.write(members_name, new_members)
         state.write(
-            bands_name, _bands(state.read(members_name).select("file_id", "lang", "sig"), cfg)
+            bands_name, bands(state.read(members_name).select("file_id", "lang", "sig"), cfg)
         )
         log.commit(batch_id, {"members": members_name, "bands": bands_name})
         # compaction runs AFTER the batch commit point: a failure here
@@ -299,12 +268,9 @@ def incremental_link_batch(
         log.compact(compact_every)
         # return the COMMITTED assignments (a parquet scan of committed
         # state, never the live plan): the caller may act on this after
-        # the batch's cached inputs are released below, and must not
-        # re-trigger the linkage plan
+        # the batch's caches are released, and must not re-trigger the
+        # linkage plan
         return log.committed(batch_id, "members").select("file_id", "cluster_id")
-    finally:
-        for df in to_unpersist:
-            df.unpersist()
 
 
 def start_incremental_stream(

@@ -118,11 +118,11 @@ def main():
     if not os.path.exists(os.path.join(fixture, "_SUCCESS")):
         code_files(spark, n_groups=500, seed=42).write.mode("overwrite").parquet(fixture)
     files = spark.read.parquet(fixture)
-    out = run_linkage(files, LinkageConfig())
-    for key in ["pairs", "scored", "clusters"]:
-        with open(os.path.join(outdir, f"flagship_{key}_{suffix}.txt"), "w") as f:
-            f.write(_fmt(out[key]))
-        print(f"captured flagship_{key}")
+    with run_linkage(files, LinkageConfig()) as out:
+        for key in ["pairs", "scored", "clusters"]:
+            with open(os.path.join(outdir, f"flagship_{key}_{suffix}.txt"), "w") as f:
+                f.write(_fmt(out[key]))
+            print(f"captured flagship_{key}")
     spark.stop()
 
 

@@ -68,50 +68,51 @@ def main() -> None:
         )
     ck = CheckpointManager(spark, args.checkpoint) if args.checkpoint else None
     t0 = time.time()
-    out = run_linkage(files, LinkageConfig(threshold=args.threshold), checkpoint=ck)
-    clusters = out["clusters"]
-    if args.output:
-        clusters.write.mode("overwrite").parquet(args.output)
-        n = spark.read.parquet(args.output).count()
-    else:
-        n = clusters.count()
-    stats = {
-        "rows": n,
-        "pairs_scored": out["scored"].count(),
-        "wall_sec": round(time.time() - t0, 2),
-    }
-    if args.evaluate and not args.input:
-        from pyspark.sql import functions as F
+    with run_linkage(files, LinkageConfig(threshold=args.threshold), checkpoint=ck) as out:
+        clusters = out["clusters"]
+        if args.output:
+            clusters.write.mode("overwrite").parquet(args.output)
+            n = spark.read.parquet(args.output).count()
+        else:
+            n = clusters.count()
+        stats = {
+            "rows": n,
+            "pairs_scored": out["scored"].count(),
+            "blocking_stats": out["blocking_stats"],
+            "wall_sec": round(time.time() - t0, 2),
+        }
+        if args.evaluate and not args.input:
+            from pyspark.sql import functions as F
 
-        from cogie_spark.fixtures.codefiles import labeled_pairs
-        from cogie_spark.operators.metrics import bcubed, blocking_quality, pairwise_prf
-        from cogie_spark.plans.linkage import predicted_pairs_from_clusters
+            from cogie_spark.fixtures.codefiles import labeled_pairs
+            from cogie_spark.operators.metrics import bcubed, blocking_quality, pairwise_prf
+            from cogie_spark.plans.linkage import predicted_pairs_from_clusters
 
-        lp = labeled_pairs(truth_files).cache()
-        stats["pairwise"] = pairwise_prf(predicted_pairs_from_clusters(clusters), lp)
-        truth = truth_files.select("file_id", F.col("group_id").alias("entity_id"))
-        stats["bcubed"] = bcubed(clusters, truth).collect()[0].asDict()
-        f2r = out["file2rep"]
-        lp_eval, n_rec = lp, files.count()
-        if f2r is not None:
-            # blocking is evaluated in representative space: true pairs
-            # between byte-identical files were resolved by prededup
-            lp_eval = (
-                lp.filter("is_match")
-                .join(f2r.toDF("left_id", "_rl"), "left_id")
-                .join(f2r.toDF("right_id", "_rr"), "right_id")
-                .filter("_rl != _rr")
-                .select(
-                    F.least("_rl", "_rr").alias("left_id"),
-                    F.greatest("_rl", "_rr").alias("right_id"),
-                    F.lit(True).alias("is_match"),
+            lp = labeled_pairs(truth_files).cache()
+            stats["pairwise"] = pairwise_prf(predicted_pairs_from_clusters(clusters), lp)
+            truth = truth_files.select("file_id", F.col("group_id").alias("entity_id"))
+            stats["bcubed"] = bcubed(clusters, truth).collect()[0].asDict()
+            f2r = out["file2rep"]
+            lp_eval, n_rec = lp, files.count()
+            if f2r is not None:
+                # blocking is evaluated in representative space: true pairs
+                # between byte-identical files were resolved by prededup
+                lp_eval = (
+                    lp.filter("is_match")
+                    .join(f2r.toDF("left_id", "_rl"), "left_id")
+                    .join(f2r.toDF("right_id", "_rr"), "right_id")
+                    .filter("_rl != _rr")
+                    .select(
+                        F.least("_rl", "_rr").alias("left_id"),
+                        F.greatest("_rl", "_rr").alias("right_id"),
+                        F.lit(True).alias("is_match"),
+                    )
+                    .distinct()
                 )
-                .distinct()
+                n_rec = f2r.select("_rep_id").distinct().count()
+            stats["blocking"] = (
+                blocking_quality(out["pairs"], lp_eval, n_records=n_rec).collect()[0].asDict()
             )
-            n_rec = f2r.select("_rep_id").distinct().count()
-        stats["blocking"] = (
-            blocking_quality(out["pairs"], lp_eval, n_records=n_rec).collect()[0].asDict()
-        )
     if args.verify_lineage and ck is not None:
         # every stage that committed at least once gets verified; a
         # mismatched/missing file list in the output is the operator's

@@ -97,13 +97,9 @@ def flagship_stage_plans(spark) -> dict[str, str]:
     from cogie_spark.plans.linkage import LinkageConfig, run_linkage
 
     files = code_files(spark, n_groups=120, seed=42)
-    out = run_linkage(files, LinkageConfig())
-    plans = {}
-    for stage in ("pairs", "scored", "clusters"):
-        plans[f"flagship:{stage}"] = explain_formatted(out[stage])
-    for df in out.get("_persisted", []) + out.get("_checkpoints", []):
-        df.unpersist()
-    return plans
+    with run_linkage(files, LinkageConfig()) as out:
+        return {f"flagship:{stage}": explain_formatted(out[stage])
+                for stage in ("pairs", "scored", "clusters")}
 
 
 def main() -> int:

@@ -33,13 +33,17 @@ def test_cc_resumes_from_committed_iteration(spark):
     ckdir = tempfile.mkdtemp(prefix="ck_cc_")
     first = {
         r["file_id"]: r["cluster_id"]
-        for r in connected_components(edges, checkpoint=CheckpointManager(spark, ckdir)).collect()
+        for r in connected_components(
+            edges, checkpoint=CheckpointManager(spark, ckdir), release_into=[]
+        ).collect()
     }
     # resume: pass an EMPTY edge list; the committed snapshot must win
     empty = spark.createDataFrame([], "left_id string, right_id string")
     resumed = {
         r["file_id"]: r["cluster_id"]
-        for r in connected_components(empty, checkpoint=CheckpointManager(spark, ckdir)).collect()
+        for r in connected_components(
+            empty, checkpoint=CheckpointManager(spark, ckdir), release_into=[]
+        ).collect()
     }
     assert resumed == first == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 

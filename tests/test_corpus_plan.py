@@ -129,10 +129,10 @@ def test_near_dup_prune_transitive_min_id(spark):
     )
     # chain 1~2, 2~3 (transitive: one group {1,2,3}); 4 and 9 singleton
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["left_id", "right_id"])
-    out = near_dup_prune(docs, CorpusConfig(), pairs=pairs)
-    kept_ids = {r["doc_id"] for r in out["pruned"].collect()}
+    with near_dup_prune(docs, CorpusConfig(), pairs=pairs) as out:
+        kept_ids = {r["doc_id"] for r in out["pruned"].collect()}
+        audit = {(r["doc_id"], r["dup_group_id"]) for r in out["dup_groups"].collect()}
     assert kept_ids == {1, 4, 9}
-    audit = {(r["doc_id"], r["dup_group_id"]) for r in out["dup_groups"].collect()}
     assert audit == {(2, 1), (3, 1)}
 
 
@@ -153,6 +153,6 @@ def test_near_dup_prune_minhash_end_to_end(spark):
         ],
         ["doc_id", "text"],
     )
-    out = near_dup_prune(docs, CorpusConfig(), method="minhash", jaccard_threshold=0.6)
-    kept_ids = {r["doc_id"] for r in out["pruned"].collect()}
+    with near_dup_prune(docs, CorpusConfig(), method="minhash", jaccard_threshold=0.6) as out:
+        kept_ids = {r["doc_id"] for r in out["pruned"].collect()}
     assert kept_ids == {10, 12}

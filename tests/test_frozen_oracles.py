@@ -32,7 +32,18 @@ def _canon(rows: list[tuple]) -> list[tuple]:
     return sorted(rows, key=lambda r: tuple((v is None, str(type(v)), v) for v in r))
 
 
-@pytest.mark.parametrize("name", sorted(EXPECTED_ORACLES))
+# q40/q41 run the flagship through the frozen __spark_entry__.py, which
+# drops run_linkage's result (and with it the release handle): the one
+# place its caches outlive a call
+_DROPS_RUN = pytest.mark.leaks_rdds(
+    reason="__spark_entry__.py is frozen and drops the run_linkage result"
+)
+
+
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=_DROPS_RUN) if n.startswith(("q40_", "q41_")) else n
+    for n in sorted(EXPECTED_ORACLES)
+])
 def test_frozen_oracle_matches_live_output(spark, name):
     import __spark_entry__ as entry
 

@@ -30,6 +30,8 @@ def test_linking_gold_accuracy(spark):
     # sameAs misses must surface as 'unk', never null (el_toolkit.py:136-142)
     assert linked.filter(F.col("cognet_link").isNull()).count() == 0
     assert linked.filter("cognet_link = 'unk'").count() > 0
+    for df in (ents, ms, linked):
+        df.unpersist()
 
 
 def test_linking_topk_contains_gold(spark):
@@ -47,4 +49,7 @@ def test_linking_topk_contains_gold(spark):
         .distinct()
         .count()
     )
-    assert hit / ms.count() >= 0.95, hit
+    n = ms.count()
+    ents.unpersist()
+    ms.unpersist()
+    assert hit / n >= 0.95, hit

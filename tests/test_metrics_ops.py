@@ -221,10 +221,10 @@ def test_linkage_custom_id_col(spark):
     from cogie_spark.plans.linkage import LinkageConfig, run_linkage
 
     files = code_files(spark, n_groups=6, seed=42).withColumnRenamed("file_id", "rec_id")
-    out = run_linkage(files, LinkageConfig(id_col="rec_id"))
-    clusters = out["clusters"]
-    assert clusters.count() == files.count()
-    assert set(clusters.columns) == {"file_id", "cluster_id"}
+    with run_linkage(files, LinkageConfig(id_col="rec_id")) as out:
+        clusters = out["clusters"]
+        assert clusters.count() == files.count()
+        assert set(clusters.columns) == {"file_id", "cluster_id"}
 
 
 def test_fbeta_multilabel_hand_values(spark):

@@ -6,6 +6,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cogie_spark.io.tableio import RunScope
+from cogie_spark.operators.cc import CheckpointHandle
+
 
 def test_lang_id_accuracy(spark):
     # note: the driver's documents.lang column labels synthetic English-
@@ -126,6 +129,7 @@ def test_multimodal_features_and_quarantine(spark):
     row = ok.first()
     assert len(row["feature"]) == 16
     assert abs(sum(row["feature"]) - 1.0) < 1e-9
+    feats.unpersist()
     # frame sampling: n_frames=100+i, every 10th
     fs = frame_sample(media, every_n=10)
     m0 = fs.filter("media_id = 'm0000'").count()
@@ -362,11 +366,19 @@ def test_cc_check_every_identical_clusters(spark):
 
     # local_max_edges=0 pins the ITERATIVE star path on both sides —
     # this test is about the fingerprint cadence, not the fast path
-    base = {tuple(r) for r in connected_components(df, local_max_edges=0).collect()}
-    cadenced = {
-        tuple(r)
-        for r in connected_components(df, check_every=2, local_max_edges=0).collect()
-    }
+    with RunScope() as scope:
+        base = {
+            tuple(r)
+            for r in connected_components(
+                df, local_max_edges=0, release_into=scope.checkpoints
+            ).collect()
+        }
+        cadenced = {
+            tuple(r)
+            for r in connected_components(
+                df, check_every=2, local_max_edges=0, release_into=scope.checkpoints
+            ).collect()
+        }
     assert base == cadenced
     # one 50-node path component + four 3-node components
     from collections import Counter
@@ -524,12 +536,14 @@ def test_semantic_duplicates_exact_end_and_no_cartesian(spark):
     )
     e = {tuple(r) for r in exact.collect()}
     s = {tuple(r) for r in sem.collect()}
+    CheckpointHandle(sem).unpersist()
     assert s == e and e, f"semantic != exact: missing={e - s} extra={s - e}"
 
     plan_df = semantic_duplicates(
         emb, threshold=0.4, nlist=8, assign_probes=2, seed=13
     )
     plan = plan_df._jdf.queryExecution().executedPlan().toString()
+    CheckpointHandle(plan_df).unpersist()
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
@@ -559,6 +573,7 @@ def test_semantic_duplicates_clustered_recall(spark):
     )
     e = {tuple(r) for r in exact.collect()}
     s = {tuple(r) for r in sem.collect()}
+    CheckpointHandle(sem).unpersist()
     assert e, "fixture must plant near-dup pairs"
     assert s == e, f"missing={e - s} extra={s - e}"
 
@@ -625,10 +640,12 @@ def test_fast_family_recall_on_word_boundary_edits(spark):
 
     recall = {}
     for mode in ("fast", "portable"):
-        out = minhash_near_duplicates(
-            df, id_col="doc_id", text_col="text", jaccard_threshold=0.9, mode=mode
-        )
-        got = {(r["left_id"], r["right_id"]) for r in out.collect()}
+        with RunScope() as caches:
+            out = minhash_near_duplicates(
+                df, id_col="doc_id", text_col="text", jaccard_threshold=0.9, mode=mode,
+                release_into=caches,
+            )
+            got = {(r["left_id"], r["right_id"]) for r in out.collect()}
         assert not (got - tp), f"{mode}: emitted a pair below the exact threshold"
         recall[mode] = len(got & tp) / len(tp)
 

@@ -17,10 +17,8 @@ from cogie_spark.io.tableio import TableIO
 from cogie_spark.plans.linkage import LinkageConfig, run_linkage
 from cogie_spark.streaming.incremental import incremental_link_batch
 
-pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
 
-
-def _persistent_rdds(spark) -> set[int]:
+def _rdd_ids(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
@@ -33,12 +31,8 @@ def _partition(rows) -> set[frozenset]:
 
 
 def _batch_rows(files, cfg=None) -> list[tuple[str, str]]:
-    out = run_linkage(files, cfg)
-    try:
+    with run_linkage(files, cfg) as out:
         return [(r.file_id, r.cluster_id) for r in out["clusters"].collect()]
-    finally:
-        for df in out["_persisted"] + out["_checkpoints"]:
-            df.unpersist()
 
 
 def _stream_rows(spark, batches, cfg=None) -> list[tuple[str, str]]:
@@ -48,9 +42,9 @@ def _stream_rows(spark, batches, cfg=None) -> list[tuple[str, str]]:
     state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_diff_"))
     rows = []
     for b, batch in enumerate(batches):
-        before = _persistent_rdds(spark)
+        before = _rdd_ids(spark)
         got = incremental_link_batch(batch, state, cfg=cfg, batch_id=b).collect()
-        left = _persistent_rdds(spark) - before
+        left = _rdd_ids(spark) - before
         assert not left, f"batch {b} left persisted RDDs {sorted(left)}"
         rows.extend((r.file_id, r.cluster_id) for r in got)
     return rows

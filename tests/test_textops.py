@@ -218,3 +218,27 @@ def test_repetition_features_null_text_is_zero(spark):
     for c in ("dup_line_frac", "dup_line_char_frac", "top_2gram_char_frac", "dup_2gram_char_frac"):
         assert r[1][c] == 0.0, (c, r[1][c])
     assert r[2]["top_2gram_char_frac"] > 0.5  # the non-null row still measures
+
+
+def test_q21_signature_matches_oracle_on_edge_texts(spark, tmp_path):
+    """q21 computes MinHash through blocking.signature_table's portable
+    family. On texts the driver's tables may not hold — empty,
+    whitespace-only, NULL, shorter than the shingle width, exactly it —
+    it must still equal its DuckDB oracle (the whole normalized string
+    is then the single shingle, as in char_shingles)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cogie_spark.queries import ORACLES, QUERIES
+
+    texts = ["", "   ", None, "a", "Ab\tC", "abcdefg", "abcdefgh", "Abc  defgh ijk", "héllo wörld"]
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(len(texts)), pa.int64()), "text": texts}),
+        str(tmp_path / "documents.parquet"),
+    )
+    got = sorted(tuple(r) for r in QUERIES["q21_minhash_signature"](spark, str(tmp_path)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    want = sorted(con.execute(ORACLES["q21_minhash_signature"]).fetchall())
+    assert got == want
