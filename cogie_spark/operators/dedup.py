@@ -11,6 +11,7 @@ blocking mathematics, applied to documents instead of mentions.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -18,7 +19,19 @@ from cogie_spark.functions.hashing import simhash64
 from cogie_spark.functions.similarity import cosine_native
 from cogie_spark.functions.text import char_shingles, tokens
 from cogie_spark.io.tableio import RunScope
-from cogie_spark.operators.blocking import candidate_pairs
+from cogie_spark.operators.blocking import (
+    bands_from_signatures,
+    candidate_pairs,
+    cascade_join,
+    signature_table,
+)
+
+# The near-dup MinHash family of q32, near_dup_prune and the corpus
+# stream (whose manifest pins it): 8 bands x 4 rows over the first 32
+# permutations, all 64 for the cascade estimate, char 8-shingles,
+# blocks salted past 256 members.
+NEAR_DUP_NUM_PERM, NEAR_DUP_BANDS, NEAR_DUP_EST_PERM = 32, 8, 64
+NEAR_DUP_SHINGLE_K, NEAR_DUP_MAX_BLOCK_SIZE = 8, 256
 
 
 def exact_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -33,31 +46,46 @@ def exact_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFra
     )
 
 
+def near_dup_signatures(
+    df: DataFrame, id_col: str, text_col: str, key_cols: tuple[str, ...], mode: str
+) -> DataFrame:
+    """(id, *key_cols, sig) over the family's 64 permutations.
+    Permutation i does not depend on the table width, so the bands (the
+    first 32) equal those of a 32-wide table."""
+    return signature_table(
+        df, id_col=id_col, content_col=text_col, key_cols=key_cols,
+        num_perm=NEAR_DUP_EST_PERM, shingle_k=NEAR_DUP_SHINGLE_K, mode=mode,
+    )
+
+
+def near_dup_bands(sigs: DataFrame, id_col: str, key_cols: tuple[str, ...]) -> DataFrame:
+    """(id, *key_cols, band_id, band_hash): the family's LSH bands."""
+    return bands_from_signatures(
+        sigs, id_col=id_col, key_cols=key_cols, bands=NEAR_DUP_BANDS,
+        rows_per_band=NEAR_DUP_NUM_PERM // NEAR_DUP_BANDS,
+    )
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
     key_cols: tuple[str, ...] = (),
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_k: int = 8,
     jaccard_threshold: float = 0.7,
-    max_block_size: int = 256,
     mode: str = "portable",
     *,
     release_into: list,
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs verified with exact shingle Jaccard.
+    """MinHash-LSH candidate pairs verified with exact shingle Jaccard:
+    :func:`near_dup_signatures`, computed once and persisted, through
+    the pairs step (bands -> bucket-join -> cascade -> exact verify,
+    the flagship's candidate path in operators/blocking.py). Returns
+    (left_id, right_id, jaccard) at ``jaccard >= jaccard_threshold``.
 
-    shingle -> minhash -> band -> bucket-join -> cascade, all in
-    operators/blocking.py (the flagship's candidate path), then the
-    surviving pairs are verified with exact Jaccard over the distinct
-    shingle sets (jaccard_verify_pairs) — candidates are already
-    bounded, so the verify join touches only O(candidates) rows.
-
-    Default banding is 8 bands x 4 rows: at background similarity ~0.05
-    (typical corpora) chance collisions are ~5e-5 per pair, while pairs
-    at the 0.9 near-dup level collide with prob 1-(1-0.9^4)^8 = 0.9998.
+    The family is fixed (module constants): 8 bands x 4 rows. At
+    background similarity ~0.05 (typical corpora) chance collisions are
+    ~5e-5 per pair, while pairs at the 0.9 near-dup level collide with
+    prob 1-(1-0.9^4)^8 = 0.9998.
 
     ``mode``: the signature hash family (operators/blocking.py).
     The OUTPUT is family-independent — every emitted pair is verified
@@ -78,37 +106,38 @@ def minhash_near_duplicates(
     table, block caches, the cascade survivors' ids); the caller
     unpersists them once the output is materialized (VERDICT r5 #4).
     """
-    from pyspark import StorageLevel
-
-    from cogie_spark.operators.blocking import (
-        bands_from_signatures,
-        cascade_join,
-        signature_table,
-    )
-
-    # signature computed ONCE (explode+min-agg): the first num_perm
-    # perms band (same S-curve as before); all est_perm perms feed the
-    # agreement estimate that guards the exact verify
-    est_perm = max(num_perm, 64)
-    sigs = signature_table(
-        df, id_col=id_col, content_col=text_col, key_cols=key_cols,
-        num_perm=est_perm, shingle_k=shingle_k, mode=mode,
-    )
+    sigs = near_dup_signatures(df, id_col, text_col, key_cols, mode)
     sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
     release_into.append(sigs)
-    blocks = bands_from_signatures(
-        sigs, id_col=id_col, key_cols=key_cols, bands=bands, rows_per_band=num_perm // bands
+    return _near_dup_pairs(
+        sigs, df, id_col, text_col, key_cols, jaccard_threshold, mode, release_into
     )
+
+
+def _near_dup_pairs(
+    sigs: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    key_cols: tuple[str, ...],
+    jaccard_threshold: float,
+    mode: str,
+    release_into: list,
+) -> DataFrame:
+    """The pairs step over :func:`near_dup_signatures` ``sigs`` (which
+    the caller caches): bands -> candidate_pairs -> cascade_join ->
+    jaccard_verify_pairs against ``docs``' text. minhash_near_duplicates
+    and the corpus stream's within-batch prune both run it."""
     # dropped blocks surface via candidate_pairs' own precheck logging
     # (stats_into + in-function warning — no extra job, VERDICT r5 #3)
     pairs, _ = candidate_pairs(
-        blocks, id_col=id_col, key_cols=key_cols, max_block_size=max_block_size,
-        release_into=release_into,
+        near_dup_bands(sigs, id_col, key_cols), id_col=id_col, key_cols=key_cols,
+        max_block_size=NEAR_DUP_MAX_BLOCK_SIZE, release_into=release_into,
     )
 
     # cascade: signature-agreement estimate (cheap fixed-width arrays)
     # prunes the candidate set before the exact shingle-set verify; the
-    # margin (threshold - 0.2 at 64+ perms) keeps the miss probability
+    # margin (threshold - 0.2 at 64 perms) keeps the miss probability
     # below ~1e-7 per true pair, so the exact-verify output set is
     # unchanged — only its cost shrinks. 'fast' signatures estimate
     # word-3gram similarity while the threshold speaks char-shingle
@@ -116,15 +145,14 @@ def minhash_near_duplicates(
     # the exact verify would keep
     est_margin = 0.4 if mode == "fast" else 0.2
     pairs = cascade_join(
-        pairs, sigs, est_perm, max(jaccard_threshold - est_margin, 0.0), id_col=id_col
+        pairs, sigs, NEAR_DUP_EST_PERM, max(jaccard_threshold - est_margin, 0.0),
+        id_col=id_col,
     )
     # the verify reads the survivors twice (candidate ids + pair joins),
     # and only their ids
     pairs = pairs.select("left_id", "right_id").persist(StorageLevel.MEMORY_AND_DISK)
     release_into.append(pairs)
-    return jaccard_verify_pairs(
-        pairs, df, id_col, text_col, threshold=jaccard_threshold, shingle_k=shingle_k
-    )
+    return jaccard_verify_pairs(pairs, docs, id_col, text_col, threshold=jaccard_threshold)
 
 
 def jaccard_verify_pairs(
@@ -133,13 +161,14 @@ def jaccard_verify_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    shingle_k: int = 8,
     right_docs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact char-shingle Jaccard verification of candidate pairs — THE
-    shared definition of "near-duplicate at ``threshold``":
-    minhash_near_duplicates and both checks of the streaming admission
-    gate call it, so batch and streaming can never diverge.
+    shared definition of "near-duplicate at ``threshold``", over the
+    family's ``NEAR_DUP_SHINGLE_K``-char shingles: the pairs step (so
+    minhash_near_duplicates and the corpus stream's within-batch prune)
+    and the stream's cross-batch gate call it, so batch and streaming
+    can never diverge.
 
     ``pairs`` carries (left_id, right_id). Shingle sets are interpreted
     per-row expressions, so they are built only for the docs a pair
@@ -152,7 +181,8 @@ def jaccard_verify_pairs(
 
     def _sets(src: DataFrame, ids: DataFrame) -> DataFrame:
         return src.join(ids, F.col(id_col) == F.col("_cid"), "left_semi").select(
-            F.col(id_col).alias("_sid"), char_shingles(text_col, k=shingle_k).alias("_sh")
+            F.col(id_col).alias("_sid"),
+            char_shingles(text_col, k=NEAR_DUP_SHINGLE_K).alias("_sh"),
         )
 
     left_ids = pairs.select(F.col("left_id").alias("_cid"))

@@ -194,7 +194,6 @@ def near_dup_prune(
     cfg: CorpusConfig | None = None,
     method: str = "minhash",
     pairs: DataFrame | None = None,
-    cc_max_iter: int = 20,
     **dedup_kwargs,
 ) -> RunResult:
     """The pipeline stage AFTER :func:`clean_corpus`: near-duplicate
@@ -224,6 +223,8 @@ def near_dup_prune(
     table: every non-representative member with its group id) in a
     ``RunResult``: both are lazy over CC's final checkpoint, so consume
     them inside ``with near_dup_prune(...) as out:`` or release after.
+    The corpus stream's within-batch prune runs the same step
+    (:func:`_prune`) inside its batch scope.
 
     Scale shape: pair generation is the banded/bucketed family path
     (bounded blocks, logged drops); CC runs on the PAIR graph — near-
@@ -253,22 +254,30 @@ def near_dup_prune(
                 dedup_caches.checkpoints.append(CheckpointHandle(pairs))
             else:
                 raise ValueError(f"unknown method: {method!r}")
+        pruned, dup_groups = _prune(kept, pairs, cfg.id_col, scope)
+    return RunResult(scope, pruned=pruned, dup_groups=dup_groups)
 
-        groups = connected_components(
-            pairs.select("left_id", "right_id"), max_iter=cc_max_iter,
-            release_into=scope.checkpoints,
-        )
+
+def _prune(
+    kept: DataFrame, pairs: DataFrame, id_col: str, scope: RunScope
+) -> tuple[DataFrame, DataFrame]:
+    """Transitive groups of ``pairs`` -> (pruned, dup_groups): ``kept``
+    without each group's non-min members, and those members with their
+    group id. Both are lazy over CC's final checkpoint, which goes to
+    ``scope.checkpoints``."""
+    groups = connected_components(
+        pairs.select("left_id", "right_id"), release_into=scope.checkpoints
+    )
     members = groups.select(
-        F.col("file_id").alias(cfg.id_col), F.col("cluster_id").alias("dup_group_id")
+        F.col("file_id").alias(id_col), F.col("cluster_id").alias("dup_group_id")
     )
     # representative = the group's min id == the cluster_id itself, so
     # the prune is "drop every member whose id != its group id";
     # singletons never appear in the CC output and survive the
     # left join with a NULL group id
     pruned = (
-        kept.join(members, cfg.id_col, "left")
-        .filter(F.col("dup_group_id").isNull() | (F.col("dup_group_id") == F.col(cfg.id_col)))
+        kept.join(members, id_col, "left")
+        .filter(F.col("dup_group_id").isNull() | (F.col("dup_group_id") == F.col(id_col)))
         .drop("dup_group_id")
     )
-    dup_groups = members.filter(F.col("dup_group_id") != F.col(cfg.id_col))
-    return RunResult(scope, pruned=pruned, dup_groups=dup_groups)
+    return pruned, members.filter(F.col("dup_group_id") != F.col(id_col))

@@ -23,6 +23,10 @@ as streaming/incremental.py:
   between write and publish leaves the old manifest readable); kept
   dirs are never folded — they are the stream's output, retention is
   the consumer's policy.
+
+Near-dup admission composes the batch code: operators/dedup.py's family,
+signature and pairs steps, then near_dup_prune's prune step. Only the
+cross-batch gate against the band state is the stream's own.
 """
 
 from __future__ import annotations
@@ -31,13 +35,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cogie_spark.io.tableio import RunScope, StateLog, TableIO, union_parts
-from cogie_spark.plans.corpus import CorpusConfig, kept_from_docs
+from cogie_spark.operators.blocking import cross_band_pairs
+from cogie_spark.operators.dedup import (
+    NEAR_DUP_BANDS,
+    NEAR_DUP_NUM_PERM,
+    NEAR_DUP_SHINGLE_K,
+    _near_dup_pairs,
+    jaccard_verify_pairs,
+    near_dup_bands,
+    near_dup_signatures,
+)
+from cogie_spark.plans.corpus import CorpusConfig, _prune, kept_from_docs
 
 _MANIFEST = "corpus_manifest.json"
 _HASH = "sha256"
-# near-dup admission's MinHash family and block cap; pinned in the
-# manifest with the threshold (band state is only comparable under one)
-_ND_NUM_PERM, _ND_BANDS, _ND_SHINGLE_K, _ND_MAX_BLOCK_SIZE = 32, 8, 8, 256
 
 
 def _fold_hashes(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
@@ -64,19 +75,21 @@ def incremental_clean_batch(
 
     ``near_dup=True`` extends first-seen-wins from exact content to
     NEAR-duplicates (the streaming form of plans/corpus.near_dup_prune):
-    one MinHash signature pass over the batch feeds both (a) the
-    within-batch transitive prune (candidate_pairs + exact char-shingle
-    Jaccard verify + connected-components min-id representative) and
-    (b) the cross-batch admission gate — new docs whose bands collide
+    one signature pass over the batch (dedup.near_dup_signatures) feeds
+    (a) the cross-batch admission gate — new docs whose bands collide
     with ADMITTED docs' band state are exact-verified against the
     history text (kept dirs, column-pruned scan bounded by a semi-join
     on candidate ids — the incremental_link_batch state discipline:
     state is scanned, never shuffled wholesale) and dropped at
-    ``jaccard_threshold``. Admitted docs' bands become the
+    ``jaccard_threshold`` — and then (b) the within-batch transitive
+    prune of the survivors, near_dup_prune's pairs and prune steps over
+    the survivors' signatures, so a one-batch stream keeps exactly the
+    rows near_dup_prune keeps. Admitted docs' bands become the
     ``bands_delta_NNNNN`` delta, folded by the same compaction as the
-    hash state. Signature params are pinned in the manifest on first
-    use; a later batch with different params raises instead of
-    silently mixing incompatible band spaces.
+    hash state. The family (dedup's ``NEAR_DUP_*`` constants) and the
+    threshold are pinned in the manifest on first use; a later batch
+    with a different threshold raises instead of silently mixing
+    incompatible band spaces.
     """
     cfg = cfg or CorpusConfig()
     log = StateLog(state, _MANIFEST, folds={"hashes": _fold_hashes, "bands": union_parts})
@@ -102,16 +115,17 @@ def incremental_clean_batch(
         # shuffled left-anti on the 64-hex key, the partition-count knob
         kept = kept.join(seen.select(_HASH), _HASH, "left_anti")
 
-    # batch-scoped caches (batch rows + band table, CC's checkpoint) —
-    # released when the scope closes, even when the commit fails
-    # mid-batch, so a long stream with foreachBatch retries never
-    # accumulates stranded persisted partitions from failed attempts
-    with RunScope() as to_release:
+    # batch-scoped caches (batch rows, signatures, the pair step's
+    # caches, CC's checkpoint) — released when the scope closes, even
+    # when the commit fails mid-batch, so a long stream with foreachBatch
+    # retries never accumulates stranded partitions from failed attempts
+    with RunScope() as scope:
         dirs = {"kept": log.delta_name("kept", batch_id)}
         if near_dup:
+            # the banded family, pinned with the threshold on first use
             params = {
-                "num_perm": _ND_NUM_PERM, "bands": _ND_BANDS,
-                "shingle_k": _ND_SHINGLE_K, "threshold": jaccard_threshold,
+                "num_perm": NEAR_DUP_NUM_PERM, "bands": NEAR_DUP_BANDS,
+                "shingle_k": NEAR_DUP_SHINGLE_K, "threshold": jaccard_threshold,
             }
             pinned = log.manifest.get("near_dup_params")
             if pinned is not None and pinned != params:
@@ -120,9 +134,31 @@ def incremental_clean_batch(
                     f"{pinned}; band state is not comparable across param changes"
                 )
             log.manifest["near_dup_params"] = params
-            kept, nd_bands_df = _near_dup_gate(
-                kept, log, cfg, jaccard_threshold=jaccard_threshold, to_release=to_release
+            idc, text = cfg.id_col, cfg.text_col
+            # kept feeds signatures, both verifies, the prune and the commit
+            kept = scope.persist(kept)
+            sigs = scope.persist(near_dup_signatures(kept, idc, text, (), "portable"))
+            batch_bands = near_dup_bands(sigs, idc, ())
+            band_paths = log.paths("bands")
+            if band_paths:
+                spark = batch.sparkSession
+                cross = cross_band_pairs(
+                    batch_bands, spark.read.parquet(*band_paths), id_col=idc, key_cols=()
+                )
+                old_txt = spark.read.parquet(*log.paths("kept"))
+                dropped_new = jaccard_verify_pairs(
+                    cross, kept, idc, text, threshold=jaccard_threshold, right_docs=old_txt
+                ).select(F.col("left_id").alias(idc)).distinct()
+                # the survivors feed the pairs step (signatures semi-join,
+                # both cascade sides, the verify), the prune and the
+                # commit: cached, the cross-batch verify runs once
+                kept = scope.persist(kept.join(dropped_new, idc, "left_anti"))
+                sigs = sigs.join(kept.select(idc), idc, "left_semi")
+            # within-batch: near_dup_prune's own steps over the survivors
+            pairs = _near_dup_pairs(
+                sigs, kept, idc, text, (), jaccard_threshold, "portable", scope
             )
+            kept, _ = _prune(kept, pairs, idc, scope)
 
         state.write(dirs["kept"], kept.withColumn("src_batch", F.lit(batch_id)))
         committed = state.read(dirs["kept"])
@@ -137,100 +173,11 @@ def incremental_clean_batch(
             dirs["bands"] = log.delta_name("bands", batch_id)
             state.write(
                 dirs["bands"],
-                nd_bands_df.join(
-                    committed.select(F.col(cfg.id_col)), cfg.id_col, "left_semi"
-                ),
+                batch_bands.join(committed.select(F.col(idc)), idc, "left_semi"),
             )
         log.commit(batch_id, dirs)
         log.compact(compact_every)
     return committed.drop(_HASH, "src_batch")
-
-
-def _near_dup_gate(
-    kept: DataFrame,
-    log: StateLog,
-    cfg: CorpusConfig,
-    jaccard_threshold: float,
-    to_release: list[DataFrame],
-) -> tuple[DataFrame, DataFrame]:
-    """One signature pass -> (pruned kept view, this batch's band table).
-
-    Within-batch: transitive near-dup groups keep their min id. Cross-
-    batch: any new doc exact-verified >= threshold against an admitted
-    doc is dropped (first-seen-wins). Returned bands cover the whole
-    batch; the caller semi-joins them to the admitted rows it commits.
-    Persisted handles (batch rows, band table) are appended to
-    ``to_release`` for the caller to unpersist after its commit.
-    """
-    from pyspark import StorageLevel
-
-    from cogie_spark.operators.blocking import (
-        bands_from_signatures,
-        candidate_pairs,
-        cross_band_pairs,
-        signature_table,
-    )
-    from cogie_spark.operators.cc import connected_components
-    from cogie_spark.operators.dedup import jaccard_verify_pairs
-
-    spark = kept.sparkSession
-    idc = cfg.id_col
-    # batch-scoped persist: kept feeds signatures, two shingle builds
-    # and the final anti-joins; caller unpersists after the commit
-    kept = kept.persist()
-    to_release.append(kept)
-    sigs = signature_table(
-        kept, id_col=idc, content_col=cfg.text_col, key_cols=(),
-        num_perm=_ND_NUM_PERM, shingle_k=_ND_SHINGLE_K, mode="portable",
-    )
-    nb = bands_from_signatures(
-        sigs, id_col=idc, key_cols=(), bands=_ND_BANDS,
-        rows_per_band=_ND_NUM_PERM // _ND_BANDS,
-    )
-    nb = nb.persist(StorageLevel.MEMORY_AND_DISK)
-    to_release.append(nb)
-
-    def _verify(pairs: DataFrame, docs: DataFrame, right_docs: DataFrame | None = None):
-        # the ONE near-dup-at-threshold definition minhash_near_duplicates
-        # also uses: batch and this streaming gate cannot diverge on
-        # what counts as a duplicate
-        return jaccard_verify_pairs(
-            pairs, docs, idc, cfg.text_col, threshold=jaccard_threshold,
-            shingle_k=_ND_SHINGLE_K, right_docs=right_docs,
-        )
-
-    # cross-batch admission gate against the admitted band state
-    band_paths = log.paths("bands")
-    if band_paths:
-        cross = cross_band_pairs(nb, spark.read.parquet(*band_paths), id_col=idc, key_cols=())
-        old_txt = spark.read.parquet(*log.paths("kept"))
-        dropped_new = _verify(cross, kept, old_txt).select(
-            F.col("left_id").alias(idc)
-        ).distinct()
-        kept = kept.join(dropped_new, idc, "left_anti")
-
-    # within-batch transitive prune among the survivors
-    self_pairs, _ = candidate_pairs(
-        nb, id_col=idc, key_cols=(), max_block_size=_ND_MAX_BLOCK_SIZE,
-        release_into=to_release,
-    )
-    surv_ids = kept.select(F.col(idc).alias("_cid"))
-    self_pairs = (
-        self_pairs.select("left_id", "right_id")
-        .join(surv_ids, F.col("left_id") == F.col("_cid"), "left_semi")
-        .join(surv_ids, F.col("right_id") == F.col("_cid"), "left_semi")
-    )
-    matched = _verify(self_pairs, kept).select("left_id", "right_id")
-    # release_into: CC's final localCheckpoint joins the batch-scoped
-    # caches released at commit — without it every micro-batch leaks
-    # session-lifetime checkpoint RDDs (superseded rounds release
-    # inside connected_components itself)
-    groups = connected_components(matched, release_into=to_release)
-    non_rep = groups.filter(F.col("cluster_id") != F.col("file_id")).select(
-        F.col("file_id").alias(idc)
-    )
-    kept = kept.join(non_rep, idc, "left_anti")
-    return kept, nb.select(idc, "band_id", "band_hash")
 
 
 def start_corpus_stream(

@@ -66,8 +66,20 @@ def main() -> None:
         kept = kept_view(spark.read.parquet(args.tagged_output), cfg)
     else:
         kept = out["kept"]
+
+    def write_and_count(view):
+        # the training view on disk is the FINAL (gated, deduped,
+        # near-dup-pruned) one; the stats read the written bytes
+        # instead of recomputing the plan
+        if args.output:
+            view.write.mode("overwrite").parquet(args.output)
+            view = spark.read.parquet(args.output)
+        return docs.count(), view.count()
+
     n_dup_pruned = None
-    if args.near_dup != "off":
+    if args.near_dup == "off":
+        n_in, n_kept = write_and_count(kept)
+    else:
         from cogie_spark.plans.corpus import near_dup_prune
 
         if not args.tagged_output:
@@ -83,17 +95,12 @@ def main() -> None:
             kw["vec_col"] = args.vec_col
             if args.near_dup_threshold is not None:
                 kw["threshold"] = args.near_dup_threshold
-        nd = near_dup_prune(kept, cfg, method=args.near_dup, **kw)
-        n_dup_pruned = nd["dup_groups"].count()
-        kept = nd["pruned"]
-    if args.output:
-        # the training view on disk is the FINAL (gated, deduped,
-        # near-dup-pruned) one; the stats below read the
-        # written bytes instead of recomputing the plan
-        kept.write.mode("overwrite").parquet(args.output)
-        kept = spark.read.parquet(args.output)
-    n_in = docs.count()
-    n_kept = kept.count()
+        # the pruned view is lazy over the prune's caches: write and
+        # count it before they are released
+        with near_dup_prune(kept, cfg, method=args.near_dup, **kw) as nd:
+            n_dup_pruned = nd["dup_groups"].count()
+            n_in, n_kept = write_and_count(nd["pruned"])
+        kept.unpersist()
     stats = {
         "docs_in": n_in,
         "docs_kept": n_kept,

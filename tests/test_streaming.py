@@ -690,3 +690,88 @@ def test_corpus_near_dup_failed_batch_releases_caches(spark, monkeypatch):
     )
     assert sorted(r["doc_id"] for r in k0.collect()) == [1, 2]
     assert _cached_count() == before
+
+
+# a transitive near-dup chain at the default threshold 0.7 (char-8
+# shingle Jaccard): A~B 0.78, B~C 0.78, A!~C 0.60
+_CHAIN_A = (
+    "river boats carry timber downstream every spring while farmers along the "
+    "banks plant barley and oats in fields that flood each autumn so the soil "
+    "stays rich and the harvest feeds the villages through long cold winters"
+)
+_CHAIN_B = _CHAIN_A.replace("timber", "granite").replace("barley", "wheat")
+_CHAIN_C = _CHAIN_B.replace("villages", "towns").replace("autumn", "summer")
+
+
+def test_corpus_stream_near_dup_equals_batch_prune(spark):
+    """A one-batch near-dup stream keeps exactly the rows near_dup_prune
+    keeps over the same cleaned batch (transitive chain, an exact
+    duplicate, singletons), and commits exactly the bands of a 32-wide
+    portable signature table: band state banded from such tables keeps
+    gating."""
+    from cogie_spark.operators.blocking import bands_from_signatures, signature_table
+    from cogie_spark.plans.corpus import CorpusConfig, kept_from_docs, near_dup_prune
+    from cogie_spark.streaming.corpus import incremental_clean_batch
+
+    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_corpus_ndb_"))
+    cfg = CorpusConfig(redact=False)
+    batch = _docs(spark, [
+        (1, _CHAIN_A), (2, _CHAIN_B), (3, _CHAIN_C),
+        (4, _GOOD), (5, _ESSAY), (6, _ESSAY),
+    ])
+
+    streamed = incremental_clean_batch(batch, state, cfg, batch_id=0, near_dup=True)
+    got = sorted(r["doc_id"] for r in streamed.collect())
+    with near_dup_prune(kept_from_docs(batch, cfg), cfg, method="minhash") as out:
+        want = sorted(r["doc_id"] for r in out["pruned"].collect())
+    # C goes with B although A!~C; 6 is 5's exact duplicate
+    assert want == [1, 4, 5]
+    assert got == want
+
+    sigs = signature_table(
+        kept_from_docs(batch, cfg), id_col="doc_id", content_col="text",
+        key_cols=(), num_perm=32, mode="portable",
+    )
+    bands = bands_from_signatures(sigs, id_col="doc_id", key_cols=(), bands=8, rows_per_band=4)
+    want_bands = {
+        tuple(r) for r in bands.filter(F.col("doc_id").isin(got))
+        .select("doc_id", "band_id", "band_hash").collect()
+    }
+    committed = {
+        tuple(r) for r in spark.read.parquet(f"{state.base}/bands_*")
+        .select("doc_id", "band_id", "band_hash").collect()
+    }
+    assert committed == want_bands
+
+
+def test_corpus_stream_near_dup_one_signature_pass_per_batch(spark, monkeypatch):
+    """Each near-dup batch computes its signatures once — the cross-batch
+    gate, the committed bands and the within-batch pairs step all read
+    that one table — including a batch that has band state to gate
+    against."""
+    import cogie_spark.operators.dedup as dedup_mod
+    from cogie_spark.plans.corpus import CorpusConfig
+    from cogie_spark.streaming.corpus import incremental_clean_batch
+
+    calls: list[int] = []
+    orig_sig = dedup_mod.signature_table
+
+    def counting_sig(df, **kw):
+        calls.append(1)
+        return orig_sig(df, **kw)
+
+    monkeypatch.setattr(dedup_mod, "signature_table", counting_sig)
+    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_corpus_nds_"))
+    cfg = CorpusConfig(redact=False)
+    per_batch, kept_ids = [], []
+    for i, rows in enumerate([
+        [(1, _CHAIN_A), (2, _ESSAY)],
+        # 10 is dropped against admitted 1; 12 then has no near-dup left
+        [(10, _CHAIN_B), (11, _GOOD), (12, _CHAIN_C)],
+    ]):
+        calls.clear()
+        kept = incremental_clean_batch(_docs(spark, rows), state, cfg, batch_id=i, near_dup=True)
+        kept_ids.append(sorted(r["doc_id"] for r in kept.collect()))
+        per_batch.append(len(calls))
+    assert kept_ids == [[1, 2], [11, 12]]
+    assert per_batch == [1, 1]
