@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cogie_spark.functions.sqltext import ident
+
 
 def h64(col: Column | str, salt: str = "") -> Column:
     """Portable 60-bit hash of a string column as BIGINT.
@@ -55,25 +57,33 @@ def base_hash28(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("bigint")
 
 
-def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Split a MinHash signature into LSH bands.
+def minhash_bands(sig_col: str, bands: int, rows_per_band: int) -> Column:
+    """Split the MinHash signature column named ``sig_col`` into LSH bands.
 
-    Returns array<struct<band_id:int, band_hash:string>> — explode it and
+    Returns array<struct<band_id:int, band_hash:bigint>> — explode it and
     equi-join on (band_id, band_hash) to get candidate pairs. Two items
     collide on a band iff all ``rows_per_band`` minima agree, giving the
     classic (1-(1-s^r)^b) S-curve.
+
+    Built as ONE SQL expression, which the JVM parses in one call
+    however many bands there are (functions/sqltext.py); built through
+    the Column API it costs ~80 Py4J round-trips per band.
+    ``struct(... AS ...)``, not ``named_struct``, so the plan prints the
+    same either way.
     """
-    structs = []
-    for b in range(bands):
-        sl = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        # BIGINT band hash: block keys are shuffled/sorted billions of
-        # times at scale — 8-byte longs beat 32-char md5 strings on
-        # every axis (bytes moved, comparisons, hashing). xxhash64 over
-        # the concatenated minima; the value never crosses engines
-        # (oracles verify pair OUTPUT, not band representation).
-        band_hash = F.xxhash64(F.concat_ws("_", F.transform(sl, lambda x: x.cast("string"))))
-        structs.append(F.struct(F.lit(b).alias("band_id"), band_hash.alias("band_hash")))
-    return F.array(*structs)
+    # BIGINT band hash: block keys are shuffled/sorted billions of
+    # times at scale — 8-byte longs beat 32-char md5 strings on every
+    # axis (bytes moved, comparisons, hashing). xxhash64 over the
+    # concatenated minima; the value never crosses engines (oracles
+    # verify pair OUTPUT, not band representation).
+    sig = ident(sig_col)
+    structs = ", ".join(
+        f"struct({b} AS band_id, xxhash64(concat_ws('_', transform("
+        f"slice({sig}, {b * rows_per_band + 1}, {rows_per_band}), "
+        f"x -> cast(x as string)))) AS band_hash)"
+        for b in range(bands)
+    )
+    return F.expr(f"array({structs})")
 
 
 def simhash64(token_col: Column, bits: int = 64) -> Column:

@@ -12,6 +12,19 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cogie_spark.functions.sqltext import column_sql
+
+
+def normalize_sql(x: str) -> str:
+    """SQL text of :func:`normalize_text` over the SQL expression ``x``
+    (the one definition; the text-stat expressions compose it)."""
+    return f"trim(regexp_replace(lower({x}), '\\\\s+', ' '))"
+
+
+def tokens_sql(x: str) -> str:
+    """SQL text of :func:`tokens` over the SQL expression ``x``."""
+    return f"split({normalize_sql(x)}, ' ')"
+
 
 def normalize_text(col: Column | str) -> Column:
     """lower + collapse whitespace runs + trim.
@@ -19,8 +32,7 @@ def normalize_text(col: Column | str) -> Column:
     Portable DuckDB twin:
     trim(regexp_replace(lower(x), '\\s+', ' ', 'g'))
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    return F.expr(normalize_sql(column_sql(col)))
 
 
 def tokens(col: Column | str) -> Column:
@@ -28,7 +40,7 @@ def tokens(col: Column | str) -> Column:
 
     DuckDB twin: string_split(<normalized>, ' ')
     """
-    return F.split(normalize_text(col), " ")
+    return F.expr(tokens_sql(column_sql(col)))
 
 
 def char_shingles(col: Column | str, k: int = 8, distinct: bool = True) -> Column:

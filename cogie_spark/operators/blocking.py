@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cogie_spark.functions.hashing import base_hash28, minhash_bands
+from cogie_spark.functions.sqltext import column_sql
 
 
 def signature_table(
@@ -59,7 +60,12 @@ def signature_table(
     #   shingles, so signatures are identical without it;
     # - min-aggregates are HashAggregate: whole-stage codegen'd and
     #   partially combined map-side, so the shuffle is |rows| x
-    #   num_perm longs regardless of shingle count.
+    #   num_perm longs regardless of shingle count;
+    # - the num_perm minima are ONE aggregate expression written as SQL
+    #   text, array(min((a_i * _h + b_i) % P), ...) AS sig, which the
+    #   JVM parses in one call: built node by node through the Column
+    #   API it costs ~75 Py4J round-trips per permutation before the
+    #   first job runs (functions/sqltext.py). Same physical plan.
     from cogie_spark.functions.hashing import MINHASH_P, _perm_coeffs
     from cogie_spark.functions.text import normalize_text, tokens
 
@@ -100,15 +106,11 @@ def signature_table(
             base_hash28(F.col("_t").substr(F.col("_i"), F.lit(shingle_k))).alias("_h"),
         )
 
-    aggs = []
-    for i in range(num_perm):
-        a, b = _perm_coeffs(i)
-        aggs.append(F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"_m{i}"))
-    return (
-        exploded.groupBy(id_col, *key_cols)
-        .agg(*aggs)
-        .select(id_col, *key_cols, F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig"))
+    minima = ", ".join(
+        f"min(({a} * `_h` + {b}) % {MINHASH_P})"
+        for a, b in map(_perm_coeffs, range(num_perm))
     )
+    return exploded.groupBy(id_col, *key_cols).agg(F.expr(f"array({minima}) AS sig"))
 
 
 def bands_from_signatures(
@@ -119,7 +121,7 @@ def bands_from_signatures(
     rows_per_band: int = 2,
 ) -> DataFrame:
     """Explode a signature table into LSH block memberships."""
-    bandcol = minhash_bands(F.col("sig"), bands, rows_per_band)
+    bandcol = minhash_bands("sig", bands, rows_per_band)
     return sigs.select(id_col, *key_cols, F.explode(bandcol).alias("_band")).select(
         id_col,
         *key_cols,
@@ -128,21 +130,26 @@ def bands_from_signatures(
     )
 
 
-def estimate_jaccard(sig_a: F.Column, sig_b: F.Column, num_perm: int) -> F.Column:
+def estimate_jaccard(sig_a: F.Column | str, sig_b: F.Column | str, num_perm: int) -> F.Column:
     """MinHash agreement fraction — an unbiased Jaccard estimate, pure
     JVM expressions. Used as the cheap cascade filter before the
     pandas-UDF scorers (the reference's retrieve-then-rerank split,
-    SURVEY.md §4).
+    SURVEY.md §4). ``sig_a``/``sig_b`` are column names or Columns
+    (rendered to SQL text once, see functions/sqltext.column_sql);
+    the result is a double.
 
     Unrolled to ``num_perm`` static element comparisons: higher-order
     zip_with/filter lambdas run on the interpreted expression path and
     allocate per row; the unrolled sum stays in whole-stage codegen.
+    The sum is one SQL expression, parsed in one JVM call however wide;
+    its divisor is a ``D`` literal (a plain ``64.0`` would be DECIMAL).
     """
-    total = None
-    for i in range(1, num_perm + 1):
-        term = (F.element_at(sig_a, i) == F.element_at(sig_b, i)).cast("int")
-        total = term if total is None else total + term
-    return total / F.lit(float(num_perm))
+    a, b = column_sql(sig_a), column_sql(sig_b)
+    terms = " + ".join(
+        f"cast(element_at({a}, {i}) = element_at({b}, {i}) as int)"
+        for i in range(1, num_perm + 1)
+    )
+    return F.expr(f"({terms}) / {float(num_perm)}D")
 
 
 def cascade_join(
@@ -174,7 +181,7 @@ def cascade_join(
     return (
         pairs.join(_one("left_id", "_lsig", 1), "left_id")
         .join(_one("right_id", "_rsig", 2), "right_id")
-        .withColumn("est_jaccard", estimate_jaccard(F.col("_lsig"), F.col("_rsig"), num_perm))
+        .withColumn("est_jaccard", estimate_jaccard("_lsig", "_rsig", num_perm))
         .filter(F.col("est_jaccard") >= floor)
         .drop("_lsig", "_rsig")
     )

@@ -6,6 +6,14 @@ over every document at 100 TB scale, so no Python is allowed in the path.
 Reference analogues: tokenizer toolkit
 (/root/reference/cogie/toolkit/tokenize/tokenize_toolkit.py:52-55) and the
 mention normalization in /root/reference/cogie/toolkit/el/el_toolkit.py:87-96.
+
+The expressions here are SQL text, which the JVM parses in one
+``F.expr`` call per column: the tag chain's folds and unrolled lists
+would otherwise cost one Py4J round-trip per expression node, thousands
+per plan, before the first job runs (functions/sqltext.py). Double literals carry the
+``D`` suffix (a bare ``1.0`` is DECIMAL and would change a ratio's type),
+and SQL lambdas name their variables ``x``/``y`` as PySpark names Python
+lambdas, so the printed plans keep their spelling.
 """
 
 from __future__ import annotations
@@ -13,7 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cogie_spark.functions.text import normalize_text, tokens
+from cogie_spark.functions.sqltext import column_sql, ident, string_lit
+from cogie_spark.functions.text import normalize_sql, normalize_text, tokens, tokens_sql
 
 # tiny per-language function-word lists (public knowledge); the n-gram
 # heuristic only needs the head of the Zipf curve
@@ -40,11 +49,11 @@ def bpe_token_count(text: Column | str) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), 0))
 
 
-def stopword_hits(text: Column | str, lang: str) -> Column:
-    """Number of tokens that are function words of ``lang``."""
-    toks = tokens(text)
-    words = STOPWORDS[lang]
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
+def stopword_hits(toks: str, lang: str) -> str:
+    """SQL text: how many elements of the token array ``toks`` (SQL
+    text) are function words of ``lang``."""
+    words = ", ".join(map(string_lit, STOPWORDS[lang]))
+    return f"size(filter({toks}, x -> x IN ({words})))"
 
 
 def lang_id(text: Column | str) -> Column:
@@ -52,20 +61,21 @@ def lang_id(text: Column | str) -> Column:
     'und' (undetermined) when no list scores > 0.
 
     Expressed as a greatest-of-structs trick so it stays in codegen:
-    max over array<struct<hits,negidx>> picks highest hits (ties -> first
-    language in list order).
+    max over array<struct<hits,prio,lang>> picks highest hits (ties ->
+    first language in list order).
     """
-    langs = list(STOPWORDS)
-    entries = [
-        F.struct(
-            stopword_hits(text, lg).alias("hits"),
-            F.lit(len(langs) - i).alias("prio"),
-            F.lit(lg).alias("lang"),
-        )
-        for i, lg in enumerate(langs)
-    ]
-    best = F.array_max(F.array(*entries))
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
+    toks = tokens_sql(column_sql(text))
+    n = len(STOPWORDS)
+    entries = ", ".join(
+        f"struct({stopword_hits(toks, lg)} AS hits, {n - i} AS prio, {string_lit(lg)} AS lang)"
+        for i, lg in enumerate(STOPWORDS)
+    )
+    best = f"array_max(array({entries}))"
+    return F.expr(f"CASE WHEN {best}.hits > 0 THEN {best}.lang ELSE 'und' END")
+
+
+def _ratio(num: str, den: str) -> str:
+    return f"round({num} / greatest({den}, 1), 6)"
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -76,107 +86,97 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     a bounded [0,1] blend — the deterministic stand-in for a learned
     quality classifier.
     """
-    t = F.col(text_col)
-    norm = normalize_text(t)
-    toks = tokens(text_col)
-    n_chars = F.length(norm)
-    n_toks = F.size(toks)
-    punct = F.length(F.regexp_replace(norm, r"[a-z0-9\s]", ""))
-    digit = F.length(F.regexp_replace(norm, r"[^0-9]", ""))
-    upper = F.length(F.regexp_replace(t, r"[^A-Z]", ""))
-    sw = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS["en"])))
-    out = (
-        df.withColumn("n_chars", n_chars)
-        .withColumn("n_tokens", n_toks)
-        .withColumn("mean_token_len", F.round(n_chars / F.greatest(n_toks, F.lit(1)), 6))
-        .withColumn("punct_ratio", F.round(punct / F.greatest(n_chars, F.lit(1)), 6))
-        .withColumn("digit_ratio", F.round(digit / F.greatest(n_chars, F.lit(1)), 6))
-        .withColumn("upper_ratio", F.round(upper / F.greatest(F.length(t), F.lit(1)), 6))
-        .withColumn("stopword_ratio", F.round(sw / F.greatest(n_toks, F.lit(1)), 6))
-    )
+    t = ident(text_col)
+    norm = normalize_sql(t)
+    n_chars = f"length({norm})"
+    n_toks = f"size({tokens_sql(t)})"
+    punct_re, digit_re, upper_re = map(string_lit, (r"[a-z0-9\s]", "[^0-9]", "[^A-Z]"))
+    punct = f"length(regexp_replace({norm}, {punct_re}, ''))"
+    digit = f"length(regexp_replace({norm}, {digit_re}, ''))"
+    upper = f"length(regexp_replace({t}, {upper_re}, ''))"
+    feats = {
+        "n_chars": n_chars,
+        "n_tokens": n_toks,
+        "mean_token_len": _ratio(n_chars, n_toks),
+        "punct_ratio": _ratio(punct, n_chars),
+        "digit_ratio": _ratio(digit, n_chars),
+        "upper_ratio": _ratio(upper, f"length({t})"),
+        "stopword_ratio": _ratio(stopword_hits(tokens_sql(t), "en"), n_toks),
+    }
     score = (
-        F.lit(1.0)
-        - F.least(F.col("punct_ratio") * 2, F.lit(0.5))
-        - F.least(F.col("digit_ratio"), F.lit(0.3))
-    ) * F.least(F.col("n_tokens") / F.lit(20.0), F.lit(1.0))
-    return out.withColumn("quality_score", F.round(score, 6))
+        "round((1.0D - least(`punct_ratio` * 2, 0.5D) - least(`digit_ratio`, 0.3D))"
+        " * least(`n_tokens` / 20.0D, 1.0D), 6)"
+    )
+    return df.withColumns({c: F.expr(e) for c, e in feats.items()}).withColumn(
+        "quality_score", F.expr(score)
+    )
 
 
-def _neighbor_dup_flags(srt: Column) -> Column:
-    """Per-position 'value occurs more than once' flags over a SORTED
-    array: element i is a duplicate occurrence iff it equals the
-    previous or next element. Built exclusively from whole-array ops —
-    every reference to the array sits in an ARGUMENT position (shifted
-    slices zipped positionally), never inside a lambda body, so the
-    flags stay O(n) per row even after an optimizer rule (filter
-    pushdown substituting a ``keep`` predicate, CollapseProject) inlines
-    this expression somewhere the old index-probe form (``F.get(srt, i)``
-    in a transform body) degraded to per-element re-evaluation of the
-    whole sort subtree — O(n^2 log n), the observed 330 ms/doc hang when
-    clean_corpus filtered on these columns."""
-    n = F.size(srt)
-    tail = F.greatest(n - F.lit(1), F.lit(0))
-    null1 = F.array(F.lit(None).cast("string"))
-    prev = F.concat(null1, F.slice(srt, 1, tail))
-    nxt = F.concat(F.slice(srt, 2, tail), null1)
-    flags = F.transform(
-        F.arrays_zip(srt.alias("c"), prev.alias("p"), nxt.alias("x")),
-        lambda s: F.coalesce(s["c"] == s["p"], F.lit(False))
-        | F.coalesce(s["c"] == s["x"], F.lit(False)),
+def _neighbor_dup_flags(srt: str) -> str:
+    """SQL text: per-position 'value occurs more than once' flags over
+    the SORTED array column named ``srt``: element i is a duplicate
+    occurrence iff it equals the previous or next element. Built
+    exclusively from whole-array ops — every reference to the array
+    sits in an ARGUMENT position (shifted slices zipped positionally),
+    never inside a lambda body, so the flags stay O(n) per row even
+    after an optimizer rule (filter pushdown substituting a ``keep``
+    predicate, CollapseProject) inlines this expression somewhere the
+    old index-probe form (``get(srt, i)`` in a transform body) degraded
+    to per-element re-evaluation of the whole sort subtree —
+    O(n^2 log n), the observed 330 ms/doc hang when clean_corpus
+    filtered on these columns.
+
+    SQL cannot alias an ``arrays_zip`` argument: the zipped fields are
+    named after the column (``srt``) and by position (``1``, ``2``)."""
+    s = ident(srt)
+    n = f"size({s})"
+    tail = f"greatest({n} - 1, 0)"
+    null1 = "array(cast(NULL as string))"
+    prev = f"concat({null1}, slice({s}, 1, {tail}))"
+    nxt = f"concat(slice({s}, 2, {tail}), {null1})"
+    flags = (
+        f"transform(arrays_zip({s}, {prev}, {nxt}), "
+        f"x -> coalesce(x.{s} = x.`1`, false) OR coalesce(x.{s} = x.`2`, false))"
     )
     # n == 0: the padded prev/next are [null] and would zip to one
     # spurious position
-    return F.when(n == F.lit(0), F.array().cast("array<boolean>")).otherwise(flags)
+    return f"CASE WHEN {n} = 0 THEN cast(array() as array<boolean>) ELSE {flags} END"
 
 
-def _top_run(srt: Column) -> Column:
-    """struct(cnt, len) of the most frequent element of a SORTED array
-    (ties -> longer element, matching array_max over struct(cnt, len))
-    via ONE O(n) aggregate fold. The fold body references only the
-    accumulator and the element, so it is inline-safe like
-    :func:`_neighbor_dup_flags` — and it replaces the run-boundary
-    index arithmetic (starts/ends slices probing ``srt`` inside lambda
-    bodies) that was not."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).cast("long").alias("cnt"),
-        F.lit(0).cast("long").alias("best_cnt"),
-        F.lit(0).cast("long").alias("best_len"),
+def _top_run(srt: str) -> str:
+    """SQL text: struct(cnt, len) of the most frequent element of the
+    SORTED array column named ``srt`` (ties -> longer element, matching
+    array_max over struct(cnt, len)) via ONE O(n) aggregate fold. The
+    fold body references only the accumulator ``x`` and the element
+    ``y``, so it is inline-safe like :func:`_neighbor_dup_flags` — and
+    it replaces the run-boundary index arithmetic (starts/ends slices
+    probing ``srt`` inside lambda bodies) that was not."""
+    zero, one = "cast(0 as bigint)", "cast(1 as bigint)"
+    init = (
+        f"struct(cast(NULL as string) AS prev, {zero} AS cnt, {zero} AS best_cnt, "
+        f"{zero} AS best_len)"
     )
-
-    def _close(acc):
-        # fold the just-finished run (acc.prev x acc.cnt) into the best
-        clen = F.coalesce(F.length(acc["prev"]).cast("long"), F.lit(0).cast("long"))
-        better = acc["prev"].isNotNull() & (
-            (acc["cnt"] > acc["best_cnt"])
-            | ((acc["cnt"] == acc["best_cnt"]) & (clen > acc["best_len"]))
-        )
-        return (
-            F.when(better, acc["cnt"]).otherwise(acc["best_cnt"]),
-            F.when(better, clen).otherwise(acc["best_len"]),
-        )
-
-    def _merge(acc, x):
-        same = acc["prev"].eqNullSafe(x)
-        bc, bl = _close(acc)
-        return F.struct(
-            x.alias("prev"),
-            F.when(same, acc["cnt"] + F.lit(1).cast("long"))
-            .otherwise(F.lit(1).cast("long"))
-            .alias("cnt"),
-            F.when(same, acc["best_cnt"]).otherwise(bc).alias("best_cnt"),
-            F.when(same, acc["best_len"]).otherwise(bl).alias("best_len"),
-        )
-
-    def _finish(acc):
-        bc, bl = _close(acc)
-        return F.struct(bc.alias("cnt"), bl.alias("len"))
-
-    return F.aggregate(srt, init, _merge, _finish)
+    # fold the just-finished run (x.prev repeated x.cnt times) into the best
+    clen = f"coalesce(cast(length(x.prev) as bigint), {zero})"
+    better = (
+        f"(x.prev IS NOT NULL AND (x.cnt > x.best_cnt OR "
+        f"(x.cnt = x.best_cnt AND {clen} > x.best_len)))"
+    )
+    best_cnt = f"CASE WHEN {better} THEN x.cnt ELSE x.best_cnt END"
+    best_len = f"CASE WHEN {better} THEN {clen} ELSE x.best_len END"
+    same = "x.prev <=> y"
+    merge = (
+        f"(x, y) -> struct(y AS prev, "
+        f"CASE WHEN {same} THEN x.cnt + {one} ELSE {one} END AS cnt, "
+        f"CASE WHEN {same} THEN x.best_cnt ELSE {best_cnt} END AS best_cnt, "
+        f"CASE WHEN {same} THEN x.best_len ELSE {best_len} END AS best_len)"
+    )
+    finish = f"x -> struct({best_cnt} AS cnt, {best_len} AS len)"
+    return f"aggregate({ident(srt)}, {init}, {merge}, {finish})"
 
 
-def _arr_sum(arr: Column) -> Column:
-    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, x: acc + x.cast("long"))
+def _arr_sum(arr: str) -> str:
+    return f"aggregate({arr}, cast(0 as bigint), (x, y) -> x + cast(y as bigint))"
 
 
 def repetition_features(
@@ -219,49 +219,51 @@ def repetition_features(
     shifted-slice zips and the top-run scan is an aggregate fold, both
     of which keep every array reference in argument position; the
     staged columns remain as a constant-factor economy only.
+
+    Each output column is SQL text, added with one ``withColumns`` per
+    dependency level; the staged word n-gram arrays reuse
+    ``word_ngrams``.
     """
     from cogie_spark.functions.text import word_ngrams
 
-    text = F.col(text_col)
-    lines = F.filter(
-        F.transform(F.split(text, "\n"), lambda s: F.trim(s)), lambda s: s != ""
+    t = ident(text_col)
+    ns = sorted(set(top_ngram_ns) | set(dup_ngram_ns))
+    lines = f"filter(transform(split({t}, '\\n'), x -> trim(x)), x -> x != '')"
+    out = df.withColumn("_rl_lsrt", F.expr(f"array_sort({lines})")).withColumn(
+        "_rl_lflags", F.expr(_neighbor_dup_flags("_rl_lsrt"))
     )
-    out = df.withColumn("_rl_lsrt", F.array_sort(lines))
-    lsrt = F.col("_rl_lsrt")
-    nl = F.size(lsrt)
-    out = out.withColumn("_rl_lflags", _neighbor_dup_flags(lsrt))
-    lflags = F.col("_rl_lflags")
-    dup_lines = _arr_sum(F.transform(lflags, lambda b: b.cast("int")))
+    lsrt, lflags = ident("_rl_lsrt"), ident("_rl_lflags")
+    dup_lines = _arr_sum(f"transform({lflags}, x -> cast(x as int))")
     dup_line_chars = _arr_sum(
-        F.zip_with(lsrt, lflags, lambda l, b: F.when(b, F.length(l)).otherwise(F.lit(0)))
+        f"zip_with({lsrt}, {lflags}, (x, y) -> CASE WHEN y THEN length(x) ELSE 0 END)"
     )
-    all_line_chars = _arr_sum(F.transform(lsrt, F.length))
+    all_line_chars = _arr_sum(f"transform({lsrt}, x -> length(x))")
+    n_chars = f"cast(greatest(length({normalize_sql(t)}), 1) as bigint)"
+
     # NULL text: every fraction is 0.0 (a missing document is not a
     # repetitive one) — without the guard the NULL propagates into
     # least(NULL, 1.0), which SKIPS the NULL operand and silently
     # coerces the answer to the 1.0 cap (code-review r5 finding)
-    _nz = lambda c: F.when(text.isNull(), F.lit(0.0)).otherwise(c)  # noqa: E731
-    out = out.withColumn(
-        "dup_line_frac",
-        _nz(F.round(dup_lines / F.greatest(nl.cast("long"), F.lit(1)), 6)),
-    ).withColumn(
-        "dup_line_char_frac",
-        _nz(F.round(dup_line_chars / F.greatest(all_line_chars, F.lit(1)), 6)),
-    )
+    def nz(e: str) -> str:
+        return f"CASE WHEN {t} IS NULL THEN 0.0D ELSE {e} END"
 
-    n_chars = F.greatest(F.length(normalize_text(text)), F.lit(1)).cast("long")
-    temps = ["_rl_lsrt", "_rl_lflags"]
-
-    for n in sorted(set(top_ngram_ns) | set(dup_ngram_ns)):
-        scol = f"_rl_srt_{n}"
-        temps += [scol]
-        out = out.withColumn(scol, F.array_sort(word_ngrams(text, n=n, distinct=False)))
-        srt = F.col(scol)
+    # the n-gram arrays are staged beside the line fractions, not beside
+    # the line array: the plan then keeps its projection layering
+    out = out.withColumns({
+        "dup_line_frac": F.expr(nz(_ratio(dup_lines, f"cast(size({lsrt}) as bigint)"))),
+        "dup_line_char_frac": F.expr(nz(_ratio(dup_line_chars, all_line_chars))),
+        **{
+            f"_rl_srt_{n}": F.array_sort(word_ngrams(text_col, n=n, distinct=False))
+            for n in ns
+        },
+    })
+    feats = {}
+    for n in ns:
+        srt = f"_rl_srt_{n}"
         if n in top_ngram_ns:
             top = _top_run(srt)
-            out = out.withColumn(
-                f"top_{n}gram_char_frac",
-                _nz(F.round(F.least((top["cnt"] * top["len"]) / n_chars, F.lit(1.0)), 6)),
+            feats[f"top_{n}gram_char_frac"] = nz(
+                f"round(least(({top}.cnt * {top}.len) / {n_chars}, 1.0D), 6)"
             )
         if n in dup_ngram_ns:
             # chars of elements inside duplicated runs == sum over dup
@@ -269,19 +271,14 @@ def repetition_features(
             # contributes len once) — the documented per-gram
             # overlapping-occurrence upper bound, run-arithmetic-free
             dup_chars = _arr_sum(
-                F.zip_with(
-                    srt,
-                    _neighbor_dup_flags(srt),
-                    lambda x, b: F.when(b, F.length(x).cast("long")).otherwise(
-                        F.lit(0).cast("long")
-                    ),
-                )
+                f"zip_with({ident(srt)}, {_neighbor_dup_flags(srt)}, (x, y) -> "
+                "CASE WHEN y THEN cast(length(x) as bigint) ELSE cast(0 as bigint) END)"
             )
-            out = out.withColumn(
-                f"dup_{n}gram_char_frac",
-                _nz(F.round(F.least(dup_chars / n_chars, F.lit(1.0)), 6)),
+            feats[f"dup_{n}gram_char_frac"] = nz(
+                f"round(least({dup_chars} / {n_chars}, 1.0D), 6)"
             )
-    return out.drop(*temps)
+    out = out.withColumns({c: F.expr(e) for c, e in feats.items()})
+    return out.drop("_rl_lsrt", "_rl_lflags", *(f"_rl_srt_{n}" for n in ns))
 
 
 def fingerprint(text: Column | str) -> Column:

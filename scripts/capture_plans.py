@@ -14,11 +14,13 @@ explained WITHOUT running the pipeline's eager actions where possible).
 ``plan_id=N`` numbers (they count the plans the session built before).
 Per plan it prints ``identical`` (byte-identical after that mask),
 ``identical up to ids`` (equal once every ``#N`` expression id is
-renumbered in order of first appearance and every ``RDD[N]`` id is
-masked: both come from JVM-wide counters, so a plan built after a
-changed one, or beside the flagship's IDF driver thread, is renumbered
-without changing), or ``different``/``missing``. It exits non-zero on
-any ``different`` or ``missing`` plan.
+renumbered in order of first appearance, every ``RDD[N]`` id is masked
+and the ``_N`` counter PySpark appends to lambda variable names is
+dropped, ``lambda x_54#`` -> ``lambda x#``: all three come from
+process-wide counters, so a plan built after a changed one, beside the
+flagship's IDF driver thread, or after fewer Python lambdas were built,
+is renumbered without changing), or ``different``/``missing``. It exits
+non-zero on any ``different`` or ``missing`` plan.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ import sys
 _PLAN_ID = re.compile(r"plan_id=\d+")
 _EXPR_ID = re.compile(r"#\d+")
 _RDD_ID = re.compile(r"RDD\[\d+\]")
+_LAMBDA_ID = re.compile(r"(lambda \w+?)_\d+#")
 
 
 def _fmt(df) -> str:
@@ -47,7 +50,7 @@ def _masked(path: str) -> str | None:
 
 def _renumbered(plan: str) -> str:
     ids: dict[str, str] = {}
-    plan = _RDD_ID.sub("RDD[N]", plan)
+    plan = _LAMBDA_ID.sub(r"\1#", _RDD_ID.sub("RDD[N]", plan))
     return _EXPR_ID.sub(lambda m: ids.setdefault(m.group(), f"#{len(ids)}"), plan)
 
 

@@ -173,12 +173,12 @@ def test_cascade_sig_bits_clusters_identical(spark):
 
 
 def _signature_inputs(df) -> list[str]:
-    """The input subtree of every signature aggregate (the one naming
-    ``_m0``) in ``df``'s analyzed plan."""
+    """The input subtree of every signature aggregate (the one whose
+    output is ``sig``) in ``df``'s analyzed plan."""
     found, todo = [], [df._jdf.queryExecution().analyzed()]
     while todo:
         node = todo.pop()
-        if node.nodeName() == "Aggregate" and " AS _m0#" in node.simpleString(8):
+        if node.nodeName() == "Aggregate" and " AS sig#" in node.simpleString(8):
             found.append(node.child().treeString())
         kids = node.children()
         todo.extend(kids.apply(i) for i in range(kids.size()))
