@@ -164,12 +164,14 @@ def cascade_join(
     a per-id ``side`` table (``id_col``, ``sig``, optional payload) and
     keep the pairs whose agreement estimate reaches ``floor``.
 
-    The side table is the caller's: run_linkage and the link stream pass
-    the b-bit signature plus the feature window (``payload=("_feat",
-    "_lf", "_rf")`` names the column and its left/right aliases),
-    minhash_near_duplicates its full-width signature table. ``sig`` is
-    read over its first ``num_perm`` components. Adds ``est_jaccard``
-    and the payload aliases; the pair table is joined once per side.
+    The side table is the caller's, and so is the scorer that reads the
+    payload: run_linkage and the link stream pass the b-bit signature
+    plus the feature window (``payload=("_feat", "_lf", "_rf")`` names
+    the column and its left/right aliases), the near-dup pairs step its
+    full-width signature plus each doc's shingle set (``("_sh", "_lg",
+    "_rg")``). ``sig`` is read over its first ``num_perm`` components.
+    Adds ``est_jaccard`` and the payload aliases; the pair table is
+    joined once per side.
     """
 
     def _one(side_name: str, sig_alias: str, pay_alias: int) -> DataFrame:

@@ -726,7 +726,7 @@ def q32(spark, sf_dir):
     (The testdata has planted near-dup documents — the clones union
     adds known jaccard-1.0 pairs on top.)"""
     # the near-dup operator reads its input twice (signature pass +
-    # exact-verify semi-join) — persist the scan+union once
+    # the cascade's shingle-set side table) — persist the scan+union once
     docs = _docs_with_clones(spark, sf_dir).persist()
     # the query contract returns a lazy frame, so nothing here can
     # release the operator's caches (or docs): they live until the

@@ -147,11 +147,11 @@ def incremental_clean_batch(
                 )
                 old_txt = spark.read.parquet(*log.paths("kept"))
                 dropped_new = jaccard_verify_pairs(
-                    cross, kept, idc, text, threshold=jaccard_threshold, right_docs=old_txt
+                    cross, kept, old_txt, idc, text, threshold=jaccard_threshold
                 ).select(F.col("left_id").alias(idc)).distinct()
                 # the survivors feed the pairs step (signatures semi-join,
-                # both cascade sides, the verify), the prune and the
-                # commit: cached, the cross-batch verify runs once
+                # the cascade side table), the prune and the commit:
+                # cached, the cross-batch verify runs once
                 kept = scope.persist(kept.join(dropped_new, idc, "left_anti"))
                 sigs = sigs.join(kept.select(idc), idc, "left_semi")
             # within-batch: near_dup_prune's own steps over the survivors

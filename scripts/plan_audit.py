@@ -19,6 +19,9 @@ scale-relevant plan features, and writes PLANS.md:
 - parquet pushdown         — scans should carry PushedFilters and a
                              pruned ReadSchema.
 
+``cached_tables(df)`` lists the caches an executed plan reads (each is
+a persist some caller releases).
+
 Usage:
     python scripts/plan_audit.py [--out PLANS.md] [--sf-dir DIR]
 
@@ -50,8 +53,8 @@ ROWWISE_NODE = "BatchEvalPython"
 # headline queries whose full formatted plan is embedded in PLANS.md
 HEADLINE_FULL = (
     "q01_pricing_summary",
-    "q32_minhash_neardup",
-    "q24_ann_cosine_topk",
+    "q32_minhash_near_dup",
+    "q24_ann_topk",
 )
 
 
@@ -61,6 +64,32 @@ def explain_formatted(df) -> str:
     qe = df._jdf.queryExecution()
     jvm = df.sparkSession._jvm
     return jvm.PythonSQLUtils.explainString(qe, "formatted")
+
+
+def cached_tables(df) -> set[int]:
+    """Ids of the cached RDDs behind every InMemoryRelation ``df``'s
+    executed plan reads, caches read inside other caches' plans
+    included. A plan string cannot tell caches apart: each reference
+    re-numbers a relation's columns, and two caches can share column
+    names. Call it after an action, when the adaptive plan is final."""
+    ids: set[int] = set()
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "InMemoryTableScanExec":
+            rel = node.relation()
+            rdd = rel.cacheBuilder().cachedColumnBuffers().id()
+            if rdd not in ids:
+                ids.add(rdd)
+                stack.append(rel.cachedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return ids
 
 
 def audit_plan(plan: str) -> dict:

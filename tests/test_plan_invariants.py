@@ -30,7 +30,7 @@ _SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 if _SCRIPTS not in sys.path:
     sys.path.insert(0, _SCRIPTS)
 
-from plan_audit import audit_plan, explain_formatted  # noqa: E402
+from plan_audit import audit_plan, cached_tables, explain_formatted  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 
@@ -109,3 +109,28 @@ def test_flagship_scored_plan_budget(spark):
         f"scored plan now has {a['shuffle_exchanges']} shuffles — "
         "a new repartition entered the flagship hot path"
     )
+
+
+@needs_testdata
+def test_q32_verify_fused_into_cascade(spark):
+    """q32 scores the exact Jaccard in the cascade's own query: after
+    collect, the plan reads three caches only — the input scan, the
+    signatures and the block table, none of the cascade output — and
+    its final plan builds the shingle sets in the cascade's side table
+    (``arrays_zip`` x2, one per side) and intersects them once. The
+    counts read the top-level final plan only: the initial plan and
+    every cached subplan are printed again beside it."""
+    from cogie_spark.queries import QUERIES
+
+    df = QUERIES["q32_minhash_near_dup"](spark, SF_DIR)
+    try:
+        df.collect()
+        cached = cached_tables(df)
+        final = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.catalog.clearCache()
+    assert len(cached) == 3, cached
+    top = final.split("\n+- == Initial Plan ==")[0]
+    assert "isFinalPlan=true" in top
+    assert top.count("arrays_zip(") == 2, top
+    assert top.count("array_intersect(") == 1, top

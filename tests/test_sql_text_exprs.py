@@ -83,11 +83,28 @@ def test_wide_exprs_do_not_scale_with_width(spark):
 def test_clean_corpus_build_round_trips(spark):
     """Building both clean_corpus views over a two-column frame takes
     1,290 round-trips here (the Column-API tag chain took 7,208); the
-    ceiling is twice that."""
+    ceiling is twice that. Each view is built on first access, so the
+    count reads both."""
     from cogie_spark.plans.corpus import clean_corpus
 
+    def _both():
+        views = clean_corpus(docs)
+        return views["tagged"], views["kept"]
+
     docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
-    assert _count(spark, lambda: clean_corpus(docs)) <= 2 * 1290
+    assert _count(spark, _both) <= 2 * 1290
+
+
+def test_clean_corpus_kept_builds_only_kept(spark):
+    """A caller that reads only ``kept`` pays for kept_from_docs alone
+    (702 round-trips here): the tag chain of ``tagged`` (586 more) is
+    not built until something reads it."""
+    from cogie_spark.plans.corpus import clean_corpus, kept_from_docs
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string")
+    assert _count(spark, lambda: clean_corpus(docs)["kept"]) <= _count(
+        spark, lambda: kept_from_docs(docs)
+    )
 
 
 def test_estimate_jaccard_type_and_value(spark):
