@@ -325,10 +325,12 @@ def candidate_pairs(
     # (session.py raises the ObjectHashAggregate sort-fallback
     # threshold so it STAYS hash-based), partially combines map-side,
     # and the generate emits exactly s(s-1)/2 rows per bucket instead
-    # of the join's s^2-then-filter. Array sizes are HARD BOUNDED
-    # before this point: buckets are <= ~max_block_size by the salting
-    # tier above (pathological blocks were dropped), so no collect_list
-    # buffer can blow up on a boilerplate mega-block.
+    # of the join's s^2-then-filter. Array sizes are bounded only IN
+    # EXPECTATION: the salt pmod(xxhash64(id, band_hash), n_salt) spreads
+    # a hot block over n_salt buckets of ~max_block_size members on
+    # average, but no bucket's size is capped (pathological blocks were
+    # dropped above). Enforcing the observed maximum bucket is ROADMAP
+    # item 1.
     grouped = salted.groupBy(*key, "salt").agg(
         F.sort_array(F.collect_list(F.col(id_col))).alias("_ids")
     )

@@ -117,15 +117,12 @@ def score_features(
       upstream partitioning already feeds every core — skipping the
       shuffle of the pipeline's biggest relation was A/B-measured a
       net win at bench scale.
-    - ``n > 0``: repartition to exactly ``n``.
     """
     w_jw, w_ts, w_tf = weights
     tf_cos = tfidf_cosine_udf(idf)
     if partitions is None:
         cores = joined.sparkSession.sparkContext.defaultParallelism
         joined = joined.repartition(max(cores * 2, 8))
-    elif partitions > 0:
-        joined = joined.repartition(partitions)
     return (
         joined
         .withColumn(

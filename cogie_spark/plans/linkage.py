@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from concurrent.futures import Future
 from dataclasses import dataclass
+from typing import ClassVar
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -39,45 +40,50 @@ from cogie_spark.operators.scoring import corpus_idf, match_edges, score_feature
 
 @dataclass
 class LinkageConfig:
+    """The settings a caller chooses (the dataclass fields) beside the
+    constants every run shares (the ``ClassVar`` attributes, read the
+    same way: ``cfg.num_perm``). A constant is fixed here, not passed:
+    ``LinkageConfig(num_perm=32)`` is a TypeError."""
+
     id_col: str = "file_id"
-    content_col: str = "content"
-    key_cols: tuple[str, ...] = ("lang",)
+    content_col: ClassVar[str] = "content"
+    key_cols: ClassVar[tuple[str, ...]] = ("lang",)
     # 16 bands x 4 rows: P(collide) = 1-(1-s^4)^16 — 0.999 at s=0.8,
     # 0.05 at s=0.4 — steep enough that homogeneous corpora (shared
     # boilerplate vocabulary) don't explode the candidate-pair count
-    num_perm: int = 64
+    num_perm: ClassVar[int] = 64
     bands: int = 16
-    shingle_k: int = 8
+    # char-shingle width of the 'portable' family; 'fast' ignores it
+    shingle_k: ClassVar[int] = 8
     max_block_size: int = 64
-    feature_chars: int = 1024
+    feature_chars: ClassVar[int] = 1024
     # Jaro-Winkler window: the JW match loop is O(jw_chars^2) per pair
     # in the pandas UDF — 128 chars halves r1's 256 default for ~4x less
     # scorer work; the fixture F1 and DuckDB q34 parity are unaffected
     # (q34 scores short titles, not this window)
-    jw_chars: int = 128
+    jw_chars: ClassVar[int] = 128
     # token-set Levenshtein window: the JVM DP is O(ts_chars^2) per pair
     # — bounded like jw_chars (the reference's 160-token pair width);
     # 256 measured 3x cheaper than 512 with fixture F1 still 1.0
-    ts_chars: int = 256
+    ts_chars: ClassVar[int] = 256
     threshold: float = 0.72
-    # 'fast' = word-3gram + xxhash64 single-pass signatures (pipeline);
-    # 'portable' = char-shingle md5 family (oracle-checkable)
-    signature_mode: str = "fast"
+    # word-3gram + xxhash64 single-pass signatures; the char-shingle md5
+    # 'portable' family is for the oracle-checked queries
+    signature_mode: ClassVar[str] = "fast"
     # cheap JVM-side cascade filter: drop pairs whose MinHash-agreement
     # Jaccard estimate is below this before the pandas-UDF scorers
     prefilter_est_jaccard: float = 0.45
     # bits of each MinHash component carried INTO THE PAIR TABLE for
-    # the cascade (8 = low byte via tinyint cast, 64 = full values).
-    # The pair table is the biggest relation at scale and ships one
-    # signature per side only for the est-Jaccard filter; b-bit
-    # compression cuts those bytes 8x and is RECALL-SAFE by
-    # construction: the cast preserves equality, distinct components
-    # can only collide (p ~= 1/256), so est_8bit >= est_exact per pair
-    # and the floor keeps a superset of the exact-cascade pairs. Extra
-    # admitted pairs are rejected by the exact scorers downstream
-    # (clusters verified identical at 8 vs 64 on the fixtures).
-    cascade_sig_bits: int = 8
-    cc_max_iter: int = 20
+    # the cascade: the low byte via a tinyint cast. The pair table is
+    # the biggest relation at scale and ships one signature per side
+    # only for the est-Jaccard filter; b-bit compression cuts those
+    # bytes 8x and is RECALL-SAFE by construction: the cast preserves
+    # equality, distinct components can only collide (p ~= 1/256), so
+    # est_8bit >= est_exact per pair and the floor keeps a superset of
+    # the exact-cascade pairs. Extra admitted pairs are rejected by the
+    # exact scorers downstream.
+    cascade_sig_bits: ClassVar[int] = 8
+    cc_max_iter: ClassVar[int] = 20
     # convergence-check cadence for CC (operators/cc.py check_every):
     # 1 = fingerprint every round; >1 trades possible extra idempotent
     # rounds for fewer driver aggregation round-trips after round 3
@@ -85,15 +91,14 @@ class LinkageConfig:
     # CC small-graph fast path (operators/cc.py): at or below this many
     # distinct edges the components are solved by union-find in ONE
     # task (one job) instead of iterated star rounds — the broadcast-
-    # threshold principle applied to the match graph. 0 disables.
-    cc_local_max_edges: int = 2_000_000
+    # threshold principle applied to the match graph
+    cc_local_max_edges: ClassVar[int] = 2_000_000
     weights: tuple[float, float, float] = (0.2, 0.5, 0.3)
-    # cap on the IDF broadcast vocabulary (corpus_idf); 0 disables the
-    # tf-idf scorer's corpus weighting (plain TF cosine)
-    idf_max_terms: int = 100_000
+    # cap on the IDF broadcast vocabulary (corpus_idf)
+    idf_max_terms: ClassVar[int] = 100_000
     # content hash column for the exact prededup (sha2 of content_col
     # when absent)
-    sha_col: str = "sha256"
+    sha_col: ClassVar[str] = "sha256"
 
 
 def prededup(files: DataFrame, cfg: LinkageConfig, scope: RunScope) -> tuple[DataFrame, DataFrame]:
@@ -142,7 +147,7 @@ def signatures(rows: DataFrame, cfg: LinkageConfig) -> DataFrame:
     """(id, *key_cols, sig) under the config's MinHash family."""
     return signature_table(
         rows, id_col=cfg.id_col, content_col=cfg.content_col, key_cols=cfg.key_cols,
-        num_perm=cfg.num_perm, shingle_k=cfg.shingle_k, mode=cfg.signature_mode,
+        num_perm=cfg.num_perm, mode=cfg.signature_mode,
     )
 
 
@@ -202,11 +207,7 @@ def cascade_pairs(
     # components never need to reach the pair table — see LinkageConfig
     # low byte, shifted into tinyint range (ANSI-safe: a bare tinyint
     # cast of a 64-bit value throws CAST_OVERFLOW under Spark 4 ANSI)
-    cascade_sig = (
-        F.expr("transform(sig, x -> cast((x & 255) - 128 as tinyint))")
-        if cfg.cascade_sig_bits == 8
-        else F.col("sig")
-    ).alias("sig")
+    cascade_sig = F.expr("transform(sig, x -> cast((x & 255) - 128 as tinyint))").alias("sig")
     side = sigs.select(F.col(cfg.id_col).alias("_sid"), cascade_sig).join(
         files.select(
             F.col(cfg.id_col).alias("_sid"),
@@ -223,17 +224,14 @@ def cascade_pairs(
     )
 
 
-def idf_terms(rows: DataFrame, cfg: LinkageConfig) -> Future | None:
-    """Start ``corpus_idf`` over ``rows`` in a driver thread (None when
-    ``cfg.idf_max_terms`` is 0); ``score`` joins it. Branch overlap
-    (guide §2.6): started before the blocking precheck, its two bounded
-    actions (count + vocab top-k collect) run CONCURRENTLY with the
-    precheck's signature computation instead of serializing ~2 s of
-    wall after it. Concurrent first materialization of a shared cache
-    is safe: worst case both threads compute a partition and one cache
-    write wins."""
-    if not cfg.idf_max_terms:
-        return None
+def idf_terms(rows: DataFrame, cfg: LinkageConfig) -> Future:
+    """Start ``corpus_idf`` over ``rows`` in a driver thread; ``score``
+    joins it. Branch overlap (guide §2.6): started before the blocking
+    precheck, its two bounded actions (count + vocab top-k collect) run
+    CONCURRENTLY with the precheck's signature computation instead of
+    serializing ~2 s of wall after it. Concurrent first materialization
+    of a shared cache is safe: worst case both threads compute a
+    partition and one cache write wins."""
     from concurrent.futures import ThreadPoolExecutor
 
     pool = ThreadPoolExecutor(max_workers=1)
@@ -246,7 +244,7 @@ def score(
     pairs: DataFrame,
     cfg: LinkageConfig,
     scope: RunScope,
-    idf: Future | None,
+    idf: Future,
     partitions: int | None = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Score the cascade's pairs and threshold them: (scored, edges).
@@ -264,10 +262,8 @@ def score(
     extra action). The stream passes None (cores*2 spread): micro-batch
     pair tables are narrow, and AQE would coalesce them onto one core.
     """
-    terms = None
-    if idf is not None:
-        terms = pairs.sparkSession.sparkContext.broadcast(idf.result())
-        scope.append(terms)
+    terms = pairs.sparkSession.sparkContext.broadcast(idf.result())
+    scope.append(terms)
     scored = scope.keep("scored", score_features(
         pairs, jw_chars=cfg.jw_chars, ts_chars=cfg.ts_chars, weights=cfg.weights,
         idf=terms, partitions=partitions,

@@ -85,8 +85,6 @@ from cogie_spark.plans.linkage import (
 )
 
 _MANIFEST = "_state_manifest.json"
-# the state layout's columns; a config naming other columns is refused
-_LAYOUT = ("file_id", "content", ("lang",))
 
 
 def _fold_members(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
@@ -152,10 +150,11 @@ def incremental_link_batch(
 ) -> DataFrame:
     """Link one micro-batch against current state; returns assignments.
 
-    ``cfg`` (default ``LinkageConfig()``) sets every signature, cascade,
-    scoring and threshold parameter, as in ``run_linkage``. The state
-    stores bands under it, so one state directory takes one MinHash
-    family (num_perm, bands, signature_mode, shingle_k) for its life.
+    ``cfg`` (default ``LinkageConfig()``) sets the banding, cascade,
+    scoring and threshold parameters, as in ``run_linkage``. The state
+    stores bands under it, so one state directory takes one ``bands``
+    count for its life (the rest of the MinHash family is fixed on
+    LinkageConfig).
 
     New rows joining an existing cluster inherit its cluster_id; rows
     matching only each other form a new cluster keyed by their min
@@ -166,11 +165,9 @@ def incremental_link_batch(
     (/root/reference/cogie/toolkit/el/el_toolkit.py:131-143).
     """
     cfg = cfg or LinkageConfig()
-    if (cfg.id_col, cfg.content_col, cfg.key_cols) != _LAYOUT:
-        raise ValueError(
-            f"the linkage stream's state columns are fixed: (id_col, content_col, "
-            f"key_cols) must be {_LAYOUT}"
-        )
+    if cfg.id_col != "file_id":
+        # the state layout's columns are fixed (see the module docstring)
+        raise ValueError(f"the linkage stream keys its state on file_id, not {cfg.id_col!r}")
     spark = batch.sparkSession
     log = _state_log(state)
     if not log.paths("members") and any(

@@ -4,6 +4,9 @@ and connected components is exact on hand-built graphs."""
 
 from __future__ import annotations
 
+import dataclasses
+
+import pytest
 from pyspark.sql import functions as F
 
 from cogie_spark.fixtures.codefiles import code_files, labeled_pairs
@@ -157,19 +160,54 @@ def test_salted_hot_blocks(spark):
         assert pairs2.count() == 0
 
 
-def test_cascade_sig_bits_clusters_identical(spark):
-    """The 8-bit cascade signature (pair-table bytes / 8) must yield
-    byte-identical clusters to the full 64-bit form: the tinyint cast
-    preserves equality so est_8bit >= est_exact per pair — the cascade
-    floor keeps a superset, and the exact scorers decide the edges."""
+def test_cascade_8bit_estimate_never_below_full_width(spark):
+    """The cascade's 8-bit signature is recall-safe: the tinyint cast
+    preserves equality, so per candidate pair its agreement estimate is
+    never below the full 64-bit one — the floor keeps a superset of the
+    pairs a full-width cascade keeps, and the exact scorers decide the
+    edges."""
+    from cogie_spark.operators.blocking import estimate_jaccard, signature_table
+    from cogie_spark.plans.linkage import cascade_pairs, candidates, prededup
+
     files = code_files(spark, n_groups=40, seed=7)
-    got = {}
-    for bits in (8, 64):
-        with run_linkage(files, LinkageConfig(cascade_sig_bits=bits)) as out:
-            got[bits] = {
-                (r["file_id"], r["cluster_id"]) for r in out["clusters"].collect()
-            }
-    assert got[8] == got[64]
+    cfg = LinkageConfig()
+    with RunScope() as scope:
+        reps, _ = prededup(files, cfg, scope)
+        sigs = scope.persist(signature_table(
+            reps, id_col=cfg.id_col, key_cols=cfg.key_cols, num_perm=cfg.num_perm,
+            mode=cfg.signature_mode,
+        ))
+        _, pairs, _, _ = candidates(sigs, cfg, scope)
+        pairs = scope.persist(pairs.select("left_id", "right_id"))
+        # floor 0 keeps every candidate pair with its 8-bit estimate
+        est8 = cascade_pairs(
+            pairs, sigs, reps, LinkageConfig(prefilter_est_jaccard=0.0), release_into=scope
+        ).select("left_id", "right_id", F.col("est_jaccard").alias("est8"))
+        side = sigs.select(cfg.id_col, "sig")
+        full = (
+            pairs.join(side.toDF("left_id", "_ls"), "left_id")
+            .join(side.toDF("right_id", "_rs"), "right_id")
+            .select("left_id", "right_id",
+                    estimate_jaccard("_ls", "_rs", cfg.num_perm).alias("est64"))
+        )
+        rows = est8.join(full, ["left_id", "right_id"]).collect()
+        n_pairs = pairs.count()
+    assert n_pairs > 0 and len(rows) == n_pairs
+    assert all(r["est8"] >= r["est64"] for r in rows)
+    # the check is not vacuous: some pairs are not full-width identical
+    assert any(r["est64"] < 1.0 for r in rows)
+
+
+def test_linkage_config_fields_are_the_caller_set():
+    """LinkageConfig's fields are exactly the settings a caller sets;
+    everything else is a class constant that cannot be passed."""
+    assert [f.name for f in dataclasses.fields(LinkageConfig)] == [
+        "id_col", "bands", "max_block_size", "threshold", "prefilter_est_jaccard",
+        "cc_check_every", "weights",
+    ]
+    assert LinkageConfig().num_perm == 64
+    with pytest.raises(TypeError):
+        LinkageConfig(num_perm=32)
 
 
 def _signature_inputs(df) -> list[str]:

@@ -66,6 +66,18 @@ def test_incremental_two_batches(spark):
     files.unpersist()
 
 
+def test_stream_refuses_other_id_col(spark, tmp_path):
+    """The stream's state is keyed on file_id: a config naming another id
+    column is refused before anything runs or is written."""
+    from cogie_spark.plans.linkage import LinkageConfig
+
+    batch = spark.createDataFrame([("r1", "python", "x")], "rec_id string, lang string, content string")
+    state = TableIO(spark, str(tmp_path / "state"))
+    with pytest.raises(ValueError, match="file_id"):
+        incremental_link_batch(batch, state, cfg=LinkageConfig(id_col="rec_id"))
+    assert not os.path.exists(tmp_path / "state") or not os.listdir(tmp_path / "state")
+
+
 def test_state_bands_persisted_not_recomputed(spark):
     """VERDICT r2 #3: banding the accumulated state must come from the
     persisted band deltas — bands_from_signatures (which the stream
