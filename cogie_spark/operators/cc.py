@@ -24,8 +24,12 @@ skip-to-global-step resume (/root/reference/cogie/core/trainer.py:195-213).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -191,6 +195,8 @@ def connected_components(
     non-increasing, so fingerprints equal k rounds apart imply the
     fixed point was reached, and extra rounds are idempotent.
     """
+    from cogie_spark.jobdesc import job_desc
+
     cur = edges.select(
         F.least("left_id", "right_id").alias("dst"),
         F.greatest("left_id", "right_id").alias("src"),
@@ -206,8 +212,6 @@ def connected_components(
         # (blocking + pandas-UDF scoring) must never be re-executed. Only
         # in the non-resumed branch — a resumed job must NOT execute the
         # expensive upstream it is resuming past.
-        from cogie_spark.jobdesc import job_desc
-
         with job_desc(cur, "cogie:cc-seed"):
             cur = cur.localCheckpoint(eager=True)
 
@@ -221,15 +225,18 @@ def connected_components(
     # dicts for 64-char ids); past it, the iterative star rounds run
     # unchanged — that is the 100 TB path. Only when not resuming from
     # a CheckpointManager: the committed-iteration resume contract
-    # belongs to the iterative path.
+    # belongs to the iterative path. The path taken is logged, with the
+    # edge count when this count was taken.
     if checkpoint is None and local_max_edges:
-        from cogie_spark.jobdesc import job_desc as _jd
-
-        with _jd(cur, "cogie:cc-local-count"):
+        with job_desc(cur, "cogie:cc-local-count"):
             n_edges = cur.count()
         if n_edges <= local_max_edges:
+            _log.info("connected_components: one-task union-find over %d edges", n_edges)
             release_into.append(CheckpointHandle(cur))
             return _components_single_task(cur)
+        _log.info("connected_components: iterative star rounds over %d edges", n_edges)
+    else:
+        _log.info("connected_components: iterative star rounds (edges not counted)")
 
     # `owned` is the live localCheckpoint backing `cur` (None when cur
     # is parquet-backed: resumed, or after a CheckpointManager commit).
@@ -252,8 +259,6 @@ def connected_components(
     # than the one tiny fingerprint job the batching saves. The lazy-
     # checkpoint fold below already reduces each round to ONE job.
     prev_fp = None
-    from cogie_spark.jobdesc import job_desc
-
     try:
         for it in range(start_iter, max_iter):
             cur = _small_star(_large_star(cur))

@@ -33,10 +33,14 @@ def corpus_idf(
     files: DataFrame,
     content_col: str = "content",
     max_terms: int = 100_000,
+    n_docs: int | None = None,
 ) -> dict[str, float]:
-    """token -> log(N/df) over the corpus, capped at the ``max_terms``
-    most-frequent terms (the cap bounds the broadcast at 10^12-file
-    scale; tokens outside the cap default to weight 1.0 inside the UDF).
+    """token -> log(N/df) + 1 over the corpus for the ``max_terms`` most
+    frequent terms, in (df desc, token asc) order (the cap bounds the
+    broadcast; tokens outside it weigh 1.0 inside the UDF). ``n_docs``
+    is N when the caller has it (run_linkage: the blocking precheck's
+    ``n_block_rows // bands``); else one ``count()`` job takes it. The
+    vocabulary is one job, fetched as Arrow.
 
     This is the deterministic stand-in for the reference's precomputed
     candidate encodings (/root/reference/cogie/models/el/biencoder.py:
@@ -46,33 +50,34 @@ def corpus_idf(
 
     from cogie_spark.jobdesc import job_desc
 
-    with job_desc(files, "cogie:idf-ndocs"):
-        n_rows = files.count() or 1
+    if n_docs is None:
+        with job_desc(files, "cogie:idf-ndocs"):
+            n_docs = files.count()
+    n_docs = n_docs or 1
     # IDF is a corpus statistic — estimate it from a deterministic hash
     # sample once the corpus is large (identical idf distribution, ~10x
     # less explode/sort work and a bounded driver collect)
     target_sample = 30_000
     src = files
-    denom = n_rows
-    if n_rows > target_sample:
-        k = max(2, n_rows // target_sample)
+    denom = n_docs
+    if n_docs > target_sample:
+        k = max(2, n_docs // target_sample)
         src = files.filter(F.pmod(F.xxhash64(F.col(content_col)), F.lit(k)) == 0)
-        denom = max(n_rows // k, 1)
-    with job_desc(files, "cogie:idf-vocab"):
-        df_rows = _collect_idf_rows(src, content_col, max_terms)
-    return {r["t"]: math.log(denom / r["df"]) + 1.0 for r in df_rows}
-
-
-def _collect_idf_rows(src, content_col, max_terms):
-    return (
+        denom = max(n_docs // k, 1)
+    vocab = (
         src.select(F.explode(F.array_distinct(tokens(content_col))).alias("t"))
         .filter(F.col("t") != "")
         .groupBy("t")
         .agg(F.count("*").alias("df"))
         .orderBy(F.desc("df"), F.asc("t"))
         .limit(max_terms)
-        .collect()
     )
+    with job_desc(files, "cogie:idf-vocab"):
+        table = vocab.toArrow()
+    return {
+        t: math.log(denom / df) + 1.0
+        for t, df in zip(table.column("t").to_pylist(), table.column("df").to_pylist())
+    }
 
 
 def score_features(

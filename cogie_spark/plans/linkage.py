@@ -18,7 +18,6 @@ stage resumes from the last commit.
 
 from __future__ import annotations
 
-from concurrent.futures import Future
 from dataclasses import dataclass
 from typing import ClassVar
 
@@ -204,9 +203,10 @@ def cascade_pairs(
     on corpora where banding is much looser than the prefilter.
     """
     # b-bit cascade signature (cascade_sig_bits): the full 64-bit
-    # components never need to reach the pair table — see LinkageConfig
-    # low byte, shifted into tinyint range (ANSI-safe: a bare tinyint
-    # cast of a 64-bit value throws CAST_OVERFLOW under Spark 4 ANSI)
+    # components never need to reach the pair table — see LinkageConfig.
+    # Each component keeps its low byte, shifted into tinyint range
+    # (ANSI-safe: a bare tinyint cast of a 64-bit value throws
+    # CAST_OVERFLOW under Spark 4 ANSI).
     cascade_sig = F.expr("transform(sig, x -> cast((x & 255) - 128 as tinyint))").alias("sig")
     side = sigs.select(F.col(cfg.id_col).alias("_sid"), cascade_sig).join(
         files.select(
@@ -224,36 +224,19 @@ def cascade_pairs(
     )
 
 
-def idf_terms(rows: DataFrame, cfg: LinkageConfig) -> Future:
-    """Start ``corpus_idf`` over ``rows`` in a driver thread; ``score``
-    joins it. Branch overlap (guide §2.6): started before the blocking
-    precheck, its two bounded actions (count + vocab top-k collect) run
-    CONCURRENTLY with the precheck's signature computation instead of
-    serializing ~2 s of wall after it. Concurrent first materialization
-    of a shared cache is safe: worst case both threads compute a
-    partition and one cache write wins."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    future = pool.submit(corpus_idf, rows, content_col=cfg.content_col, max_terms=cfg.idf_max_terms)
-    pool.shutdown(wait=False)
-    return future
-
-
 def score(
     pairs: DataFrame,
     cfg: LinkageConfig,
     scope: RunScope,
-    idf: Future,
+    idf: dict[str, float],
     partitions: int | None = 0,
 ) -> tuple[DataFrame, DataFrame]:
     """Score the cascade's pairs and threshold them: (scored, edges).
 
-    ``idf`` (:func:`idf_terms`) is joined here — re-raising any failure
-    of its thread — and shipped as a Broadcast the scope releases,
-    fetched once per executor instead of re-shipped in every task
-    binary. ``scored`` goes through the scope's keep step, so edges,
-    CC seed and caller actions never re-run the scorers.
+    ``idf`` (``corpus_idf``'s dict) is shipped as a Broadcast the scope
+    releases, fetched once per executor instead of re-shipped in every
+    task binary. ``scored`` goes through the scope's keep step, so
+    edges, CC seed and caller actions never re-run the scorers.
 
     ``partitions`` is score_features'. The batch run scores in place
     (0): its pair table arrives through the cascade joins, whose
@@ -262,7 +245,7 @@ def score(
     extra action). The stream passes None (cores*2 spread): micro-batch
     pair tables are narrow, and AQE would coalesce them onto one core.
     """
-    terms = pairs.sparkSession.sparkContext.broadcast(idf.result())
+    terms = pairs.sparkSession.sparkContext.broadcast(idf)
     scope.append(terms)
     scored = scope.keep("scored", score_features(
         pairs, jw_chars=cfg.jw_chars, ts_chars=cfg.ts_chars, weights=cfg.weights,
@@ -342,8 +325,11 @@ def _link(
         if batch_sigs is None
         else batch_sigs.join(reps.select(cfg.id_col), cfg.id_col, "left_semi")
     )
-    idf = idf_terms(reps, cfg)
     blocks, pairs, dropped, stats = candidates(sigs, cfg, scope)
+    # every rep has one signature, so one row per band: the precheck
+    # already counted the reps
+    n_reps = stats["n_block_rows"] // cfg.bands
+    idf = corpus_idf(reps, cfg.content_col, cfg.idf_max_terms, n_docs=n_reps)
     # downstream stages (scoring, CC seed) and caller actions each
     # reference the pair table — never recompute the self-join
     pairs = scope.keep("pairs", cascade_pairs(pairs, sigs, reps, cfg, release_into=scope))

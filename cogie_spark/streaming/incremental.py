@@ -17,7 +17,9 @@ pipeline's own stages (plans/linkage.py):
   ``blocking.cross_band_pairs``) go through ``linkage.cascade_pairs``
   and ``linkage.score`` — run_linkage's cascade, feature attach,
   scorers and threshold — with a corpus IDF over the rows being linked
-  (run_linkage likewise takes IDF over the rows it links);
+  (run_linkage likewise takes IDF over the rows it links), built on
+  the calling thread; no blocking precheck counted these rows, so
+  ``corpus_idf`` counts them;
 - the rows no state cluster claims are clustered by run_linkage's own
   stage composition, handed the batch signatures of their
   representatives instead of computing them again.
@@ -74,12 +76,12 @@ from cogie_spark.io import fsio
 from cogie_spark.io.tableio import RunScope, StateLog, TableIO, union_parts
 from cogie_spark.operators.blocking import cross_band_pairs
 from cogie_spark.operators.cc import CheckpointHandle
+from cogie_spark.operators.scoring import corpus_idf
 from cogie_spark.plans.linkage import (
     LinkageConfig,
     _link,
     bands,
     cascade_pairs,
-    idf_terms,
     score,
     signatures,
 )
@@ -216,7 +218,8 @@ def incremental_link_batch(
                 .join(cand_ids, "file_id", "left_semi")
             )
             pairs = cascade_pairs(cand, rows, rows, cfg, release_into=scope)
-            _, edges = score(pairs, cfg, scope, idf_terms(rows, cfg), partitions=None)
+            idf = corpus_idf(rows, cfg.content_col, cfg.idf_max_terms)
+            _, edges = score(pairs, cfg, scope, idf, partitions=None)
             # checkpointed (one row per linked file): read by the
             # unassigned split AND the assignment union below, so the
             # pairs are scored once; and the intra-batch run below plans

@@ -17,10 +17,10 @@ Per plan it prints ``identical`` (byte-identical after that mask),
 renumbered in order of first appearance, every ``RDD[N]`` id is masked
 and the ``_N`` counter PySpark appends to lambda variable names is
 dropped, ``lambda x_54#`` -> ``lambda x#``: all three come from
-process-wide counters, so a plan built after a changed one, beside the
-flagship's IDF driver thread, or after fewer Python lambdas were built,
-is renumbered without changing), or ``different``/``missing``. It exits
-non-zero on any ``different`` or ``missing`` plan.
+process-wide counters, so a plan built after a changed one, or after
+fewer Python lambdas were built, is renumbered without changing), or
+``different``/``missing``. It exits non-zero on any ``different`` or
+``missing`` plan.
 """
 
 from __future__ import annotations

@@ -434,6 +434,31 @@ def test_cc_local_fast_path_equivalent(spark):
         h.unpersist()
 
 
+def test_cc_logs_which_path_ran(spark, caplog):
+    """connected_components logs the path it took and the edge count its
+    existing count() gave: one-task union-find at or under
+    local_max_edges, iterative star rounds above it; with
+    local_max_edges=0 no count is taken and the log says so."""
+    import logging
+
+    from cogie_spark.operators.cc import connected_components
+
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y")], "left_id string, right_id string"
+    )
+    caplog.set_level(logging.INFO, logger="cogie_spark.operators.cc")
+    released: list = []
+    for limit in (1, 3, 0):
+        connected_components(df, local_max_edges=limit, release_into=released).collect()
+    for h in released:
+        h.unpersist()
+    assert [r.getMessage() for r in caplog.records if r.name == "cogie_spark.operators.cc"] == [
+        "connected_components: iterative star rounds over 3 edges",
+        "connected_components: one-task union-find over 3 edges",
+        "connected_components: iterative star rounds (edges not counted)",
+    ]
+
+
 def test_cc_midloop_failure_releases_checkpoints(spark, monkeypatch):
     """Review regression: a failure DURING the CC loop (fingerprint
     collect, checkpoint job) must not strand this call's live
