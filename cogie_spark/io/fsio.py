@@ -48,11 +48,6 @@ def _fs(spark: SparkSession, path_str: str):
     return jvm, fs, hpath
 
 
-def exists(spark: SparkSession, path: str) -> bool:
-    _, fs, hpath = _fs(spark, path)
-    return bool(fs.exists(hpath))
-
-
 def mkdirs(spark: SparkSession, path: str) -> None:
     _, fs, hpath = _fs(spark, path)
     fs.mkdirs(hpath)
@@ -112,15 +107,3 @@ def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
     except Exception:
         return False
 
-
-def list_names(spark: SparkSession, base: str) -> list[str]:
-    """Child entry names of ``base`` (empty if absent)."""
-    _, fs, hbase = _fs(spark, base)
-    if not fs.exists(hbase):
-        return []
-    return sorted(st.getPath().getName() for st in fs.listStatus(hbase))
-
-
-def is_dir(spark: SparkSession, path: str) -> bool:
-    _, fs, hpath = _fs(spark, path)
-    return bool(fs.exists(hpath)) and bool(fs.getFileStatus(hpath).isDirectory())

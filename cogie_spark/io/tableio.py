@@ -26,18 +26,15 @@ Also maintains the north rule's per-stage observability tables:
   partitionings. Per-file ROW COUNTS ride the parquet rowgroup fast
   path (count(1) reads no column data); content FINGERPRINTS add one
   read of the freshly-written snapshot (page-cache-hot right after the
-  write) and can be disabled per manager
-  (``partition_fingerprints=False``) when commit latency matters more
-  than content verifiability — measured +57% per commit at 2M rows x 3
-  cols on a degraded-band host (3.86 vs 2.46 s), less in a healthy band
-  where the write itself dominates.
+  write) — measured +57% per commit at 2M rows x 3 cols on a
+  degraded-band host (3.86 vs 2.46 s), less in a healthy band where the
+  write itself dominates.
 """
 
 from __future__ import annotations
 
 import functools
 import json
-import re
 import time
 from pathlib import Path
 from typing import Callable
@@ -64,9 +61,9 @@ def publish_json(spark: SparkSession, path: str, obj: dict) -> None:
     fsio.write_text_atomic(spark, path, json.dumps(obj, indent=1))
 
 
-def union_parts(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
+def union_parts(parts: list[DataFrame]) -> DataFrame:
     """The plain :class:`StateLog` fold: every part's rows, by column name."""
-    return functools.reduce(DataFrame.unionByName, (df for _, df in parts))
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 class StateLog:
@@ -74,10 +71,9 @@ class StateLog:
     one TableIO, listed by one JSON manifest.
 
     Each manifest entry is one batch: its ``batch_id`` and one directory
-    name per *kind* (``members``, ``bands``, ``kept``, ``hashes``). New
-    directories are named ``{kind}_delta_{batch:05d}``. Directory names
-    are always read from the manifest, never rebuilt, so state written
-    under older naming schemes keeps resolving.
+    name per *kind* (``members``, ``bands``, ``kept``, ``hashes``), named
+    ``{kind}_delta_{batch:05d}``. Directory names are always read from the
+    manifest, never rebuilt or listed.
 
     The manifest is the single commit point: directories are written
     first and become state only when the manifest that lists them is
@@ -85,16 +81,16 @@ class StateLog:
     manifest, and every directory it lists, intact.
 
     Kinds named in ``folds`` are folded by :meth:`compact` into one
-    ``{kind}_base_{gen:05d}`` directory. Each fold gets the kind's parts,
-    base first, as ``(batch_id, frame)`` pairs (``None`` for the base),
-    and returns the new base. Other kinds stay in the entries as a log.
+    ``{kind}_base_{gen:05d}`` directory. Each fold gets the kind's frames,
+    base first, and returns the new base. Other kinds stay in the entries
+    as a log.
     """
 
     def __init__(
         self,
         io: TableIO,
         name: str,
-        folds: dict[str, Callable[[list[tuple[int | None, DataFrame]]], DataFrame]],
+        folds: dict[str, Callable[[list[DataFrame]], DataFrame]],
     ):
         self.io = io
         self.folds = folds
@@ -110,23 +106,13 @@ class StateLog:
         return self.manifest.get("base") or {}
 
     @staticmethod
-    def batch_id(entry: dict) -> int:
-        """An entry's batch id; entries written by the linkage stream's
-        pre-manifest migration carry it only in their directory names
-        (``members_delta_NNNNN[m]``)."""
-        if "batch_id" in entry:
-            return int(entry["batch_id"])
-        m = re.search(r"\d+", min(entry.values()))
-        return int(m.group()) if m else -1
-
-    @staticmethod
     def delta_name(kind: str, batch_id: int) -> str:
         return f"{kind}_delta_{batch_id:05d}"
 
     def entry(self, batch_id: int) -> dict | None:
         """The committed entry of ``batch_id``: the idempotent-retry
         lookup (foreachBatch is at-least-once)."""
-        return next((e for e in self.entries if self.batch_id(e) == batch_id), None)
+        return next((e for e in self.entries if e["batch_id"] == batch_id), None)
 
     def paths(self, kind: str) -> list[str]:
         """The kind's base directory, if any, then every delta of it."""
@@ -167,17 +153,16 @@ class StateLog:
         holding = [e for e in self.entries if any(e.get(k) for k in self.folds)]
         if not compact_every or len(holding) < compact_every:
             return
-        # earlier corpus manifests count generations in base.gen
-        gen = int(self.manifest.get("generation", self.base.get("gen", 0))) + 1
+        gen = self.manifest.get("generation", 0) + 1
         new_base, superseded = {}, []
         for kind, fold in self.folds.items():
-            names = [(None, self.base[kind])] if self.base.get(kind) else []
-            names += [(self.batch_id(e), e[kind]) for e in holding if e.get(kind)]
+            names = [self.base[kind]] if self.base.get(kind) else []
+            names += [e[kind] for e in holding if e.get(kind)]
             if not names:
                 continue
             new_base[kind] = f"{kind}_base_{gen:05d}"
-            self.io.write(new_base[kind], fold([(b, self.io.read(n)) for b, n in names]))
-            superseded += [n for _, n in names]
+            self.io.write(new_base[kind], fold([self.io.read(n) for n in names]))
+            superseded += names
         entries = []
         for e in self.entries:
             rest = {k: v for k, v in e.items() if k not in self.folds}
@@ -190,7 +175,7 @@ class StateLog:
             "batches": entries,
             "compacted_through": max(
                 [int(self.manifest.get("compacted_through", -1))]
-                + [self.batch_id(e) for e in holding]
+                + [e["batch_id"] for e in holding]
             ),
         }
         self.publish()
@@ -234,59 +219,13 @@ class TableIO:
     def read(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.path(name))
 
-    def write_bucketed(
-        self,
-        name: str,
-        df: DataFrame,
-        buckets: int,
-        bucket_cols: tuple[str, ...],
-        sort_cols: tuple[str, ...] = (),
-        mode: str = "overwrite",
-    ) -> str:
-        """Materialize ``df`` as a SORTED, BUCKETED parquet table — the
-        north rule's "(lang, repo-prefix) composite keys materialized as
-        sorted bucketed partitions" layout. Joins and aggregations on a
-        prefix of ``bucket_cols`` between tables bucketed the same way
-        need NO exchange: Catalyst recognizes the bucket spec as the
-        required hash partitioning, so the big-side shuffle — the
-        dominant cost of re-linking a 10^12-file catalogue against a
-        daily delta — disappears (plan-asserted in tests).
-
-        Spark's bucket metadata lives in the session catalog, so the
-        table is written via ``saveAsTable`` with an explicit path under
-        this TableIO's base and must be read back with
-        :meth:`read_bucketed` (reading the bare parquet path works but
-        loses the bucket spec). On a production deployment the same
-        declaration is Iceberg's ``bucket(N, col)`` partition transform;
-        this is the sandbox-runnable equivalent, swap at the catalog.
-        """
-        table = f"cogie_{name}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        w = (
-            df.write.format("parquet")
-            .mode(mode)
-            .bucketBy(buckets, *bucket_cols)
-            .option("path", self.path(name))
-        )
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(table)
-        return table
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        """Read a :meth:`write_bucketed` table WITH its bucket spec."""
-        return self.spark.table(f"cogie_{name}")
-
 
 class CheckpointManager:
     """Committed, resumable snapshots per pipeline stage."""
 
-    def __init__(
-        self, spark: SparkSession, base: str, partition_fingerprints: bool = True
-    ):
+    def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
         self.base, self._base_str = _init_base(spark, base)
-        self.partition_fingerprints = partition_fingerprints
 
     def path(self, *names: str) -> str:
         return fsio.join(self._base_str, *names)
@@ -341,13 +280,11 @@ class CheckpointManager:
         fingerprint is ``bit_xor(xxhash64(*cols))`` — order-insensitive
         within a file, and xor-composable across files into a
         partitioning-invariant whole-table fingerprint. Map-typed
-        columns are excluded (Spark cannot hash maps); with
-        ``partition_fingerprints=False`` the fingerprint is NULL and
-        the agg degrades to the rowgroup-metadata count path."""
-        from pyspark.sql import functions as F
-
+        columns are excluded (Spark cannot hash maps); a snapshot with
+        no hashable column gets a NULL fingerprint, and the agg degrades
+        to the rowgroup-metadata count path."""
         hashable = [c for c, t in snap.dtypes if not t.startswith("map<")]
-        if self.partition_fingerprints and hashable:
+        if hashable:
             fp = F.bit_xor(F.xxhash64(*[F.col(c) for c in hashable]))
         else:
             fp = F.first(F.lit(None).cast("long"))
@@ -459,12 +396,10 @@ class CheckpointManager:
         or partially-overwritten snapshot surfaces as a named file list
         instead of a silently-wrong resume. Cost is one page-cache-class
         scan of the snapshot — the same price ``commit`` paid — so it is
-        an opt-in resume guard, not an always-on tax. With
-        ``partition_fingerprints=False`` at commit time the recorded
-        fingerprints are NULL and only row counts are compared.
+        an opt-in resume guard, not an always-on tax. A snapshot with no
+        hashable column records NULL fingerprints, so only its row counts
+        are compared.
         """
-        from pyspark.sql import functions as F
-
         manifest = self._read_manifest(stage)
         if not manifest["commits"]:
             raise ValueError(f"no commits for stage {stage!r}")

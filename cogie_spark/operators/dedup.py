@@ -503,9 +503,8 @@ def semantic_duplicates(
     :func:`embedding_near_duplicates` mode='lsh', whose hyperplane
     bands are data-OBLIVIOUS: on clustered corpora (the regime semantic
     dedup targets) centroid lists concentrate near-dup pairs into a
-    key domain of ``nlist`` values, so the candidate join keys align
-    with a ``list_id``-bucketed table layout (TableIO.write_bucketed)
-    and the index is reusable across runs via ``centroids=``.
+    key domain of ``nlist`` values, and the index is reusable across
+    runs via ``centroids=``.
 
     Recall: a pair at cosine >= threshold meets iff the two vectors
     share one of their top-``assign_probes`` lists. Well-inside-cluster

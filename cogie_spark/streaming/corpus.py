@@ -51,7 +51,7 @@ _MANIFEST = "corpus_manifest.json"
 _HASH = "sha256"
 
 
-def _fold_hashes(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
+def _fold_hashes(parts: list[DataFrame]) -> DataFrame:
     """One row per admitted hash; src_batch is the batch that first
     admitted it."""
     return union_parts(parts).groupBy(_HASH).agg(F.min("src_batch").alias("src_batch"))

@@ -59,12 +59,6 @@ commits two directories, named ``{kind}_delta_{N:05d}``:
 Per-batch cost: signature + banding O(batch); state is SCANNED
 (columnar, predicate-prunable) but never re-hashed and never shuffled
 wholesale — the feature join is bounded to candidate ids.
-
-Legacy state (deltas written before the bands/manifest format) is
-migrated ONCE on first read: sig columns are backfilled from content
-where absent, band deltas are derived from the persisted sigs, and the
-manifest is published — after which every batch takes the fast path
-(ADVICE r2 #5).
 """
 
 from __future__ import annotations
@@ -72,7 +66,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cogie_spark.io import fsio
 from cogie_spark.io.tableio import RunScope, StateLog, TableIO, union_parts
 from cogie_spark.operators.blocking import cross_band_pairs
 from cogie_spark.operators.cc import CheckpointHandle
@@ -89,58 +82,8 @@ from cogie_spark.plans.linkage import (
 _MANIFEST = "_state_manifest.json"
 
 
-def _fold_members(parts: list[tuple[int | None, DataFrame]]) -> DataFrame:
-    """Members fold: the base always carries ``src_batch``, which is what
-    makes retried already-compacted batches answerable; deltas migrated
-    from the pre-manifest format lack it, so it is backfilled from their
-    batch id."""
-    return union_parts([
-        (b, df if "src_batch" in df.columns else df.withColumn("src_batch", F.lit(b)))
-        for b, df in parts
-    ])
-
-
 def _state_log(state: TableIO) -> StateLog:
-    return StateLog(state, _MANIFEST, folds={"members": _fold_members, "bands": union_parts})
-
-
-def _migrate_legacy_state(spark: SparkSession, log: StateLog, cfg: LinkageConfig) -> None:
-    """One-time upgrade of pre-manifest state dirs: backfill missing sig
-    columns from content, derive band deltas from the persisted sigs,
-    publish the manifest. A genuine read error on existing state
-    propagates — only truly-missing state may start fresh."""
-    state = log.io
-    entries = sorted(
-        d for d in fsio.list_names(spark, str(state.base))
-        if d.startswith("members_delta_")
-        and not d.endswith("m")
-        and fsio.is_dir(spark, state.path(d))
-    )
-    replaced: list[str] = []
-    for d in entries:
-        members = state.read(d)
-        if "sig" not in members.columns:
-            # legacy delta predates persisted signatures: compute them
-            # from content once, rewrite the delta in the new format
-            # under a distinct name ('...m'); idempotent — a crash
-            # before the manifest publish just re-runs the overwrite
-            sigs = signatures(members.select("file_id", "lang", "content"), cfg)
-            members = members.join(sigs.select("file_id", "sig"), "file_id")
-            members_name = d + "m"
-            state.write(members_name, members)
-            members = state.read(members_name)
-            replaced.append(d)
-        else:
-            members_name = d
-        bands_name = "bands" + members_name.removeprefix("members")
-        state.write(bands_name, bands(members.select("file_id", "lang", "sig"), cfg))
-        # no batch_id field: StateLog reads it off the directory name
-        log.entries.append({"members": members_name, "bands": bands_name})
-    log.publish()
-    # the manifest is now the source of truth; drop superseded legacy
-    # dirs so naive directory readers can't double-count (best-effort)
-    for d in replaced:
-        fsio.delete(spark, state.path(d))
+    return StateLog(state, _MANIFEST, folds={"members": union_parts, "bands": union_parts})
 
 
 def incremental_link_batch(
@@ -172,11 +115,6 @@ def incremental_link_batch(
         raise ValueError(f"the linkage stream keys its state on file_id, not {cfg.id_col!r}")
     spark = batch.sparkSession
     log = _state_log(state)
-    if not log.paths("members") and any(
-        d.startswith("members_delta_")
-        for d in fsio.list_names(spark, str(state.base))  # Hadoop-FS, ADVICE r3 #4
-    ):
-        _migrate_legacy_state(spark, log, cfg)
 
     # idempotent commit (ADVICE r3 #1): foreachBatch is at-least-once —
     # a retry of an already-committed batch_id must NOT append its delta

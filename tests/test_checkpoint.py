@@ -94,57 +94,6 @@ def test_partition_lineage_table(spark):
         ),
     )
     assert fp2 != fp0
-    # fingerprints off -> NULL fingerprint, rows still tracked
-    ck2 = CheckpointManager(
-        spark, tempfile.mkdtemp(prefix="ck_plo_"), partition_fingerprints=False
-    )
-    ck2.commit("s", df, iteration=0)
-    rows2 = ck2.partition_lineage_df().collect()
-    assert sum(r["rows"] for r in rows2) == 100
-    assert all(r["fingerprint"] is None for r in rows2)
-
-
-def test_bucketed_write_join_without_exchange(spark, tmp_path):
-    """write_bucketed materializes the (lang, repo) composite-key layout
-    the north rule names: two tables bucketed+sorted the same way join
-    WITHOUT any Exchange (no shuffle of either side), while the plain
-    parquet form of the same data shuffles both sides."""
-    from cogie_spark.fixtures.codefiles import code_files
-    from cogie_spark.io.tableio import TableIO
-
-    files = code_files(spark, n_groups=30, seed=11).select(
-        "file_id", "lang", "repo", "content"
-    )
-    delta = files.limit(40).withColumnRenamed("content", "new_content")
-
-    io = TableIO(spark, str(tmp_path))
-    io.write_bucketed("catalog", files, 8, ("lang", "repo"), ("lang", "repo", "file_id"))
-    io.write_bucketed("delta", delta, 8, ("lang", "repo"))
-
-    # force the shuffle-join topology a 10^12-row catalog implies (at
-    # test scale the planner would broadcast the delta and skip the
-    # bucketed scan entirely: "Bucketed: false (disabled by query
-    # planner)")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = io.read_bucketed("catalog").join(
-            io.read_bucketed("delta"), ["lang", "repo"]
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        assert "Bucketed: true" in plan, plan[:2000]
-        assert joined.count() > 0
-
-        # the un-bucketed form of the same join shuffles both sides
-        plain = files.join(delta, ["lang", "repo"])
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-    # round-trip values survive the bucketed layout
-    assert io.read_bucketed("catalog").count() == files.count()
 
 
 def test_verify_commit_detects_corruption(spark):

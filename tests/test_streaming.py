@@ -118,43 +118,6 @@ def test_state_bands_persisted_not_recomputed(spark):
     files.unpersist()
 
 
-def test_legacy_state_migration(spark):
-    """ADVICE r2 #5: deltas written by the pre-manifest format (no sig
-    column, no band deltas) are backfilled once on first read instead of
-    erroring; subsequent batches link against the migrated state."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    files = code_files(spark, n_groups=6, seed=42, with_truth=True).cache()
-    b1 = files.filter("member_idx = 0").drop("group_id", "member_idx")
-    b2 = files.filter("member_idx > 0").drop("group_id", "member_idx")
-
-    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_legacy_"))
-    # hand-write a LEGACY delta: members without sig, no manifest
-    legacy = b1.select("file_id", F.col("file_id").alias("cluster_id"), "lang", "content")
-    state.write("members_delta_00000", legacy)
-
-    a2 = incremental_link_batch(b2, state, batch_id=1)
-    assert a2.count() == b2.count()
-    manifest = json.loads((state.base / "_state_manifest.json").read_text())
-    names = [b["members"] for b in manifest["batches"]]
-    assert names[0].endswith("m"), names  # migrated under a new name
-    migrated = spark.read.parquet(str(state.base / names[0]))
-    assert "sig" in migrated.columns and migrated.count() == b1.count()
-    # batch-2 duplicates joined the legacy rows' clusters
-    truth = {r["file_id"]: r["group_id"] for r in files.select("file_id", "group_id").collect()}
-    legacy_cluster_by_group = {
-        truth[r["file_id"]]: r["cluster_id"] for r in legacy.collect()
-    }
-    got = {r["file_id"]: r["cluster_id"] for r in a2.collect()}
-    joined = sum(
-        1 for fid, cid in got.items() if cid == legacy_cluster_by_group.get(truth[fid])
-    )
-    assert joined >= int(0.9 * b2.count()), (joined, b2.count())
-    files.unpersist()
-
-
 def test_stream_wiring_availablenow(spark):
     """Real readStream -> foreachBatch -> state path over a file source."""
     import tempfile
@@ -181,22 +144,51 @@ def test_stream_wiring_availablenow(spark):
 
 
 def test_corrupt_state_raises_not_relinks(spark):
-    """ADVICE r1: a genuine read error on existing state must propagate
-    — only the missing-state case may start fresh."""
-    import os
-    import tempfile
+    """State is what the published manifest lists. ADVICE r1: a read
+    error on listed state must propagate and leave the manifest as it
+    was. A valid members delta that no manifest lists (a crash before
+    the stream's first publish) is not state: the batch links as if
+    fresh, and its commit replaces the stray directory."""
+    import json
 
-    import pytest
+    from cogie_spark.plans.linkage import LinkageConfig, signatures
 
+    files = code_files(spark, n_groups=4, seed=42, with_truth=True)
+    stray_rows = files.filter("member_idx = 0").drop("group_id", "member_idx")
+    batch = files.filter("member_idx > 0").drop("group_id", "member_idx").cache()
+
+    # listed and corrupt: the read error propagates
     state_dir = tempfile.mkdtemp(prefix="cogie_corrupt_")
-    delta = os.path.join(state_dir, "members_delta_00000")
-    os.makedirs(delta)
-    with open(os.path.join(delta, "part-00000.parquet"), "w") as f:
-        f.write("this is not parquet")
+    entry = {"batch_id": 0, "members": "members_delta_00000", "bands": "bands_delta_00000"}
+    for kind in ("members", "bands"):
+        os.makedirs(os.path.join(state_dir, entry[kind]))
+        with open(os.path.join(state_dir, entry[kind], "part-00000.parquet"), "w") as f:
+            f.write("this is not parquet")
+    manifest = {"batches": [entry]}
+    with open(os.path.join(state_dir, "_state_manifest.json"), "w") as f:
+        json.dump(manifest, f)
     state = TableIO(spark, state_dir)
-    batch = code_files(spark, n_groups=3, seed=42)
     with pytest.raises(Exception):
         incremental_link_batch(batch, state, batch_id=1).count()
+    assert read_json(spark, state.path("_state_manifest.json")) == manifest
+
+    # valid and unlisted: ignored
+    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_stray_"))
+    state.write(
+        "members_delta_00000",
+        stray_rows.select("file_id", F.col("file_id").alias("cluster_id"), "lang", "content")
+        .join(signatures(stray_rows, LinkageConfig()).select("file_id", "sig"), "file_id")
+        .withColumn("src_batch", F.lit(0)),
+    )
+    got = {tuple(r) for r in incremental_link_batch(batch, state, batch_id=0).collect()}
+    fresh = TableIO(spark, tempfile.mkdtemp(prefix="cogie_fresh_"))
+    want = {tuple(r) for r in incremental_link_batch(batch, fresh, batch_id=0).collect()}
+    assert got == want and len(got) == batch.count()
+    assert read_json(spark, state.path("_state_manifest.json")) == read_json(
+        spark, fresh.path("_state_manifest.json")
+    )
+    assert state.read("members_delta_00000").count() == batch.count()
+    batch.unpersist()
 
 
 def _slices(spark, n_groups, n_batches, seed=42):
@@ -504,60 +496,6 @@ def test_corpus_stream_compaction_preserves_dedup(spark):
     b0 = _docs(spark, [(100, _GOOD + " variant number 0 of the corpus")])
     k0r = incremental_clean_batch(b0, state, cfg, batch_id=0)
     assert [r["doc_id"] for r in k0r.collect()] == [100]
-
-
-def test_corpus_stream_reads_earlier_layout_state(spark):
-    """State written under the corpus stream's earlier layout — kept_N /
-    hashes_N deltas and a hash_base_0 base carrying ``gen`` — keeps
-    resolving: retries, cross-batch dedup and the next compaction."""
-    import json
-
-    from cogie_spark.plans.corpus import CorpusConfig, kept_from_docs
-    from cogie_spark.streaming.corpus import _MANIFEST, incremental_clean_batch
-
-    state = TableIO(spark, tempfile.mkdtemp(prefix="cogie_corpus_old_"))
-    cfg = CorpusConfig(redact=False)
-    texts = [_GOOD + f" variant number {b} of the corpus" for b in range(3)]
-    for b, text in enumerate(texts):
-        kept = kept_from_docs(_docs(spark, [(100 + b, text)]), cfg, hash_col="sha256")
-        state.write(f"kept_{b}", kept.withColumn("src_batch", F.lit(b)))
-    # batches 0 and 1 already folded into the base, batch 2 still a delta
-    state.write("hashes_2", state.read("kept_2").select("sha256", "src_batch"))
-    state.write(
-        "hash_base_0",
-        spark.read.parquet(state.path("kept_0"), state.path("kept_1"))
-        .select("sha256", "src_batch"),
-    )
-    (state.base / _MANIFEST).write_text(json.dumps({
-        "batches": [
-            {"batch_id": 0, "kept": "kept_0"},
-            {"batch_id": 1, "kept": "kept_1"},
-            {"batch_id": 2, "kept": "kept_2", "hashes": "hashes_2"},
-        ],
-        "base": {"hashes": "hash_base_0", "gen": 0},
-        "compacted_through": 1,
-    }))
-
-    # a retry of a listed batch returns its committed kept rows
-    k0r = incremental_clean_batch(_docs(spark, [(100, texts[0])]), state, cfg, batch_id=0)
-    assert [r["doc_id"] for r in k0r.collect()] == [100]
-
-    # a duplicate of a doc whose hash lives only in hash_base_0 is
-    # dropped; this batch's delta makes two, so it compacts
-    b3 = _docs(spark, [(200, texts[0]), (201, _GOOD + " genuinely new content")])
-    k3 = incremental_clean_batch(b3, state, cfg, batch_id=3, compact_every=2)
-    assert [r["doc_id"] for r in k3.collect()] == [201]
-
-    m = read_json(spark, state.path(_MANIFEST))
-    assert m["generation"] == 1 and m["compacted_through"] == 3
-    assert [e["batch_id"] for e in m["batches"]] == [0, 1, 2, 3]
-    assert not any("hashes" in e for e in m["batches"])
-    live = set(m["base"].values()) | {e["kept"] for e in m["batches"]}
-    on_disk = {d.name for d in state.base.iterdir() if d.is_dir()}
-    assert on_disk == live, f"orphaned dirs: {on_disk - live}"
-    # the new base still admits each hash once, from its first batch
-    base = {r["sha256"]: r["src_batch"] for r in state.read(m["base"]["hashes"]).collect()}
-    assert sorted(base.values()) == [0, 1, 2, 3]
 
 
 def test_corpus_stream_wiring_availablenow(spark):
